@@ -10,7 +10,10 @@ successful/quarantined row counts
 
 from __future__ import annotations
 
+import datetime as dt
 import json
+import logging
+import threading
 import urllib.error
 import urllib.request
 
@@ -20,6 +23,7 @@ from use_case_real_time_anomaly_detection_spark.plans import detectors as D
 from use_case_real_time_anomaly_detection_spark.serving import (
     AnalyticsAPIServer,
     EventStore,
+    MaterializedCopyLog,
     ParamSpec,
     PipeError,
     TokenAuth,
@@ -268,3 +272,178 @@ def test_materialized_copy_log_cycle(spark, tmp_path):
         assert body3["rows"] == n1 + n2
     finally:
         srv.shutdown()
+
+
+# ---------------------------------------------------------------------------
+# Per-append snapshot of the event store
+# ---------------------------------------------------------------------------
+
+
+def _spike(ts: str, sensor: int = 1, value: str = "5000") -> str:
+    return json.dumps({"id": sensor, "timestamp": ts, "value": value})
+
+
+def _rows(df) -> list:
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def test_snapshot_reads_run_no_jobs(spark, tmp_path):
+    """events()/frontier() on an unchanged store, and again after an
+    append, launch no Spark job: no re-listing inference, no max(ts)."""
+    store = EventStore(spark, str(tmp_path / "ev"))
+    store.append_ndjson(NDJSON)
+    store.events(), store.frontier()
+
+    sc = spark.sparkContext
+    sc.setJobGroup("snapshot-unchanged", "probe")
+    store.events(), store.frontier()
+    sc.setJobGroup("snapshot-append", "probe")
+    store.append_ndjson(_spike("2024-01-01T00:09:00"))
+    sc.setJobGroup("snapshot-after-append", "probe")
+    store.events(), store.frontier()
+    sc.setJobGroup("snapshot-done", "probe")
+
+    tracker = sc.statusTracker()
+    assert tracker.getJobIdsForGroup("snapshot-unchanged") == []
+    assert tracker.getJobIdsForGroup("snapshot-after-append") == []
+
+
+def test_snapshot_pipes_match_a_fresh_store(spark, tmp_path):
+    """Every pipe over the advanced snapshot returns the rows the same
+    pipe returns over a cold read of the same path."""
+    path = str(tmp_path / "ev")
+    store = EventStore(spark, path)
+    store.append_ndjson(NDJSON)
+    store.append_ndjson(_spike("2024-01-01T00:06:00", sensor=2, value="-40"))
+    fresh = EventStore(spark, path)
+    assert store.frontier() == fresh.frontier()
+    for name, pipe in default_pipes().items():
+        params = pipe.bind({"min_value": ["0"], "max_value": ["200"],
+                            "seconds": ["60"], "hours": ["48"]})
+        assert _rows(pipe.builder(store, params)) == _rows(
+            pipe.builder(fresh, params)
+        ), name
+
+
+def test_append_advances_the_served_snapshot(spark, tmp_path):
+    path = str(tmp_path / "ev")
+    store = EventStore(spark, path)
+    store.append_ndjson(NDJSON)
+    srv = AnalyticsAPIServer(store).start()
+    try:
+        url = (f"http://127.0.0.1:{srv.port}/v0/pipes/out_of_range.json"
+               "?max_value=1000&detect_window_seconds=600")
+        assert _get(url)[1]["rows"] == 0
+        store.append_ndjson(_spike("2024-01-01T00:10:00", sensor=4))
+        code, body = _get(url)
+        assert code == 200 and body["rows"] == 1
+        assert body["data"][0]["id"] == 4 and body["data"][0]["value"] == 5000.0
+    finally:
+        srv.shutdown()
+    cold = EventStore(spark, path).events().agg({"ts": "max"}).first()[0]
+    assert store.frontier() == cold == EventStore(spark, path).frontier()
+    assert str(cold) == "2024-01-01 00:10:00"
+
+
+def test_concurrent_appends_and_gets_lose_nothing(spark, tmp_path):
+    store = EventStore(spark, str(tmp_path / "ev"))
+    store.append_ndjson(NDJSON)
+    srv = AnalyticsAPIServer(store).start()
+    base = f"http://127.0.0.1:{srv.port}"
+    codes = []
+
+    def appender():
+        for k in range(4):
+            body = "\n".join(
+                _spike(f"2024-01-01T01:{k:02d}:{i:02d}", sensor=10 + i, value="7")
+                for i in range(5)
+            )
+            codes.append(_post(f"{base}/v0/events?name=incoming_data", body)[0])
+
+    def reader():
+        for pipe in ("most_recent", "timeout", "get_data", "rate_of_change"):
+            codes.append(_get_err(f"{base}/v0/pipes/{pipe}.json")[0])
+
+    threads = [threading.Thread(target=f) for f in (appender, reader, reader)]
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        srv.shutdown()
+    assert not any(t.is_alive() for t in threads)
+    assert len(codes) == 12 and set(codes) == {200}
+    ev = store.events()
+    assert ev.count() == N_GOOD + 20
+    assert ev.select("event_id").distinct().count() == N_GOOD + 20
+    assert store.frontier() == EventStore(spark, store.path).frontier()
+
+
+def test_corrupt_store_raises_on_append_and_issues_no_id(spark, tmp_path):
+    """Only a missing store reads as empty: a read error must not
+    restart event_id at 0 over ids already persisted."""
+    path = tmp_path / "ev"
+    path.mkdir()
+    (path / "part-0.parquet").write_bytes(b"not a parquet file" * 8)
+    store = EventStore(spark, str(path))
+    with pytest.raises(Exception):
+        store.append_ndjson(_spike("2024-01-01T00:00:00"))
+    assert store._seq is None
+    assert sorted(p.name for p in path.iterdir()) == ["part-0.parquet"]
+    with pytest.raises(Exception):
+        store.events()
+
+
+def test_copy_log_ticks_twice_on_a_bigint_sensor_store(spark, tmp_path):
+    """The driver's events.parquet shape keys sensors as user_id bigint;
+    the log must still be written as id int, or the second tick's read
+    of the log fails (PARQUET_COLUMN_DATA_TYPE_MISMATCH)."""
+    schema = "user_id bigint, ts timestamp, value double, event_id long"
+    path = str(tmp_path / "ev")
+
+    def write(rows):
+        spark.createDataFrame(rows, schema).write.mode("append").parquet(path)
+
+    t0 = dt.datetime(2024, 1, 1)
+    write([(1, t0 + dt.timedelta(minutes=i), 100.0, i) for i in range(5)]
+          + [(2, t0, 900.0, 5)])
+    log_path = str(tmp_path / "copylog")
+    n1 = MaterializedCopyLog(EventStore(spark, path), log_path).tick()
+    assert n1 > 0
+    write([(3, t0 + dt.timedelta(minutes=9), 5000.0, 6)])
+    # a new store: the rows above came from another writer
+    n2 = MaterializedCopyLog(EventStore(spark, path), log_path).tick()
+    assert n2 > 0
+    log = MaterializedCopyLog(EventStore(spark, path), log_path).log()
+    assert log.count() == n1 + n2
+    assert log.filter("id = 3 AND anomaly_type = 'out-of-range'").count() == 1
+
+
+def test_copy_log_cron_logs_and_records_failures(spark, tmp_path, caplog):
+    mat = MaterializedCopyLog(EventStore(spark, str(tmp_path / "ev")),
+                              str(tmp_path / "copylog"))
+    calls = []
+    done = threading.Event()
+
+    def tick():
+        calls.append(1)
+        if len(calls) <= 2:
+            raise RuntimeError(f"boom {len(calls)}")
+        done.set()
+        return 7
+
+    mat.tick = tick
+    with caplog.at_level(logging.ERROR):
+        mat.start(0.01)
+        try:
+            assert done.wait(10)
+        finally:
+            mat.stop()
+    assert not mat._thread.is_alive()
+    assert len(calls) >= 3  # the loop survived both failures
+    assert isinstance(mat.last_error, RuntimeError)
+    assert str(mat.last_error) == "boom 2"
+    assert mat.last_tick_rows == 7
+    failures = [r for r in caplog.records if "copy-log tick" in r.getMessage()]
+    assert len(failures) == 2 and all(r.exc_info for r in failures)

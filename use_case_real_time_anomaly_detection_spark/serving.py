@@ -19,6 +19,10 @@ that layer for the Spark engine:
   append via the same declared-schema NDJSON parse the batch path uses
   (sources/ingest.parse_events), malformed rows quarantined — the
   Events API's ``successful_rows`` / ``quarantined_rows`` contract.
+  Requests read one immutable ``(events, frontier)`` snapshot per data
+  version, which each append advances, so a GET launches no schema or
+  frontier job before its own query. The store must be the only writer
+  of its path (see the class docstring).
 - ``AnalyticsAPIServer`` — stdlib ThreadingHTTPServer; GET pipes return
   the reference's response envelope (plans/envelope.response_envelope ≙
   tutorials/z-score.md:195-225), POST /v0/events appends.
@@ -27,25 +31,32 @@ Scale note: this is a *presentation* layer. Every pipe body is the same
 lazy DataFrame plan the batch engine runs — Catalyst/pushdown behavior
 is identical — and the collect happens only on endpoint-sized results
 (the reference's endpoints are filtered/aggregated sets, not scans).
-The server itself is driver-side by design, exactly like the
-reference's API gateway in front of ClickHouse.
+The snapshot is a lazy plan too, not a cache: it fixes which files a
+request reads, not their rows in memory. The server itself is
+driver-side by design, exactly like the reference's API gateway in
+front of ClickHouse.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import threading
 from dataclasses import dataclass, field
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any, Callable
 from urllib.parse import parse_qs, urlparse
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .plans import copylog as C
 from .plans import detectors as D
 from .plans.envelope import response_envelope
+
+_log = logging.getLogger(__name__)
 
 
 class PipeError(ValueError):
@@ -128,7 +139,8 @@ class Pipe:
 
 
 class EventStore:
-    """Parquet-backed `incoming_data` with NDJSON append.
+    """Parquet-backed `incoming_data` with NDJSON append, served from a
+    per-append snapshot.
 
     ``append_ndjson`` applies the SAME declared-schema parse the batch
     ingest uses (sources/ingest.parse_events ≙ the JSONPath mapping,
@@ -136,29 +148,81 @@ class EventStore:
     are counted ``quarantined`` and not stored — the Events API's
     at-the-edge schema enforcement. ``event_id`` is assigned at append
     time (stable once written) as the deterministic ordering tiebreaker
-    the detector windows need."""
+    the detector windows need.
+
+    Snapshot: reads go to one immutable ``(events, frontier)`` pair per
+    data version. The first use reads the store cold (one schema
+    inference, then one aggregate for the frontier and the event_id
+    resume point); each append swaps in the next version without either
+    job — the appended rows' max(ts) rides the aggregate that counts
+    them, and the re-read passes the known file schema. The events frame
+    is lazy and not persisted; its file listing is fixed when the
+    snapshot is taken, so a request reads the version it started on.
+
+    Single-writer contract: this instance is the only writer of ``path``.
+    Files another process writes there after the first read stay
+    invisible until a new ``EventStore`` opens the path, and the ids this
+    instance issues (``_seq``, cached per process) may collide with
+    theirs; ``_lock`` serializes only this instance's appends."""
+
+    _EMPTY_SCHEMA = "id int, ts timestamp, value float, event_id long"
+    # read errors that mean "no data yet": no path, or no data file in it
+    _NO_DATA = ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
         self._lock = threading.Lock()
         self._seq: int | None = None  # resumed from the store on first use
+        self._snap: tuple[DataFrame, Any] | None = None  # (events, frontier)
+        self._file_schema: StructType | None = None
+
+    @staticmethod
+    def _shape(df: DataFrame) -> DataFrame:
+        """The detector shape (id, ts, value, event_id); reads the
+        driver's events.parquet shape too (user_id → id,
+        plans/detectors.events_shape)."""
+        if "user_id" in df.columns:
+            return D.events_shape(df)
+        return df.select("id", "ts", "value", "event_id")
+
+    def _load(self) -> None:
+        """Cold read of the store; the caller holds ``_lock``. Only a
+        store with no data yet reads as empty: any other read error
+        (a corrupt file, a failing disk) raises, so event_ids never
+        silently restart at 0 over ids already persisted."""
+        try:
+            raw = self.spark.read.parquet(self.path)
+        except AnalysisException as exc:
+            if exc.getCondition() not in self._NO_DATA:
+                raise
+            self._seq = 0
+            self._snap = (self.spark.createDataFrame([], self._EMPTY_SCHEMA), None)
+            return
+        ev = self._shape(raw)
+        frontier, last_id = ev.agg(F.max("ts"), F.max("event_id")).first()
+        self._file_schema = raw.schema
+        self._seq = int(last_id) + 1 if last_id is not None else 0
+        self._snap = (ev, frontier)
+
+    def snapshot(self) -> tuple[DataFrame, Any]:
+        """The current ``(events, frontier)`` pair, read cold on first
+        use; an empty store has frontier ``None``."""
+        snap = self._snap
+        if snap is None:
+            with self._lock:
+                if self._snap is None:
+                    self._load()
+                snap = self._snap
+        return snap
 
     def _next_seq_base(self, n: int) -> int:
-        """Reserve n event_ids. Resumes from max(event_id)+1 already in
-        the store, so ids stay unique across server restarts (they are
-        the deterministic ordering tiebreaker — a restart must not
-        reissue ids already persisted)."""
-        if self._seq is None:
-            try:
-                row = (
-                    self.spark.read.parquet(self.path)
-                    .agg(F.max("event_id"))
-                    .collect()[0]
-                )
-                self._seq = int(row[0]) + 1 if row[0] is not None else 0
-            except Exception:  # no data yet
-                self._seq = 0
+        """Reserve n event_ids; the caller holds ``_lock``. Resumes from
+        max(event_id)+1 already in the store, so ids stay unique across
+        server restarts (they are the deterministic ordering tiebreaker —
+        a restart must not reissue ids already persisted)."""
+        if self._snap is None:
+            self._load()
         base = self._seq
         self._seq += n
         return base
@@ -167,12 +231,13 @@ class EventStore:
         lines = [ln for ln in body.splitlines() if ln.strip()]
         if not lines:
             return (0, 0)
-        # ONE lock over id reservation AND the parquet append: concurrent
-        # Spark append jobs to one path race on the shared _temporary
-        # staging dir (the first commit deletes the second job's files),
-        # so ingest appends are serialized — correctness over throughput
-        # at this driver-side layer; a production sink would be a
-        # streaming source or an ACID table commit instead
+        # ONE lock over id reservation, the parquet append and the
+        # snapshot swap: concurrent Spark append jobs to one path race on
+        # the shared _temporary staging dir (the first commit deletes the
+        # second job's files), so ingest appends are serialized —
+        # correctness over throughput at this driver-side layer; a
+        # production sink would be a streaming source or an ACID table
+        # commit instead
         with self._lock:
             base = self._next_seq_base(len(lines))
             raw = self.spark.createDataFrame(
@@ -193,31 +258,35 @@ class EventStore:
                 F.col("e.value").try_cast("float").alias("value"),
             )
             ok = parsed.filter(F.col("id").isNotNull() & F.col("ts").isNotNull())
-            n_ok = ok.count()
+            events, frontier = self._snap
+            # max(ts) in the store's own ts type, so the folded frontier
+            # equals what a cold read of the store would compute
+            n_ok, appended = ok.agg(
+                F.count(F.lit(1)),
+                F.max(F.col("ts").cast(events.schema["ts"].dataType)),
+            ).first()
             quarantined = len(lines) - n_ok
             if n_ok:
                 ok.write.mode("append").parquet(self.path)
+                if self._file_schema is None:
+                    self._file_schema = ok.schema
+                df = self.spark.read.schema(self._file_schema).parquet(self.path)
+                self._snap = (
+                    self._shape(df),
+                    appended if frontier is None else max(frontier, appended),
+                )
         return (n_ok, quarantined)
-
-    _EMPTY_SCHEMA = "id int, ts timestamp, value float, event_id long"
 
     def events(self) -> DataFrame:
         """Current fact table in the detector shape (id, ts, value,
-        event_id). Reads the driver's events.parquet shape too
-        (user_id → id, plans/detectors.events_shape). A store with no
-        data yet serves the empty relation (endpoints return zero rows,
-        not a 500)."""
-        try:
-            df = self.spark.read.parquet(self.path)
-        except Exception:
-            return self.spark.createDataFrame([], self._EMPTY_SCHEMA)
-        if "user_id" in df.columns:
-            return D.events_shape(df)
-        return df.select("id", "ts", "value", "event_id")
+        event_id). A store with no data yet serves the empty relation
+        (endpoints return zero rows, not a 500)."""
+        return self.snapshot()[0]
 
     def frontier(self):
-        """Frozen NOW() (SURVEY.md §4.3)."""
-        return D.frontier_ts(self.events())
+        """Frozen NOW() (SURVEY.md §4.3): max(ts) of the current
+        snapshot, ``None`` for an empty store."""
+        return self.snapshot()[1]
 
 
 class MaterializedCopyLog:
@@ -228,13 +297,15 @@ class MaterializedCopyLog:
     (copy pipes on a minute cron feeding copy_log,
     content/copies-pipes.md:13-46; `tick()` ≙ one cron firing).
 
-    Each tick runs the fused all-detector log over the current store and
-    appends only rows whose (ts, id, anomaly_type) key is not yet
-    materialized — the at-least-once-append + dedup contract of
+    Each tick runs the fused all-detector log over the store's current
+    snapshot and appends only rows whose (ts, id, anomaly_type) key is
+    not yet materialized — the at-least-once-append + dedup contract of
     copy_log_duplicates → dedup_log → copy_log
     (tinybird/pipes/dedup_log.pipe:4-6), collapsed into one idempotent
     anti-join append. ``start(interval_s)`` runs ticks on a daemon
-    thread (the cron); ``stop()`` halts it."""
+    thread (the cron); ``stop()`` halts it. A failing tick is logged and
+    kept in ``last_error`` (the most recent failure); ``last_tick_rows``
+    holds the row count of the most recent successful cron tick."""
 
     _LOG_SCHEMA = "id int, ts timestamp, value float, anomaly_type string, note string"
 
@@ -245,6 +316,8 @@ class MaterializedCopyLog:
         self._lock = threading.Lock()
         self._stop = threading.Event()
         self._thread: threading.Thread | None = None
+        self.last_error: Exception | None = None
+        self.last_tick_rows: int | None = None
 
     def log(self) -> DataFrame:
         try:
@@ -256,16 +329,24 @@ class MaterializedCopyLog:
 
     def tick(self) -> int:
         """One copy cycle; returns the number of NEW rows appended."""
-        ev = self.store.events()
-        if ev.isEmpty():
+        ev, frontier = self.store.snapshot()
+        if frontier is None:  # empty store
             return 0
-        frontier = D.frontier_ts(ev)
         fresh = C.violations_log(ev, frontier, **self.params)
         with self._lock:
             existing = self.log().select("ts", "id", "anomaly_type")
+            # cast to the log's declared schema: a driver-shaped store
+            # (user_id bigint) must not write id as INT64, which the next
+            # read under _LOG_SCHEMA rejects
             new = fresh.join(
                 existing, ["ts", "id", "anomaly_type"], "left_anti"
-            ).select("id", "ts", "value", "anomaly_type", "note")
+            ).select(*(
+                F.col(name).cast(typ)
+                for name, typ in (f.split() for f in self._LOG_SCHEMA.split(","))
+            ))
+            # evaluate the fused log once: the count and the append both
+            # read the checkpointed rows
+            new = new.localCheckpoint(eager=False)
             n = new.count()
             if n:
                 new.write.mode("append").parquet(self.path)
@@ -275,9 +356,10 @@ class MaterializedCopyLog:
         def loop():
             while not self._stop.wait(interval_s):
                 try:
-                    self.tick()
-                except Exception:  # pragma: no cover — keep the cron alive
-                    pass
+                    self.last_tick_rows = self.tick()
+                except Exception as exc:  # keep the cron alive, not silent
+                    self.last_error = exc
+                    _log.exception("copy-log tick into %s failed", self.path)
 
         self._thread = threading.Thread(target=loop, daemon=True)
         self._thread.start()
