@@ -760,9 +760,10 @@ def _q_clips_profile(spark, sf):
 
 
 def _q_image_features(spark, sf):
-    """Multimodal plumbing: binary payload + codec column → mapInPandas
-    feature extraction with the deterministic fake codec (real codecs are
-    stubbed — functions/multimodal.py). Payloads derive from documents."""
+    """Multimodal plumbing: binary payload + codec column → one zero-copy
+    map_payloads feature extraction pass with the deterministic fake
+    codec (real codecs are stubbed — functions/multimodal.py). Payloads
+    derive from documents."""
     from use_case_real_time_anomaly_detection_spark.functions.multimodal import image_features
 
     docs = _docs(spark, sf).select(
@@ -1616,7 +1617,7 @@ def _q_video_decode_check(spark, sf):
 
 def _q_image_dup(spark, sf):
     """Perceptual image near-dup (functions/multimodal.image_dhash +
-    image_dup_pairs): decode → 63-bit dHash in one mapInPandas pass,
+    image_dup_pairs): decode → 63-bit dHash in one map_payloads pass,
     then banded blocking (9 seven-bit bands; pigeonhole guarantees
     perfect recall at hamming ≤ 8) and a row-local JVM
     bit_count(XOR) verify — the image member of the dedup family

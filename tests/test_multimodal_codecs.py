@@ -247,7 +247,10 @@ def pd_eq(a, b):
 
 
 def test_video_frames_compose_with_image_decoder(spark):
-    """The sampled frame column IS an image column: bmp_decode reads it."""
+    """The sampled frame column IS an image column: bmp_decode reads it.
+    A NULL payload yields one demux_error row, not a crashed job."""
+    from pyspark.sql import functions as F
+
     from use_case_real_time_anomaly_detection_spark.functions.multimodal import (
         bmp_decode,
         video_frames,
@@ -260,11 +263,15 @@ def test_video_frames_compose_with_image_decoder(spark):
 
     spec = SynthSpec(partitions=1, clips_per_partition=9)
     df = spark.createDataFrame(videos_pandas(spec))
-    rows = (
-        video_frames(df, every_n=3)
-        .filter("demux_error IS NULL")
-        .collect()
+    null_row = df.limit(1).withColumns(
+        {"item_id": F.lit("null-payload"), "payload": F.lit(None).cast("binary")}
     )
+    out = video_frames(df.unionByName(null_row), every_n=3)
+    nulls = out.filter("item_id = 'null-payload'").collect()
+    assert [(r.frame_idx, r.frame, r.demux_error) for r in nulls] == [
+        (None, None, "null payload")
+    ]
+    rows = out.filter("demux_error IS NULL").collect()
     assert rows
     for r in rows:
         img = bmp_decode(bytes(r.frame))

@@ -6,7 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from use_case_real_time_anomaly_detection_spark.functions.multimodal import (
-    frame_sample,
     image_features,
 )
 from use_case_real_time_anomaly_detection_spark.functions.stats import profile_table
@@ -67,15 +66,6 @@ def test_image_features_stub_plumbing(spark):
     assert got["i1"]["mean_luma"] == pytest.approx(31.5)
     assert "requires an image codec" in got["i3"]["decode_error"]
     assert "no decoder" in got["i4"]["decode_error"]
-
-
-def test_frame_sample_fanout(spark):
-    df = spark.createDataFrame(
-        [("v1", b"\x01" * 2560)], "item_id string, payload binary"
-    )  # 10 frames of 256B
-    frames = frame_sample(df, every_n=3).collect()
-    assert [r["frame_idx"] for r in sorted(frames, key=lambda r: r["frame_idx"])] == [0, 3, 6, 9]
-    assert all(len(r["frame"]) == 256 for r in frames)
 
 
 # ---------------------------------------------------------------------------

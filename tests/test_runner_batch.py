@@ -465,6 +465,8 @@ def test_runner_ref_table_binds_calibration_revisions(spark, tmp_path, capsys):
         "--ref-table", f"calibration_revisions={tmp_path / 'cal'}",
     ])
     assert rc == 0 and out["violations"] > 0
+    # no range rule in this ruleset: the clip count still covers every row
+    assert out["clips_validated"] == spark.read.parquet(str(tmp_path / "clips")).count()
     viol = spark.read.parquet(str(tmp_path / "c1" / "violations"))
     rows = viol.filter(F.col("detector") == "calibrated-range-dur_ms")
     assert rows.count() == out["violations"]

@@ -3,10 +3,11 @@
 Everything here is vectorized: codecs and SNR run in numpy over whole
 Arrow batches; there is no per-row Python in the sample hot path
 (BASELINE.json input_hint requirement). The production path is
-`with_audio_checks` (mapInArrow, zero-copy payload buffers — see its
-docstring for why pandas UDFs hit a pipeline ceiling on binary columns);
-`make_audio_check_udf` is the equivalent pandas-UDF formulation, kept as
-the cross-checked reference implementation (tests assert both agree).
+`with_audio_checks` (one zero-copy `functions/payload.map_payloads` pass —
+see that module for why pandas UDFs hit a pipeline ceiling on binary
+columns); `make_audio_check_udf` is the equivalent pandas-UDF
+formulation, kept as the cross-checked reference implementation (tests
+assert both agree).
 
 The reference repo has zero UDFs (SURVEY.md §2.10); this module is the
 graft's payload surface: decode `bytes` by `codec`, reconstruct the
@@ -29,7 +30,6 @@ import zlib
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     BooleanType,
@@ -301,73 +301,32 @@ def with_audio_checks(
     __audio_ok = decoded / __audio_snr_db NULL, which nothing consumes
     in that configuration.
 
-    Implementation: `mapInArrow`, not a pandas UDF. The Arrow→pandas
-    conversion of a binary column materializes every payload as a Python
-    bytes object — measured as a hard ~1.2 GB/s pipeline ceiling that
-    FLATTENS core-count scaling (8→32 cores gained nothing). Arrow record
-    batches instead give zero-copy buffer slices per payload
-    (BinaryScalar.as_buffer → memoryview → np.frombuffer), and the
-    non-payload columns pass through as unmodified Arrow arrays. Per-clip
-    work stays numpy-vectorized; only the ~per-clip loop header is Python.
+    One zero-copy `map_payloads` pass (functions/payload.py explains why
+    mapInArrow and not a pandas UDF).
     """
-    import pyarrow as pa
+    from .payload import map_payloads
 
-    bytes_col = rule.bytes_column
-    key, codec_c, sr_c, dur_c = key_col, rule.codec_column, rule.sr_column, rule.dur_column
-    min_snr, ref_seed = float(rule.min_snr_db), int(rule.ref_seed)
-
-    passthrough = [f for f in df.schema.fields if f.name != bytes_col]
-    extra = [
+    kw = dict(min_snr_db=float(rule.min_snr_db), ref_seed=int(rule.ref_seed))
+    fields = [
         StructField("__audio_ok", BooleanType()),
         StructField("__audio_snr_db", DoubleType()),
         StructField("__audio_err", StringType()),
     ]
     if qc:
-        extra += [
-            StructField("__audio_silence_ratio", DoubleType()),
-            StructField("__audio_clip_ratio", DoubleType()),
-            StructField("__audio_rms", DoubleType()),
+        kw["snr"] = compute_snr
+        fields += [
+            StructField(f"__audio_{m}", DoubleType())
+            for m in ("silence_ratio", "clip_ratio", "rms")
         ]
-    out_schema = StructType(list(passthrough) + extra)
-    out_names = [f.name for f in passthrough] + [f.name for f in extra]
+    check = check_clip_qc if qc else check_clip
 
-    def run(batches):
-        for b in batches:
-            names = b.schema.names
-            barr = b.column(names.index(bytes_col))
-            cids = b.column(names.index(key)).to_pylist()
-            codecs = b.column(names.index(codec_c)).to_pylist()
-            srs = b.column(names.index(sr_c)).to_pylist()
-            durs = b.column(names.index(dur_c)).to_pylist()
-            n = len(barr)
-            oks, snrs, errs = [], [], []
-            sils, crs, rmss = [], [], []
-            for i in range(n):
-                sc = barr[i]
-                # zero-copy buffer slice; None for a null payload
-                mv = memoryview(sc.as_buffer()) if sc.is_valid else None
-                args = (cids[i], mv, codecs[i], srs[i], durs[i])
-                kw = dict(min_snr_db=min_snr, ref_seed=ref_seed)
-                if qc:
-                    ok, db, err, sil, cr, rms = check_clip_qc(
-                        *args, snr=compute_snr, **kw
-                    )
-                    sils.append(sil)
-                    crs.append(cr)
-                    rmss.append(rms)
-                else:
-                    ok, db, err = check_clip(*args, **kw)
-                oks.append(ok)
-                snrs.append(db)
-                errs.append(err)
-            arrays = [b.column(names.index(f.name)) for f in passthrough]
-            arrays.append(pa.array(oks, type=pa.bool_()))
-            arrays.append(pa.array(snrs, type=pa.float64()))
-            arrays.append(pa.array(errs, type=pa.string()))
-            if qc:
-                arrays.append(pa.array(sils, type=pa.float64()))
-                arrays.append(pa.array(crs, type=pa.float64()))
-                arrays.append(pa.array(rmss, type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
+    def kernel(payload, clip_id, codec, sr, dur):
+        return check(clip_id, payload, codec, sr, dur, **kw)
 
-    return df.mapInArrow(run, out_schema)
+    return map_payloads(
+        df,
+        rule.bytes_column,
+        [key_col, rule.codec_column, rule.sr_column, rule.dur_column],
+        kernel,
+        fields,
+    )

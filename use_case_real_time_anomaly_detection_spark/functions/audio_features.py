@@ -6,8 +6,8 @@ A 100 TB audio corpus needs exactly what a text corpus needs — QC
 features, dedup, drift — but computed from the decoded waveform, not the
 string column. This module keeps the reference engine's discipline
 (reference repo has zero UDFs — SURVEY.md §2.10): Python appears only as
-vectorized numpy inside `mapInArrow` (zero-copy payload buffers, same
-mechanics as functions/audio.with_audio_checks), and everything after
+vectorized numpy inside per-clip kernels run by the one zero-copy Arrow
+pass, functions/payload.map_payloads, and everything after
 feature extraction — blocking joins, Hamming distance, cosine verify —
 is JVM-side DataFrame ops on slim (id, long, array<double>) frames. The
 payload bytes never cross an exchange.
@@ -57,7 +57,6 @@ from pyspark.sql.types import (
     LongType,
     StringType,
     StructField,
-    StructType,
 )
 
 from .audio import CLIP_ABS, DECODERS, SILENCE_ABS, mulaw_encode, pcm16_wav_encode
@@ -91,6 +90,12 @@ FEATURE_FIELDS = [
     StructField("rms_bucket", LongType()),
     StructField("rms_bucket_hi", LongType()),
     StructField("bands", ArrayType(DoubleType())),
+]
+# with_audio_features / clip_pipeline output: decode verdict + features
+_FEATURE_OUT = [
+    StructField("ok", BooleanType()),
+    StructField("err", StringType()),
+    *FEATURE_FIELDS,
 ]
 
 
@@ -188,60 +193,22 @@ def with_audio_features(
 ) -> DataFrame:
     """clips → per-clip feature frame; the payload column is DROPPED
     (nothing downstream needs `bytes`, and dropping it here is what
-    keeps every later exchange slim).
-
-    mapInArrow with zero-copy payload buffer slices — the pandas-UDF
-    formulation materializes every payload as Python bytes and caps the
-    pipeline ~1.2 GB/s (measured; see functions/audio.with_audio_checks).
+    keeps every later exchange slim). One zero-copy `map_payloads` pass.
     """
-    import pyarrow as pa
+    from .payload import map_payloads
 
-    passthrough = [f for f in df.schema.fields if f.name != bytes_col]
-    out_schema = StructType(
-        list(passthrough)
-        + [StructField("ok", BooleanType()), StructField("err", StringType())]
-        + FEATURE_FIELDS
-    )
-    feat_names = [f.name for f in FEATURE_FIELDS]
-    feat_types = {
-        "n_samples": pa.int64(),
-        "rms": pa.float64(),
-        "peak": pa.float64(),
-        "zcr": pa.float64(),
-        "silence_ratio": pa.float64(),
-        "clip_ratio": pa.float64(),
-        "centroid_hz": pa.float64(),
-        "fingerprint": pa.int64(),
-        "peak_band": pa.int64(),
-        "rms_bucket": pa.int64(),
-        "rms_bucket_hi": pa.int64(),
-        "bands": pa.list_(pa.float64()),
-    }
+    names = [f.name for f in _FEATURE_OUT]
 
-    def run(batches):
-        for b in batches:
-            names = b.schema.names
-            barr = b.column(names.index(bytes_col))
-            codecs = b.column(names.index(codec_col)).to_pylist()
-            srs = b.column(names.index(sr_col)).to_pylist()
-            durs = b.column(names.index(dur_col)).to_pylist()
-            cols: dict[str, list] = {k: [] for k in ("ok", "err", *feat_names)}
-            for i in range(len(barr)):
-                sc = barr[i]
-                mv = memoryview(sc.as_buffer()) if sc.is_valid else None
-                row = clip_features(mv, codecs[i], srs[i], durs[i])
-                for k in cols:
-                    cols[k].append(row[k])
-            arrays = [b.column(names.index(f.name)) for f in passthrough]
-            arrays.append(pa.array(cols["ok"], type=pa.bool_()))
-            arrays.append(pa.array(cols["err"], type=pa.string()))
-            arrays.extend(pa.array(cols[k], type=feat_types[k]) for k in feat_names)
-            yield pa.RecordBatch.from_arrays(
-                arrays,
-                names=[f.name for f in passthrough] + ["ok", "err"] + feat_names,
-            )
+    def kernel(payload, codec, sr, dur):
+        row = clip_features(payload, codec, sr, dur)
+        return tuple(row[k] for k in names)
 
-    return df.mapInArrow(run, out_schema)
+    return map_payloads(df, bytes_col, [codec_col, sr_col, dur_col], kernel, _FEATURE_OUT)
+
+
+def _same_fields(df: DataFrame, *names: str) -> list:
+    """The input's own fields for the columns a rewrite replaces in place."""
+    return [df.schema[n] for n in names]
 
 
 def reencode_clips(df: DataFrame, *, to_codec: str = "mulaw") -> DataFrame:
@@ -252,46 +219,25 @@ def reencode_clips(df: DataFrame, *, to_codec: str = "mulaw") -> DataFrame:
     Same-schema-out means the operator composes with every clip consumer
     (validation, features, ingest gate) with no plan changes.
     """
-    import pyarrow as pa
+    from .payload import map_payloads
 
     if to_codec not in ENCODERS:
         raise ValueError(f"no encoder for codec {to_codec!r}")
     enc = ENCODERS[to_codec]
-    schema = df.schema
-    names_out = [f.name for f in schema.fields]
 
-    def run(batches):
-        for b in batches:
-            names = b.schema.names
-            barr = b.column(names.index("bytes"))
-            codecs = b.column(names.index("codec")).to_pylist()
-            srs = b.column(names.index("sr_hz")).to_pylist()
-            new_payloads, new_codecs = [], []
-            for i in range(len(barr)):
-                sc = barr[i]
-                mv = memoryview(sc.as_buffer()) if sc.is_valid else None
-                dec_fn = DECODERS.get(codecs[i])
-                try:
-                    if dec_fn is None or mv is None or len(mv) == 0:
-                        raise ValueError("undecodable")
-                    sr = int(srs[i] or 0)
-                    sig = dec_fn(mv, sr)
-                    new_payloads.append(enc(sig, sr))
-                    new_codecs.append(to_codec)
-                except Exception:
-                    new_payloads.append(bytes(mv) if mv is not None else None)
-                    new_codecs.append(codecs[i])
-            arrays = []
-            for f in schema.fields:
-                if f.name == "bytes":
-                    arrays.append(pa.array(new_payloads, type=pa.binary()))
-                elif f.name == "codec":
-                    arrays.append(pa.array(new_codecs, type=pa.string()))
-                else:
-                    arrays.append(b.column(names.index(f.name)))
-            yield pa.RecordBatch.from_arrays(arrays, names=names_out)
+    def kernel(payload, codec, sr):
+        dec_fn = DECODERS.get(codec)
+        try:
+            if dec_fn is None or payload is None or len(payload) == 0:
+                raise ValueError("undecodable")
+            sr = int(sr or 0)
+            return enc(dec_fn(payload, sr), sr), to_codec
+        except Exception:
+            return payload, codec
 
-    return df.mapInArrow(run, schema)
+    return map_payloads(
+        df, "bytes", ["codec", "sr_hz"], kernel, _same_fields(df, "bytes", "codec")
+    )
 
 
 def resample_clips(df: DataFrame, to_sr: int) -> DataFrame:
@@ -307,48 +253,9 @@ def resample_clips(df: DataFrame, to_sr: int) -> DataFrame:
     content shifts only (tested end-to-end in tests/test_audio_features).
     Same-schema-out ⇒ composes with every clip consumer unchanged.
     """
-    import pyarrow as pa
-
-    schema = df.schema
-    names_out = [f.name for f in schema.fields]
-
-    def run(batches):
-        for b in batches:
-            names = b.schema.names
-            barr = b.column(names.index("bytes"))
-            codecs = b.column(names.index("codec")).to_pylist()
-            srs = b.column(names.index("sr_hz")).to_pylist()
-            new_payloads, new_srs = [], []
-            for i in range(len(barr)):
-                sc = barr[i]
-                mv = memoryview(sc.as_buffer()) if sc.is_valid else None
-                sr = int(srs[i] or 0)
-                if sr == to_sr:
-                    new_payloads.append(bytes(mv) if mv is not None else None)
-                    new_srs.append(sr)
-                    continue
-                dec_fn = DECODERS.get(codecs[i])
-                enc_fn = ENCODERS.get(codecs[i])
-                try:
-                    if dec_fn is None or enc_fn is None or mv is None or len(mv) == 0:
-                        raise ValueError("undecodable")
-                    sig = dec_fn(mv, sr)
-                    new_payloads.append(enc_fn(resample_signal(sig, sr, to_sr), to_sr))
-                    new_srs.append(to_sr)
-                except Exception:
-                    new_payloads.append(bytes(mv) if mv is not None else None)
-                    new_srs.append(sr)
-            arrays = []
-            for f in schema.fields:
-                if f.name == "bytes":
-                    arrays.append(pa.array(new_payloads, type=pa.binary()))
-                elif f.name == "sr_hz":
-                    arrays.append(pa.array(new_srs, type=pa.int32()))
-                else:
-                    arrays.append(b.column(names.index(f.name)))
-            yield pa.RecordBatch.from_arrays(arrays, names=names_out)
-
-    return df.mapInArrow(run, schema)
+    return _map_signal(
+        df, [("resample", {"to_sr": to_sr})], _same_fields(df, "bytes", "sr_hz")
+    )
 
 
 def trim_signal(sig: np.ndarray, thresh: float = SILENCE_ABS) -> np.ndarray:
@@ -377,47 +284,9 @@ def trim_silence_clips(
     content with different lead-in silence hash and block differently;
     after trim they collide exactly).
     """
-    import pyarrow as pa
-
-    schema = df.schema
-    names_out = [f.name for f in schema.fields]
-
-    def run(batches):
-        for b in batches:
-            names = b.schema.names
-            barr = b.column(names.index("bytes"))
-            codecs = b.column(names.index("codec")).to_pylist()
-            srs = b.column(names.index("sr_hz")).to_pylist()
-            durs = b.column(names.index("dur_ms")).to_pylist()
-            new_payloads, new_durs = [], []
-            for i in range(len(barr)):
-                sc = barr[i]
-                mv = memoryview(sc.as_buffer()) if sc.is_valid else None
-                dec_fn = DECODERS.get(codecs[i])
-                enc_fn = ENCODERS.get(codecs[i])
-                sr = int(srs[i] or 0)
-                try:
-                    if dec_fn is None or enc_fn is None or mv is None or len(mv) == 0:
-                        raise ValueError("undecodable")
-                    trimmed = trim_signal(dec_fn(mv, sr), thresh)
-                    new_payloads.append(enc_fn(trimmed, sr))
-                    new_durs.append(
-                        int(round(len(trimmed) * 1000.0 / sr)) if sr > 0 else 0
-                    )
-                except Exception:
-                    new_payloads.append(bytes(mv) if mv is not None else None)
-                    new_durs.append(durs[i])
-            arrays = []
-            for f in schema.fields:
-                if f.name == "bytes":
-                    arrays.append(pa.array(new_payloads, type=pa.binary()))
-                elif f.name == "dur_ms":
-                    arrays.append(pa.array(new_durs, type=pa.int32()))
-                else:
-                    arrays.append(b.column(names.index(f.name)))
-            yield pa.RecordBatch.from_arrays(arrays, names=names_out)
-
-    return df.mapInArrow(run, schema)
+    return _map_signal(
+        df, [("trim", {"thresh": thresh})], _same_fields(df, "bytes", "dur_ms")
+    )
 
 
 def normalize_gain(sig: np.ndarray, target_rms: float, peak_ceiling: float) -> float:
@@ -447,42 +316,8 @@ def normalize_loudness_clips(
     corpus does not perturb its near-dup structure, while making
     rms-based QC comparable across capture chains.
     """
-    import pyarrow as pa
-
-    schema = df.schema
-    names_out = [f.name for f in schema.fields]
-
-    def run(batches):
-        for b in batches:
-            names = b.schema.names
-            barr = b.column(names.index("bytes"))
-            codecs = b.column(names.index("codec")).to_pylist()
-            srs = b.column(names.index("sr_hz")).to_pylist()
-            new_payloads = []
-            for i in range(len(barr)):
-                sc = barr[i]
-                mv = memoryview(sc.as_buffer()) if sc.is_valid else None
-                dec_fn = DECODERS.get(codecs[i])
-                enc_fn = ENCODERS.get(codecs[i])
-                sr = int(srs[i] or 0)
-                try:
-                    if dec_fn is None or enc_fn is None or mv is None or len(mv) == 0:
-                        raise ValueError("undecodable")
-                    sig = dec_fn(mv, sr)
-                    g = normalize_gain(sig, target_rms, peak_ceiling)
-                    out = (sig.astype(np.float64) * g).astype(np.float32)
-                    new_payloads.append(enc_fn(out, sr))
-                except Exception:
-                    new_payloads.append(bytes(mv) if mv is not None else None)
-            arrays = []
-            for f in schema.fields:
-                if f.name == "bytes":
-                    arrays.append(pa.array(new_payloads, type=pa.binary()))
-                else:
-                    arrays.append(b.column(names.index(f.name)))
-            yield pa.RecordBatch.from_arrays(arrays, names=names_out)
-
-    return df.mapInArrow(run, schema)
+    ops = [("normalize", {"target_rms": target_rms, "peak_ceiling": peak_ceiling})]
+    return _map_signal(df, ops, _same_fields(df, "bytes"))
 
 
 def segment_signal(
@@ -698,97 +533,58 @@ def clip_pipeline(
     recomputes dur_ms, resample updates sr_hz, normalize touches
     neither.
     """
-    import pyarrow as pa
-
     ops = [(name, dict(kw)) for name, kw in ops]
     for name, _ in ops:
         if name not in ("trim", "resample", "normalize"):
             raise ValueError(f"unknown signal op {name!r}")
+    names = (["bytes"] if emit_bytes else []) + ["sr_hz", "dur_ms"]
+    fields = _same_fields(df, *names) + (_FEATURE_OUT if features else [])
+    return _map_signal(df, ops, fields, features=features)
 
-    passthrough = [
-        f for f in df.schema.fields if f.name != "bytes" or emit_bytes
-    ]
-    out_fields = list(passthrough)
-    if features:
-        out_fields += [
-            StructField("ok", BooleanType()),
-            StructField("err", StringType()),
-        ] + [f for f in FEATURE_FIELDS]
-    out_schema = StructType(out_fields)
-    feat_names = [f.name for f in FEATURE_FIELDS]
 
-    def run(batches):
-        for b in batches:
-            names = b.schema.names
-            barr = b.column(names.index("bytes"))
-            codecs = b.column(names.index("codec")).to_pylist()
-            srs = b.column(names.index("sr_hz")).to_pylist()
-            durs = b.column(names.index("dur_ms")).to_pylist()
-            n = len(barr)
-            new_payloads = [None] * n
-            new_srs, new_durs = list(srs), list(durs)
-            cols: dict[str, list] = {
-                k: [None] * n for k in ("ok", "err", *feat_names)
-            }
-            for i in range(n):
-                sc = barr[i]
-                mv = memoryview(sc.as_buffer()) if sc.is_valid else None
-                dec_fn = DECODERS.get(codecs[i])
-                enc_fn = ENCODERS.get(codecs[i])
-                sr = int(srs[i] or 0)
-                dur = durs[i]
-                try:
-                    if dec_fn is None or mv is None or len(mv) == 0:
-                        raise ValueError("undecodable")
-                    sig = dec_fn(mv, sr)
-                    for name, kw in ops:
-                        sig, sr, dur = _apply_signal_op(name, sig, sr, dur, kw)
-                    new_srs[i], new_durs[i] = sr, dur
-                    if emit_bytes:
-                        if enc_fn is None:
-                            raise ValueError("no encoder")
-                        new_payloads[i] = enc_fn(sig, sr)
-                    if features:
-                        row = signal_features(sig, sr)
-                        cols["ok"][i] = True
-                        for k in feat_names:
-                            cols[k][i] = row[k]
-                except Exception as exc:
-                    if emit_bytes:
-                        new_payloads[i] = bytes(mv) if mv is not None else None
-                    if features:
-                        cols["ok"][i] = False
-                        cols["err"][i] = str(exc)[:120]
-            arrays, out_names = [], []
-            for f in passthrough:
-                if f.name == "bytes":
-                    arrays.append(pa.array(new_payloads, type=pa.binary()))
-                elif f.name == "sr_hz":
-                    arrays.append(pa.array(new_srs, type=pa.int32()))
-                elif f.name == "dur_ms":
-                    arrays.append(pa.array(new_durs, type=pa.int32()))
-                else:
-                    arrays.append(b.column(names.index(f.name)))
-                out_names.append(f.name)
+def _map_signal(df: DataFrame, ops: list, fields: list, *, features: bool = False):
+    """The decode → _apply_signal_op chain → re-encode → features kernel
+    shared by clip_pipeline and the standalone signal operators, as one
+    `map_payloads` pass emitting ``fields`` (a subset of bytes / sr_hz /
+    dur_ms, then ok / err / FEATURE_FIELDS when ``features``).
+
+    The rewrite (bytes, sr_hz, dur_ms) commits once decode, op chain and
+    re-encode succeed; a row failing before that (no decoder or encoder
+    for its codec, empty or undecodable payload, an op that cannot apply)
+    passes through untouched. A feature failure after the commit (zero
+    samples left) keeps the rewrite; either way ok=False and err is set.
+    Without features, a row no op changes (a resample to its own rate)
+    is emitted untouched without a decode.
+    """
+    from .payload import map_payloads
+
+    names = [f.name for f in fields]
+    emit_bytes = "bytes" in names
+
+    def kernel(payload, codec, sr_in, dur_in):
+        sr, dur = int(sr_in or 0), dur_in
+        row = {"bytes": payload, "sr_hz": sr_in, "dur_ms": dur_in, "ok": False, "err": None}
+        if not features and all(n == "resample" and kw["to_sr"] == sr for n, kw in ops):
+            return tuple(row[k] for k in names)
+        try:
+            dec_fn, enc_fn = DECODERS.get(codec), ENCODERS.get(codec)
+            if dec_fn is None or payload is None or len(payload) == 0:
+                raise ValueError("undecodable")
+            if emit_bytes and enc_fn is None:
+                raise ValueError("no encoder")
+            sig = dec_fn(payload, sr)
+            for name, kw in ops:
+                sig, sr, dur = _apply_signal_op(name, sig, sr, dur, kw)
+            if emit_bytes:
+                row["bytes"] = enc_fn(sig, sr)
+            row["sr_hz"], row["dur_ms"] = sr, dur
             if features:
-                arrays.append(pa.array(cols["ok"], type=pa.bool_()))
-                arrays.append(pa.array(cols["err"], type=pa.string()))
-                out_names += ["ok", "err"]
-                ftypes = {
-                    "n_samples": pa.int64(), "rms": pa.float64(),
-                    "peak": pa.float64(), "zcr": pa.float64(),
-                    "silence_ratio": pa.float64(), "clip_ratio": pa.float64(),
-                    "centroid_hz": pa.float64(), "fingerprint": pa.int64(),
-                    "peak_band": pa.int64(), "rms_bucket": pa.int64(),
-                    "rms_bucket_hi": pa.int64(),
-                    "bands": pa.list_(pa.float64()),
-                }
-                for k in feat_names:
-                    arrays.append(pa.array(cols[k], type=ftypes[k]))
-                    out_names.append(k)
-            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
+                row.update(signal_features(sig, sr), ok=True)
+        except Exception as exc:  # decode failures are data, not bugs
+            row["err"] = str(exc)[:120]
+        return tuple(row.get(k) for k in names)
 
-    return df.mapInArrow(run, out_schema)
+    return map_payloads(df, "bytes", ["codec", "sr_hz", "dur_ms"], kernel, fields)
 
 
 def signal_features(sig: np.ndarray, sr: int) -> dict:

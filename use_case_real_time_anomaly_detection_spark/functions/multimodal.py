@@ -15,10 +15,11 @@ as standalone BMP image payloads. Codecs that need external libraries
 NotImplementedError.
 
 Pattern for any modality at 100 TB: binary column + typed metadata
-columns, kernels as iterator-of-pandas mapInPandas (bounded memory via
-spark.sql.execution.arrow.maxRecordsPerBatch) or zero-copy mapInArrow
-(with_image_checks — the fused-rule pass), outputs as flat typed
-columns so downstream rules stay JVM-side.
+columns, per-item kernels run through ONE zero-copy Arrow pass
+(functions/payload.map_payloads; bounded memory via
+spark.sql.execution.arrow.maxRecordsPerBatch), outputs as flat typed
+columns so downstream rules stay JVM-side. Only the 1→N fan-out
+(video_frames) keeps its own batch loop.
 """
 
 from __future__ import annotations
@@ -354,52 +355,27 @@ def with_image_checks(df: DataFrame, rule, *, key_col: str = "clip_id") -> DataF
     """Append __img_ok / __img_err / __img_w / __img_h / __img_luma and
     DROP the payload column (downstream of the check nothing needs the
     pixels) — the image twin of functions/audio.with_audio_checks, and
-    the same zero-copy `mapInArrow` shape: binary payloads reach numpy
-    as buffer slices, never as materialized Python bytes-per-row through
-    pandas (measured on the audio column as a ~1.2 GB/s pipeline ceiling
-    that flattens core scaling)."""
-    import pyarrow as pa
+    the same zero-copy `map_payloads` pass: binary payloads reach numpy
+    as buffer slices, never as materialized Python bytes-per-row."""
+    from .payload import map_payloads
 
-    bytes_col = rule.bytes_column
-    codec_c = rule.codec_column
+    def kernel(payload, codec):
+        ok, err, w, h, _c, luma = check_image(payload, codec)
+        return ok, err, w, h, luma
 
-    passthrough = [f for f in df.schema.fields if f.name != bytes_col]
-    extra = [
-        StructField("__img_ok", BooleanType()),
-        StructField("__img_err", StringType()),
-        StructField("__img_w", IntegerType()),
-        StructField("__img_h", IntegerType()),
-        StructField("__img_luma", DoubleType()),
-    ]
-    out_schema = StructType(list(passthrough) + extra)
-    out_names = [f.name for f in passthrough] + [f.name for f in extra]
-
-    def run(batches):
-        for b in batches:
-            names = b.schema.names
-            barr = b.column(names.index(bytes_col))
-            codecs = b.column(names.index(codec_c)).to_pylist()
-            oks, errs, ws, hs, lumas = [], [], [], [], []
-            for i in range(len(barr)):
-                sc = barr[i]
-                mv = memoryview(sc.as_buffer()) if sc.is_valid else None
-                ok, err, w, h, _c, luma = check_image(mv, codecs[i])
-                oks.append(ok)
-                errs.append(err)
-                ws.append(w)
-                hs.append(h)
-                lumas.append(luma)
-            arrays = [b.column(names.index(f.name)) for f in passthrough]
-            arrays += [
-                pa.array(oks, type=pa.bool_()),
-                pa.array(errs, type=pa.string()),
-                pa.array(ws, type=pa.int32()),
-                pa.array(hs, type=pa.int32()),
-                pa.array(lumas, type=pa.float64()),
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
-
-    return df.mapInArrow(run, out_schema)
+    return map_payloads(
+        df,
+        rule.bytes_column,
+        [rule.codec_column],
+        kernel,
+        [
+            StructField("__img_ok", BooleanType()),
+            StructField("__img_err", StringType()),
+            StructField("__img_w", IntegerType()),
+            StructField("__img_h", IntegerType()),
+            StructField("__img_luma", DoubleType()),
+        ],
+    )
 
 
 def image_features(
@@ -409,29 +385,18 @@ def image_features(
     bytes_col: str = "payload",
     codec_col: str = "codec",
 ) -> DataFrame:
-    """Decode + feature-extract images in Arrow batches (mapInPandas,
-    iterator form). Decode failures are rows, not exceptions."""
+    """Decode + feature-extract images in one `map_payloads` pass.
+    Decode failures are rows, not exceptions."""
+    from .payload import map_payloads
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = []
-            for iid, payload, codec in zip(b[id_col], b[bytes_col], b[codec_col]):
-                ok, err, w, h, c, luma = check_image(payload, codec)
-                out.append(
-                    {
-                        "item_id": iid,
-                        "width": w,
-                        "height": h,
-                        "channels": c,
-                        "mean_luma": luma,
-                        "decode_error": err,
-                    }
-                )
-            yield pd.DataFrame(out, columns=[f.name for f in IMAGE_FEATURES_SCHEMA])
+    def kernel(payload, codec):
+        _ok, err, w, h, c, luma = check_image(payload, codec)
+        return w, h, c, luma, err
 
-    return df.select(id_col, bytes_col, codec_col).mapInPandas(
-        run, IMAGE_FEATURES_SCHEMA
-    )
+    src = df.select(F.col(id_col).alias("item_id"), bytes_col, codec_col)
+    return map_payloads(
+        src, bytes_col, [codec_col], kernel, IMAGE_FEATURES_SCHEMA.fields[1:]
+    ).select(*IMAGE_FEATURES_SCHEMA.fieldNames())
 
 
 # ---------------------------------------------------------------------------
@@ -673,33 +638,24 @@ def image_dhash(
     bytes_col: str = "payload",
     codec_col: str = "codec",
 ) -> DataFrame:
-    """Decode + fingerprint images in Arrow batches (one mapInPandas
-    pass). Decode failures are rows (NULL dhash + the stable error
-    string), not exceptions."""
+    """Decode + fingerprint images in one `map_payloads` pass. Decode
+    failures are rows (NULL dhash + the stable error string), not
+    exceptions."""
+    from .payload import map_payloads
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, payload, codec in zip(b[id_col], b[bytes_col], b[codec_col]):
-                try:
-                    dec = IMAGE_DECODERS.get(codec)
-                    if dec is None:
-                        raise ValueError(f"no decoder for {codec!r}")
-                    img = dec(bytes(payload))
-                    rows.append(
-                        {"item_id": iid, "dhash": image_dhash_value(img),
-                         "decode_error": None}
-                    )
-                except Exception as exc:
-                    rows.append(
-                        {"item_id": iid, "dhash": None,
-                         "decode_error": str(exc)[:120]}
-                    )
-            yield pd.DataFrame(rows, columns=["item_id", "dhash", "decode_error"])
+    def kernel(payload, codec):
+        try:
+            dec = IMAGE_DECODERS.get(codec)
+            if dec is None:
+                raise ValueError(f"no decoder for {codec!r}")
+            return image_dhash_value(dec(bytes(payload))), None
+        except Exception as exc:
+            return None, str(exc)[:120]
 
-    return df.select(id_col, bytes_col, codec_col).mapInPandas(
-        run, IMAGE_DHASH_SCHEMA
-    )
+    src = df.select(F.col(id_col).alias("item_id"), bytes_col, codec_col)
+    return map_payloads(
+        src, bytes_col, [codec_col], kernel, IMAGE_DHASH_SCHEMA.fields[1:]
+    ).select(*IMAGE_DHASH_SCHEMA.fieldNames())
 
 
 def image_dup_pairs(
@@ -788,50 +744,23 @@ def with_video_checks(df: DataFrame, rule, *, key_col: str = "clip_id") -> DataF
     """Append __vid_ok / __vid_err / __vid_w / __vid_h / __vid_frames and
     DROP the payload column — the video member of the fused payload-rule
     family (with_audio_checks / with_image_checks): one zero-copy
-    mapInArrow pass, payloads reach the demuxer as buffer slices, and
+    `map_payloads` pass, payloads reach the demuxer as buffer slices, and
     everything downstream flows narrow rows."""
-    import pyarrow as pa
+    from .payload import map_payloads
 
-    bytes_col = rule.bytes_column
-    codec_c = rule.codec_column
-
-    passthrough = [f for f in df.schema.fields if f.name != bytes_col]
-    extra = [
-        StructField("__vid_ok", BooleanType()),
-        StructField("__vid_err", StringType()),
-        StructField("__vid_w", IntegerType()),
-        StructField("__vid_h", IntegerType()),
-        StructField("__vid_frames", IntegerType()),
-    ]
-    out_schema = StructType(list(passthrough) + extra)
-    out_names = [f.name for f in passthrough] + [f.name for f in extra]
-
-    def run(batches):
-        for b in batches:
-            names = b.schema.names
-            barr = b.column(names.index(bytes_col))
-            codecs = b.column(names.index(codec_c)).to_pylist()
-            oks, errs, ws, hs, ns = [], [], [], [], []
-            for i in range(len(barr)):
-                sc = barr[i]
-                mv = memoryview(sc.as_buffer()) if sc.is_valid else None
-                ok, err, w, h, n = check_video(mv, codecs[i])
-                oks.append(ok)
-                errs.append(err)
-                ws.append(w)
-                hs.append(h)
-                ns.append(n)
-            arrays = [b.column(names.index(f.name)) for f in passthrough]
-            arrays += [
-                pa.array(oks, type=pa.bool_()),
-                pa.array(errs, type=pa.string()),
-                pa.array(ws, type=pa.int32()),
-                pa.array(hs, type=pa.int32()),
-                pa.array(ns, type=pa.int32()),
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
-
-    return df.mapInArrow(run, out_schema)
+    return map_payloads(
+        df,
+        rule.bytes_column,
+        [rule.codec_column],
+        check_video,
+        [
+            StructField("__vid_ok", BooleanType()),
+            StructField("__vid_err", StringType()),
+            StructField("__vid_w", IntegerType()),
+            StructField("__vid_h", IntegerType()),
+            StructField("__vid_frames", IntegerType()),
+        ],
+    )
 
 
 VIDEO_FRAMES_SCHEMA = StructType(
@@ -872,6 +801,8 @@ def video_frames(
                     demux = VIDEO_DEMUXERS.get(codec)
                     if demux is None:
                         raise ValueError(f"unknown video codec {codec!r}")
+                    if payload is None:
+                        raise ValueError("null payload")
                     w, h, frames = demux(bytes(payload))
                     if not frames:
                         # a headers-only container must stay accountable:
@@ -906,45 +837,3 @@ def video_frames(
     return df.select(id_col, bytes_col, codec_col).mapInPandas(
         run, VIDEO_FRAMES_SCHEMA
     )
-
-
-FRAME_SAMPLE_SCHEMA = StructType(
-    [
-        StructField("item_id", StringType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("frame", BinaryType()),
-    ]
-)
-
-
-def frame_sample(
-    df: DataFrame,
-    *,
-    every_n: int = 10,
-    id_col: str = "item_id",
-    bytes_col: str = "payload",
-) -> DataFrame:
-    """Video frame sampling (1-in-N). The container format parser is a
-    deterministic fake (fixed 256-byte 'frames'); a real demuxer slots
-    into the same mapInPandas shape — one input row fans out to many
-    frame rows, which is why this is mapInPandas and not a scalar UDF."""
-
-    frame_size = 256
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for iid, payload in zip(b[id_col], b[bytes_col]):
-                data = bytes(payload)
-                n_frames = max(1, len(data) // frame_size)
-                for i in range(0, n_frames, every_n):
-                    rows.append(
-                        {
-                            "item_id": iid,
-                            "frame_idx": i,
-                            "frame": data[i * frame_size : (i + 1) * frame_size],
-                        }
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SAMPLE_SCHEMA])
-
-    return df.select(id_col, bytes_col).mapInPandas(run, FRAME_SAMPLE_SCHEMA)

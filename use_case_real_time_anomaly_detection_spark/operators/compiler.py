@@ -6,8 +6,9 @@ that — reference: content/copies-pipes.md:13). Here ALL rules over a table
 compile into ONE plan that Catalyst can optimize as a whole:
 
 scan (column-pruned: only referenced columns are read)
- ├─ one Arrow mapInArrow pass (audio decode, only if requested; consumes
- │   and DROPS the payload column so every later stage flows narrow rows)
+ ├─ the payload pass (audio, image or video decode, only if requested):
+ │   one zero-copy functions/payload.map_payloads Arrow pass; it consumes
+ │   and DROPS the payload column so every later stage flows narrow rows
  ├─ one left join to the manifest (covers referential + transcript rules)
  ├─ one Window pass over (partition, seq) (covers rate-of-change, gap,
  │   rolling z-score — all window columns share the same WindowSpec, so
@@ -94,6 +95,46 @@ def _fmt(col: Column, digits: int = 2) -> Column:
     (tinybird/pipes/copy_rate_of_change.pipe:52-56).
     """
     return F.round(col.cast("double"), digits).cast("string")
+
+
+def _decode_check(
+    ok_col: str, err_col: str, err_label: str, parts: list
+) -> tuple[Column, Column, Column]:
+    """(cond, decoded, note) of a payload decode rule (image, video).
+
+    ``parts`` lists (decoded column, declared column or None, separator)
+    per checked dimension; the separator precedes the part in the
+    ``decoded:…| declared:…| <err_label>:<err>`` note. A row violates when
+    the decode failed or a decoded value differs from its declared one.
+    Decode failure leaves the decoded columns NULL, so the mismatch arms
+    are NULL and the OR reduces to the failure arm exactly once. Missing
+    declared metadata is "no cross-check", not a violation, and NULLs
+    print as "?" so they never NULL the note (losing the error text).
+    """
+
+    def _s(c: str) -> Column:
+        return F.coalesce(F.col(c).cast("string"), F.lit("?"))
+
+    cond = ~F.col(ok_col)
+    decoded_bits: list[Column] = []
+    declared_bits: list[Column] = []
+    for dec, decl, sep in parts:
+        if decoded_bits:
+            decoded_bits.append(F.lit(sep))
+        decoded_bits.append(_s(dec))
+        if decl is not None:
+            cond = cond | (F.col(dec) != F.col(decl))
+            if declared_bits:
+                declared_bits.append(F.lit(sep))
+            declared_bits.append(_s(decl))
+    decoded = F.concat(*decoded_bits)
+    note = F.concat(
+        F.lit("decoded:"), decoded,
+        F.lit("| declared:"),
+        F.concat(*declared_bits) if declared_bits else F.lit("-"),
+        F.lit(f"| {err_label}:"), F.coalesce(F.col(err_col), F.lit("")),
+    )
+    return cond, decoded, note
 
 
 @dataclass
@@ -1046,74 +1087,20 @@ def compile_rules(
             _entry(r.detector, cond, snr_s, note)
 
         elif isinstance(r, ImageDecodeRule):
-            # decode failure → __img_w/h NULL → mismatch cond NULL, so
-            # the OR short-circuits to the decode-failure arm exactly once
-            cond = ~F.col("__img_ok")
-            decoded = F.concat(
-                F.coalesce(F.col("__img_w").cast("string"), F.lit("?")),
-                F.lit("x"),
-                F.coalesce(F.col("__img_h").cast("string"), F.lit("?")),
-            )
-            # declared dims coalesce to "?" so a NULL declared value
-            # can't NULL the whole note (same contract as the video rule)
-            declared_bits: list[Column] = []
-            if r.width_column is not None:
-                cond = cond | (F.col("__img_w") != F.col(r.width_column))
-                declared_bits.append(
-                    F.coalesce(F.col(r.width_column).cast("string"), F.lit("?"))
-                )
-            if r.height_column is not None:
-                cond = cond | (F.col("__img_h") != F.col(r.height_column))
-                if declared_bits:
-                    declared_bits.append(F.lit("x"))
-                declared_bits.append(
-                    F.coalesce(F.col(r.height_column).cast("string"), F.lit("?"))
-                )
-            note = F.concat(
-                F.lit("decoded:"), decoded,
-                F.lit("| declared:"),
-                F.concat(*declared_bits) if declared_bits else F.lit("-"),
-                F.lit("| decode_error:"), F.coalesce(F.col("__img_err"), F.lit("")),
+            cond, decoded, note = _decode_check(
+                "__img_ok", "__img_err", "decode_error",
+                [("__img_w", r.width_column, ""), ("__img_h", r.height_column, "x")],
             )
             _entry(r.detector, cond, decoded, note)
 
         elif isinstance(r, VideoDecodeRule):
-            cond = ~F.col("__vid_ok")
-            decoded = F.concat(
-                F.coalesce(F.col("__vid_w").cast("string"), F.lit("?")),
-                F.lit("x"),
-                F.coalesce(F.col("__vid_h").cast("string"), F.lit("?")),
-                F.lit("@"),
-                F.coalesce(F.col("__vid_frames").cast("string"), F.lit("?")),
-            )
-            # declared columns coalesce to "?" in the note: a NULL
-            # declared value must not NULL out the whole concat (losing
-            # the demux_error diagnostics on a failed row). The mismatch
-            # comparison itself stays NULL-neutral by design — missing
-            # declared metadata is "no cross-check", not a violation
-            declared_bits = []
-
-            def _decl(colname):
-                return F.coalesce(F.col(colname).cast("string"), F.lit("?"))
-
-            if r.width_column is not None:
-                cond = cond | (F.col("__vid_w") != F.col(r.width_column))
-                declared_bits.append(_decl(r.width_column))
-            if r.height_column is not None:
-                cond = cond | (F.col("__vid_h") != F.col(r.height_column))
-                if declared_bits:
-                    declared_bits.append(F.lit("x"))
-                declared_bits.append(_decl(r.height_column))
-            if r.frames_column is not None:
-                cond = cond | (F.col("__vid_frames") != F.col(r.frames_column))
-                if declared_bits:
-                    declared_bits.append(F.lit("@"))
-                declared_bits.append(_decl(r.frames_column))
-            note = F.concat(
-                F.lit("decoded:"), decoded,
-                F.lit("| declared:"),
-                F.concat(*declared_bits) if declared_bits else F.lit("-"),
-                F.lit("| demux_error:"), F.coalesce(F.col("__vid_err"), F.lit("")),
+            cond, decoded, note = _decode_check(
+                "__vid_ok", "__vid_err", "demux_error",
+                [
+                    ("__vid_w", r.width_column, ""),
+                    ("__vid_h", r.height_column, "x"),
+                    ("__vid_frames", r.frames_column, "@"),
+                ],
             )
             _entry(r.detector, cond, decoded, note)
 

@@ -956,8 +956,9 @@ class ImageDecodeRule(Rule):
     metadata columns when given.
 
     The image twin of AudioDecodeRule: same fused single-pass shape
-    (zero-copy mapInArrow via with_image_checks, payload column dropped
-    after the pass so everything downstream flows narrow rows), same
+    (with_image_checks, one zero-copy functions/payload.map_payloads
+    pass; payload column dropped after the pass so everything downstream
+    flows narrow rows), same
     violation taxonomy (undecodable payload OR decoded-vs-declared
     mismatch). Decode failures carry the decoder's stable error-message
     taxonomy in the note.
@@ -979,8 +980,8 @@ class VideoDecodeRule(Rule):
     metadata columns when given.
 
     The video member of the fused payload-rule family (AudioDecodeRule,
-    ImageDecodeRule): same single-pass shape (zero-copy mapInArrow via
-    with_video_checks, payload column dropped after the pass), same
+    ImageDecodeRule): same single-pass shape (with_video_checks, one
+    zero-copy map_payloads pass; payload column dropped after it), same
     violation taxonomy (undemuxable payload OR demuxed-vs-declared
     mismatch) with the demuxer's stable error-message taxonomy in the
     note.
@@ -1007,7 +1008,7 @@ class AudioQcRule(Rule):
     high SNR (the defect was in the capture itself), so no metadata rule
     and not even the SNR rule can see them.
 
-    Cost model: the metrics come from the SAME single mapInArrow decode
+    Cost model: the metrics come from the SAME single map_payloads decode
     pass the AudioDecodeRule runs (with_audio_checks(qc=True)) — three
     extra vector ops per already-decoded clip, zero extra decodes, zero
     extra scans. Undecodable payloads yield NULL metrics and are never

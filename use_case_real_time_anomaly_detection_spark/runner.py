@@ -692,11 +692,13 @@ def main(argv: list[str] | None = None) -> int:
     }
     dt = time.time() - t0
     result.unpersist()
-    # rows_checked is per (partition, detector); clips = rows of one detector
+    # rows_checked is per (partition, detector): a partition's clip count
+    # is its max over detectors, whichever rules the ruleset declares
     n_parts = verdicts.select("partition_key").distinct().count()
     clips_n = (
-        verdicts.filter(F.col("detector") == "out-of-range")
-        .agg(F.sum("rows_checked"))
+        verdicts.groupBy("partition_key")
+        .agg(F.max("rows_checked").alias("n"))
+        .agg(F.sum("n"))
         .collect()[0][0]
         or 0
     )
