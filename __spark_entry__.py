@@ -1916,10 +1916,12 @@ def _q_payload_bytes(spark, sf):
     from use_case_real_time_anomaly_detection_spark.operators.rules import (
         PayloadSizeRule,
     )
+    from use_case_real_time_anomaly_detection_spark.operators.schema import (
+        with_partition_cols,
+    )
     from use_case_real_time_anomaly_detection_spark.sources.synth import (
         SynthSpec,
         generate_clips,
-        with_partition_cols,
     )
 
     spec = SynthSpec(partitions=4, clips_per_partition=150)

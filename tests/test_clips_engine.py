@@ -209,13 +209,15 @@ def test_verdict_grid_consistency(result):
 def test_metadata_pandas_equals_generated_clips(spark):
     """The pure-pandas fixture writer (oracle bootstrap path) must equal
     generate_clips minus the audio payload, row for row."""
+    from use_case_real_time_anomaly_detection_spark.operators.schema import (
+        with_partition_cols,
+    )
     from use_case_real_time_anomaly_detection_spark.sources.synth import (
         SynthSpec,
         generate_clips,
         generate_manifest,
         manifest_pandas,
         metadata_pandas,
-        with_partition_cols,
     )
 
     spec = SynthSpec(partitions=3, clips_per_partition=90)

@@ -167,10 +167,12 @@ def test_clips_profile_is_single_aggregation(spark):
     scan — N columns never mean N scans."""
     from use_case_real_time_anomaly_detection_spark.functions.stats import profile_table
     from use_case_real_time_anomaly_detection_spark.operators.rules import ProfileSpec
+    from use_case_real_time_anomaly_detection_spark.operators.schema import (
+        with_partition_cols,
+    )
     from use_case_real_time_anomaly_detection_spark.sources.synth import (
         SynthSpec,
         generate_clips,
-        with_partition_cols,
     )
 
     clips = with_partition_cols(
@@ -263,20 +265,28 @@ def test_corpus_filter_single_token_explode(spark):
     assert plan.count("FileScan") == 1, plan
 
 
-def test_no_driver_query_uses_smj_cartesian_or_row_python(spark):
+@pytest.fixture(scope="module")
+def driver_plans(spark):
+    """{name: physical plan} of every driver query, built once for both
+    blanket audits below — building a plan runs the query's eager pins,
+    which is most of each audit's cost."""
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+    import __spark_entry__ as em
+
+    return {name: _physical(fn(spark, SF)) for name, fn in em.queries().items()}
+
+
+def test_no_driver_query_uses_smj_cartesian_or_row_python(driver_plans):
     """Blanket plan audit over EVERY driver query (the check the round-2
     judge ran by hand): no sort-merge join (every join in this engine has
     a broadcastable side — stats, clusters, manifests, verdict grids),
     no cartesian product, no row-at-a-time Python UDF. Catches the
     checkpoint-no-stats → SMJ regression class at CI time."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as em
-
     bad = {}
-    for name, fn in em.queries().items():
-        plan = _physical(fn(spark, SF))
+    for name, plan in driver_plans.items():
         flags = [
             f
             for f in ("SortMergeJoin", "CartesianProduct", "BatchEvalPython")
@@ -287,7 +297,7 @@ def test_no_driver_query_uses_smj_cartesian_or_row_python(spark):
     assert not bad, bad
 
 
-def test_no_driver_query_rescans_payload_columns(spark):
+def test_no_driver_query_rescans_payload_columns(driver_plans):
     """Blanket scan-budget audit over EVERY driver query: at 100 TB the
     corpus cost is dominated by FileScans that read the heavy payload
     columns (audio bytes, document text, transcripts, embeddings) — a
@@ -297,15 +307,10 @@ def test_no_driver_query_rescans_payload_columns(spark):
     re-read) and ≤ 6 FileScans total (slim id/metadata projections are
     cheap but still bounded)."""
     import re
-    import sys
-
-    sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as em
 
     heavy_re = re.compile(r"ReadSchema:[^\n]*(bytes|text|transcript|embedding)")
     bad = {}
-    for name, fn in em.queries().items():
-        plan = _physical(fn(spark, SF))
+    for name, plan in driver_plans.items():
         heavy = sum(
             1
             for ln in plan.splitlines()

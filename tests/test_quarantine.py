@@ -8,13 +8,15 @@ from use_case_real_time_anomaly_detection_spark.operators.engine import (
     ValidationEngine,
     quarantine_split,
 )
+from use_case_real_time_anomaly_detection_spark.operators.schema import (
+    with_partition_cols,
+)
 from use_case_real_time_anomaly_detection_spark.plans.clips import default_rules
 from use_case_real_time_anomaly_detection_spark.sources.synth import (
     SynthSpec,
     frontier_of,
     generate_clips,
     generate_manifest,
-    with_partition_cols,
 )
 
 

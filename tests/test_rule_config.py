@@ -112,11 +112,13 @@ def test_file_roundtrip_and_engine_equivalence(spark, tmp_path):
     from use_case_real_time_anomaly_detection_spark.operators.engine import (
         ValidationEngine,
     )
+    from use_case_real_time_anomaly_detection_spark.operators.schema import (
+        with_partition_cols,
+    )
     from use_case_real_time_anomaly_detection_spark.sources.synth import (
         SynthSpec,
         frontier_of,
         generate_clips,
-        with_partition_cols,
     )
 
     hand = [
@@ -152,12 +154,14 @@ def test_shipped_rulesets_load_and_run(spark):
     from use_case_real_time_anomaly_detection_spark.plans.clips import (
         validate_clips,
     )
+    from use_case_real_time_anomaly_detection_spark.operators.schema import (
+        with_partition_cols,
+    )
     from use_case_real_time_anomaly_detection_spark.sources.synth import (
         SynthSpec,
         frontier_of,
         generate_clips,
         generate_manifest,
-        with_partition_cols,
     )
 
     rules_basic, _, _ = load_ruleset_document("rulesets/clips.json")
@@ -197,11 +201,11 @@ def test_schema_contract_pass_and_column_order(spark):
     from use_case_real_time_anomaly_detection_spark.operators.schema import (
         CLIPS_TABLE_SCHEMA,
         enforce_schema,
+        with_partition_cols,
     )
     from use_case_real_time_anomaly_detection_spark.sources.synth import (
         SynthSpec,
         generate_clips,
-        with_partition_cols,
     )
 
     clips = with_partition_cols(generate_clips(spark, SynthSpec(2, 20)))
@@ -212,6 +216,11 @@ def test_schema_contract_pass_and_column_order(spark):
         "clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"
     ]
     assert set(out.columns) == set(clips.columns)
+    # each layout column is derived only when absent: a real seq survives
+    kept = with_partition_cols(
+        spark.createDataFrame([("c007-000000003", 42)], "clip_id string, seq long")
+    )
+    assert tuple(kept.select("partition_key", "seq").first()) == ("c007", 42)
 
 
 def test_schema_contract_reports_every_defect(spark):

@@ -420,6 +420,20 @@ def test_copy_log_ticks_twice_on_a_bigint_sensor_store(spark, tmp_path):
     assert log.filter("id = 3 AND anomaly_type = 'out-of-range'").count() == 1
 
 
+def test_append_to_a_bigint_sensor_store_keeps_the_sensor_id(spark, tmp_path):
+    """Appends land in the store's file schema: on the driver's
+    user_id bigint shape an appended row reads back with its sensor id,
+    from the served snapshot and from a fresh store on the same path."""
+    schema = "user_id bigint, ts timestamp, value double, event_id long"
+    path = str(tmp_path / "ev")
+    t0 = dt.datetime(2024, 1, 1)
+    spark.createDataFrame([(1, t0, 100.0, 0)], schema).write.parquet(path)
+    store = EventStore(spark, path)
+    assert store.append_ndjson(_spike("2024-01-01T00:05:00", sensor=7)) == (1, 0)
+    for ev in (store.events(), EventStore(spark, path).events()):
+        assert _rows(ev.filter("event_id = 1").select("id", "value")) == [(7, 5000.0)]
+
+
 def test_copy_log_cron_logs_and_records_failures(spark, tmp_path, caplog):
     mat = MaterializedCopyLog(EventStore(spark, str(tmp_path / "ev")),
                               str(tmp_path / "copylog"))

@@ -79,7 +79,6 @@ def test_streaming_copy_cycle_matches_batch(spark, tmp_path):
         stream,
         sink,
         checkpoint_dir=str(tmp_path / "ckpt"),
-        available_now=True,
     )
     q.awaitTermination(120)
 

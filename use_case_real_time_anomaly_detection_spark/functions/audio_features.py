@@ -624,6 +624,10 @@ def signal_features(sig: np.ndarray, sr: int) -> dict:
 # n_samples < 2^21 holds for dur <= 2 s at 44.1 kHz with headroom x10.
 _KEY_SHIFT = 1 << 21
 _BUCKET_OFFSET = 1 << 20
+# the feature columns near-duplicate blocking (_block_keys) and the exact
+# verify (_verify_pairs) read
+_GATE_FEATURES = ("n_samples", "peak_band", "rms_bucket", "rms_bucket_hi",
+                  "rms", "centroid_hz", "bands")
 
 
 def audio_dup_pairs(
@@ -652,81 +656,26 @@ def audio_dup_pairs(
     bucket and degrades toward all-pairs; the same caveat ngram_jaccard
     documents for its frequency cap, and the reason verify is mandatory.
     """
-    from .dedup import _pin
+    from .dedup import _pin, bucket_pairs
 
-    f = features.where(F.col("fingerprint").isNotNull())
     slim = _pin(
-        f.select(
-            F.col(id_col).alias("doc"),
-            "fingerprint",
-            "peak_band",
-            "rms_bucket",
-            "rms_bucket_hi",
-            "n_samples",
-            "rms",
-            "centroid_hz",
-            "bands",
+        features.where(F.col("fingerprint").isNotNull()).select(
+            F.col(id_col).alias("doc"), "fingerprint", *_GATE_FEATURES
         )
     )
-    key = lambda bucket: (  # noqa: E731
-        F.col("peak_band") * F.lit(_KEY_SHIFT)
-        + (F.col(bucket) + F.lit(_BUCKET_OFFSET))
-    ) * F.lit(_KEY_SHIFT) + F.col("n_samples")
-    blocked = slim.select(
-        "doc",
-        "fingerprint",
-        F.explode(F.array_distinct(F.array(key("rms_bucket"), key("rms_bucket_hi")))).alias(
-            "bkey"
-        ),
+    cand = bucket_pairs(
+        _block_keys(slim, "doc", "fingerprint"), ["bkey"], carry=["fingerprint"]
     )
-    cand = (
-        blocked.alias("a")
-        .join(
-            blocked.alias("b"),
-            (F.col("a.bkey") == F.col("b.bkey")) & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("id_a"),
-            F.col("b.doc").alias("id_b"),
-            F.bit_count(
-                F.col("a.fingerprint").bitwiseXOR(F.col("b.fingerprint"))
-            ).alias("hamming"),
-        )
-        .distinct()
-    )
-    side = lambda tag: slim.select(  # noqa: E731
-        F.col("doc").alias(f"id_{tag}"),
-        F.col("rms").alias(f"rms_{tag}"),
-        F.col("centroid_hz").alias(f"cent_{tag}"),
-        F.col("bands").alias(f"bands_{tag}"),
-    )
-    dot = lambda x, y: F.aggregate(  # noqa: E731
-        F.zip_with(x, y, lambda a, b: a * b), F.lit(0.0), lambda acc, v: acc + v
-    )
-    verified = (
-        cand.join(side("a"), "id_a")
-        .join(side("b"), "id_b")
-        .withColumn(
-            "cosine",
-            dot(F.col("bands_a"), F.col("bands_b"))
-            / (
-                F.sqrt(dot(F.col("bands_a"), F.col("bands_a")))
-                * F.sqrt(dot(F.col("bands_b"), F.col("bands_b")))
-            ),
-        )
-        .where(
-            (F.col("cosine") >= F.lit(min_cosine))
-            & (
-                F.abs(F.col("cent_a") / F.col("cent_b") - 1.0)
-                <= F.lit(max_centroid_ratio)
-            )
-            & (F.abs(F.col("rms_a") / F.col("rms_b") - 1.0) <= F.lit(max_rms_ratio))
-        )
+    side = slim.select("doc", "rms", "centroid_hz", "bands")
+    verified = _verify_pairs(
+        cand, side, side, min_cosine, max_centroid_ratio, max_rms_ratio
     )
     return verified.select(
         F.col("id_a").alias("clip_id_a"),
         F.col("id_b").alias("clip_id_b"),
-        "hamming",
+        F.bit_count(
+            F.col("fingerprint_a").bitwiseXOR(F.col("fingerprint_b"))
+        ).alias("hamming"),
     )
 
 
@@ -745,15 +694,17 @@ class AudioIndex:
         self.verify = verify  # (doc, rms, centroid_hz, bands)
 
 
-def _block_keys(features: DataFrame, id_col: str) -> DataFrame:
-    """(doc, bkey) multi-probe block keys from a feature frame — the
-    same packing audio_dup_pairs uses (shared with the DuckDB oracle)."""
+def _block_keys(features: DataFrame, id_col: str, *keep: str) -> DataFrame:
+    """(doc, *keep, bkey) multi-probe block keys from a feature frame —
+    the packing audio_dup_pairs and the ingest gate block on (shared
+    with the DuckDB oracle)."""
     key = lambda bucket: (  # noqa: E731
         F.col("peak_band") * F.lit(_KEY_SHIFT)
         + (F.col(bucket) + F.lit(_BUCKET_OFFSET))
     ) * F.lit(_KEY_SHIFT) + F.col("n_samples")
     return features.select(
         F.col(id_col).alias("doc"),
+        *keep,
         F.explode(
             F.array_distinct(F.array(key("rms_bucket"), key("rms_bucket_hi")))
         ).alias("bkey"),
@@ -771,8 +722,7 @@ def build_audio_index(corpus: DataFrame, *, id_col: str = "clip_id") -> AudioInd
     feats = _pin(
         with_audio_features(corpus)
         .where(F.col("fingerprint").isNotNull())
-        .select(id_col, "n_samples", "peak_band", "rms_bucket", "rms_bucket_hi",
-                "rms", "centroid_hz", "bands")
+        .select(id_col, *_GATE_FEATURES)
     )
     blocks = _pin(_block_keys(feats, id_col))
     verify = _pin(
@@ -791,9 +741,9 @@ def _verify_pairs(
     max_centroid_ratio: float,
     max_rms_ratio: float,
 ) -> DataFrame:
-    """Exact verify of (id_a, id_b) candidates against two (doc, rms,
-    centroid_hz, bands) frames — audio_dup_pairs' gates, reused by the
-    ingest gate."""
+    """Exact verify of (id_a, id_b, ...) candidates against two (doc, rms,
+    centroid_hz, bands) frames — the near-duplicate gates of
+    audio_dup_pairs and the ingest gate. Keeps the candidate columns."""
     ren = lambda df, tag: df.select(  # noqa: E731
         F.col("doc").alias(f"id_{tag}"),
         F.col("rms").alias(f"rms_{tag}"),
@@ -822,7 +772,7 @@ def _verify_pairs(
             )
             & (F.abs(F.col("rms_a") / F.col("rms_b") - 1.0) <= F.lit(max_rms_ratio))
         )
-        .select("id_a", "id_b")
+        .select(*cand.columns)
     )
 
 
@@ -857,43 +807,23 @@ def audio_ingest_gate(
     skip recomputing it, the production path). The exact gates are pure
     JVM md5 — no decode at all for byte-identical rejects.
     """
-    from .dedup import _pin
+    from .dedup import _pin, bucket_pairs
+    from .incremental import annotate_gate, exact_gates
 
     bid = F.col(id_col)
-    # -- gate 1: within-batch exact (min id per payload hash wins) -----
-    hashes_b = _pin(batch.select(bid, F.md5("bytes").alias("payload_md5")))
-    keep = hashes_b.groupBy("payload_md5").agg(F.min(id_col).alias("__keep"))
-    ann = hashes_b.join(keep, "payload_md5")
-    exact_batch = ann.filter(bid != F.col("__keep")).select(
-        bid, F.lit("exact-batch").alias("reason")
-    )
-    b1 = ann.filter(bid == F.col("__keep")).select(id_col, "payload_md5")
-
-    rejects = [exact_batch]
-    survivors = b1.select(id_col)
-
     if corpus is not None and index is None:
         index = build_audio_index(corpus, id_col=id_col)
-
-    if index is not None:
-        # -- gate 2: exact vs corpus (stream corpus, broadcast batch) --
-        exact_corpus = (
-            index.hashes.select("payload_md5")
-            .join(F.broadcast(b1), "payload_md5")
-            .select(bid, F.lit("exact-corpus").alias("reason"))
-            .distinct()
-        )
-        rejects.append(exact_corpus)
-        survivors = survivors.join(
-            F.broadcast(exact_corpus.select(id_col)), id_col, "left_anti"
-        )
+    rejects, survivors = exact_gates(
+        batch.select(bid, F.md5("bytes").alias("payload_md5")),
+        None if index is None else index.hashes,
+        id_col=id_col,
+    )
 
     # one decode pass over the exact-gate survivors only
     feats_b = _pin(
         with_audio_features(batch.join(F.broadcast(survivors), id_col))
         .where(F.col("fingerprint").isNotNull())
-        .select(id_col, "n_samples", "peak_band", "rms_bucket", "rms_bucket_hi",
-                "rms", "centroid_hz", "bands")
+        .select(id_col, *_GATE_FEATURES)
     )
     blocks_b = _pin(_block_keys(feats_b, id_col))
     verify_b = feats_b.select(
@@ -926,15 +856,7 @@ def audio_ingest_gate(
         )
 
     # -- gate 4: near within batch (greedy pairwise, min id wins) ------
-    cand_b = (
-        blocks_b.alias("a")
-        .join(
-            F.broadcast(blocks_b.alias("b")),
-            (F.col("a.bkey") == F.col("b.bkey")) & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
-        .distinct()
-    )
+    cand_b = bucket_pairs(blocks_b, ["bkey"], broadcast=True)
     near_batch = (
         _verify_pairs(
             cand_b, verify_b, verify_b,
@@ -946,20 +868,7 @@ def audio_ingest_gate(
     )
     rejects.append(near_batch)
 
-    rejected = rejects[0]
-    for r in rejects[1:]:
-        rejected = rejected.unionByName(r)
-    # gates are sequential ⇒ at most one reason per clip; the union is
-    # disjoint and the left join annotates the full batch
-    return (
-        batch.select(id_col)
-        .join(F.broadcast(rejected), id_col, "left")
-        .select(
-            bid,
-            F.coalesce(F.col("reason"), F.lit("admitted")).alias("reason"),
-        )
-        .select(bid, (F.col("reason") == "admitted").alias("admitted"), "reason")
-    )
+    return annotate_gate(batch, rejects, id_col=id_col)
 
 
 def audio_drift(

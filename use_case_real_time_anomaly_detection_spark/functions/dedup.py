@@ -11,7 +11,8 @@ Scale shape (10^12 docs):
 - minhash signatures: one token-explode + one groupBy(doc) — map-side
   partial min per band seed, so the shuffle carries one row per doc.
 - candidate pairs: explode bands (ROWS_PER_BAND signatures concatenated
-  per band) and self-join on (band, hash) — the classic LSH bucket join;
+  per band) and self-join on (band, hash) — the classic LSH bucket join,
+  ``bucket_pairs``, which every near-duplicate operator shares;
   bucket skew (giant near-dup clusters) is handled by AQE skew-join.
 - verification joins token sets only for candidate pairs (≪ n²).
 """
@@ -90,6 +91,83 @@ N_HASHES = 16
 ROWS_PER_BAND = 2
 
 
+def bucket_pairs(
+    keyed: DataFrame,
+    keys,
+    *,
+    id_col: str = "doc",
+    carry=(),
+    broadcast: bool = False,
+) -> DataFrame:
+    """The bucket self-join of every near-duplicate operator: (id_a,
+    id_b) for every two rows of ``keyed`` that agree on all ``keys``,
+    id_a < id_b, each pair once. Each ``carry`` column comes along per
+    side as ``<col>_a`` / ``<col>_b`` for the caller's verify.
+    ``broadcast`` hints the right side, for a batch-sized ``keyed``.
+    A bucket of k rows emits k(k-1)/2 candidates: the key design bounds
+    the join, and a per-bucket cap belongs here."""
+    right = keyed.alias("b")
+    if broadcast:
+        right = F.broadcast(right)
+    # keys first, then the id order: the condition the plans are built on
+    cond = None
+    for k in keys:
+        eq = F.col(f"a.{k}") == F.col(f"b.{k}")
+        cond = eq if cond is None else cond & eq
+    cond = cond & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+    return (
+        keyed.alias("a")
+        .join(right, cond)
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carry for s in "ab"],
+        )
+        .distinct()
+    )
+
+
+def hamming_band_pairs(
+    hashes: DataFrame,
+    *,
+    id_col: str,
+    hash_col: str,
+    n_bands: int,
+    band_bits: int,
+    max_hamming: int,
+) -> DataFrame:
+    """Banded-Hamming near pairs: each hash is cut into ``n_bands``
+    slices of ``band_bits`` bits (one posexploded array column, so the
+    hash pipeline runs once), the slim (doc, h, band, slice) frame is
+    pinned, ``bucket_pairs`` joins on (band, slice), and pairs with
+    bit_count(a XOR b) <= max_hamming are kept. Pigeonhole: a pair within
+    max_hamming < n_bands shares a slice. Returns (id_a, id_b, hamming)."""
+    mask = F.lit((1 << band_bits) - 1)
+    banded = _pin(
+        hashes.select(
+            F.col(id_col).alias("doc"),
+            F.col(hash_col).alias("h"),
+            F.posexplode(
+                F.array(
+                    *[
+                        F.shiftright(F.col(hash_col), k * band_bits).bitwiseAND(mask)
+                        for k in range(n_bands)
+                    ]
+                )
+            ).alias("band", "slice"),
+        )
+    )
+    return (
+        bucket_pairs(banded, ["band", "slice"], carry=["h"])
+        .select(
+            "id_a",
+            "id_b",
+            F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))).alias("hamming"),
+        )
+        .filter(F.col("hamming") <= max_hamming)
+    )
+
+
 def exact_duplicates(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -163,6 +241,12 @@ def _signatures_from_shingles(
     # b forced odd → i·b cycles through all residues (standard K-M tweak)
     b_odd = b.bitwiseOR(F.lit(1))
     hashed = t.select(F.col(id_col), a.alias("__a"), b_odd.alias("__b"))
+    return _min_hashes(hashed, id_col=id_col, n_hashes=n_hashes)
+
+
+def _min_hashes(hashed: DataFrame, *, id_col: str, n_hashes: int) -> DataFrame:
+    """Per-id K-M min-hash signature (h0..h{n-1}) from per-item (__a,
+    __b) hash bases: h_i = min over items of (__a + i·__b) mod 2³²."""
     aggs = [
         F.min(
             F.pmod(F.col("__a") + F.lit(i) * F.col("__b"), F.lit(_MH_MOD))
@@ -262,29 +346,13 @@ def minhash_lsh_pairs(
     gram string (same result, oracle computes identical gids).
     """
     hs = _pin(hashed_shingles(df, id_col=id_col, text_col=text_col, n=shingle_n))
-    aggs = [
-        F.min(
-            F.pmod(F.col("__a") + F.lit(i) * F.col("__b"), F.lit(_MH_MOD))
-        ).alias(f"h{i}")
-        for i in range(n_hashes)
-    ]
-    sig = hs.groupBy(id_col).agg(*aggs)
+    sig = _min_hashes(hs, id_col=id_col, n_hashes=n_hashes)
     banded = _pin(
         band_frame(
             sig, id_col=id_col, n_hashes=n_hashes, rows_per_band=rows_per_band
         )
     )
-    cand = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
-        .distinct()
-    )
+    cand = bucket_pairs(banded, ["band", "bh"])
     gid_items = hs.select(F.col(id_col), F.col("gid").alias("gram"))
     return set_jaccard_arrays(gid_items, cand, id_col=id_col, item_col="gram").filter(
         F.col("jaccard") >= threshold
@@ -434,9 +502,8 @@ def ngram_jaccard_pairs(
     # pinned: consumed by 5 subtrees (sizes, block ×2 join sides, verify
     # ×2) — without it each re-runs the shingle pipeline
     grams = _pin(shingles(df, id_col, text_col, n))
-    # count_distinct: duplicate doc rows must not inflate set sizes /
-    # document frequencies (see set_jaccard2)
-    sizes = grams.groupBy(id_col).agg(F.count_distinct("gram").alias("n"))
+    # count_distinct: duplicate doc rows must not inflate document
+    # frequencies (set sizes: see set_jaccard2)
     block = grams
     if max_shingle_df is not None:
         rare = (
@@ -446,42 +513,10 @@ def ngram_jaccard_pairs(
             .select("gram")
         )
         block = grams.join(rare, "gram")
-    cand = (
-        block.alias("a")
-        .join(
-            block.alias("b"),
-            (F.col("a.gram") == F.col("b.gram"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
+    cand = bucket_pairs(block, ["gram"], id_col=id_col)
     # exact Jaccard over ALL shingles (blocking affects candidates only)
-    inter = (
-        cand.join(grams.alias("ta"), cand["id_a"] == F.col(f"ta.{id_col}"))
-        .join(
-            grams.alias("tb"),
-            (cand["id_b"] == F.col(f"tb.{id_col}"))
-            & (F.col("ta.gram") == F.col("tb.gram")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count_distinct(F.col("ta.gram")).alias("overlap"))
-    )
-    return (
-        inter.join(sizes.alias("sa"), inter["id_a"] == F.col(f"sa.{id_col}"))
-        .join(sizes.alias("sb"), inter["id_b"] == F.col(f"sb.{id_col}"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(
-                F.col("overlap")
-                / (F.col("sa.n") + F.col("sb.n") - F.col("overlap")),
-                4,
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    return set_jaccard(grams, cand, id_col=id_col, item_col="gram").filter(
+        F.col("jaccard") >= threshold
     )
 
 
@@ -678,47 +713,19 @@ def simhash_near_pairs(
     max_hamming: int = 3,
     n_blocks: int = 4,
 ) -> DataFrame:
-    """Near-dup pairs by SimHash: block on byte-slices (pigeonhole — any
-    pair within max_hamming < n_blocks shares ≥1 identical block), then
-    verify exact Hamming distance via bit_count(xor).
-
-    Block values are ONE array column posexploded (single pass over the
-    signature row — no n_blocks-way union re-deriving the simhash agg per
-    branch) and the slim (doc, simhash, blk, bv) frame is pinned before
-    the self-join, so the token pipeline runs exactly once."""
-    s = simhash(df, id_col, text_col, bits)
-    width = bits // n_blocks
-    blk_arr = F.array(
-        *[
-            F.shiftright("simhash", b * width).bitwiseAND(F.lit((1 << width) - 1))
-            for b in range(n_blocks)
-        ]
+    """Near-dup pairs by SimHash: ``hamming_band_pairs`` over the packed
+    signature with ``n_blocks`` slices of ``bits // n_blocks`` bits —
+    any pair within max_hamming < n_blocks shares at least one identical
+    slice — verified by exact Hamming distance. The token pipeline runs
+    once (the banded frame is pinned before the self-join)."""
+    return hamming_band_pairs(
+        simhash(df, id_col, text_col, bits),
+        id_col=id_col,
+        hash_col="simhash",
+        n_bands=n_blocks,
+        band_bits=bits // n_blocks,
+        max_hamming=max_hamming,
     )
-    blocked = _pin(
-        s.select(
-            F.col(id_col).alias("doc"),
-            F.col("simhash"),
-            F.posexplode(blk_arr).alias("blk", "bv"),
-        )
-    )
-    pairs = (
-        blocked.alias("a")
-        .join(
-            blocked.alias("b"),
-            (F.col("a.blk") == F.col("b.blk"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("id_a"),
-            F.col("b.doc").alias("id_b"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        .distinct()
-    )
-    return pairs.filter(F.col("hamming") <= max_hamming)
 
 
 def repeated_chunks(

@@ -27,6 +27,11 @@ gate's survivors; first matching gate names the rejection reason):
    greedy rule is the right per-batch gate because it is one join
    deeper than the candidates, deterministic, and needs no iteration.
 
+Gates 1-2 (``exact_gates``) and the verdict frame (``annotate_gate``)
+are shared with the audio twin, ``audio_features.audio_ingest_gate``;
+each gate supplies its own content hash and near-duplicate blocking,
+and gate 4's candidates come from ``dedup.bucket_pairs``.
+
 Scale shape (daily increments into a 10^12-doc corpus):
 - The corpus side never recomputes signatures per batch: a
   ``SignatureIndex`` — two SLIM relations, (id, text_hash) and the
@@ -55,6 +60,7 @@ from .dedup import (
     _pin_many,
     _signatures_from_shingles,
     band_frame,
+    bucket_pairs,
     set_jaccard2,
     shingles,
 )
@@ -118,39 +124,20 @@ def dedup_gate(
     the corpus frame is still needed to verify near candidates (text
     of candidate docs only)."""
     bid = F.col(id_col)
-    # -- gate 1: within-batch exact (min id per content hash wins) -----
-    hashes_b = _pin(batch.select(bid, F.md5(F.col(text_col)).alias("text_hash")))
-    keep = hashes_b.groupBy("text_hash").agg(F.min(id_col).alias("__keep"))
-    ann = hashes_b.join(keep, "text_hash")
-    exact_batch = ann.filter(bid != F.col("__keep")).select(
-        bid, F.lit("exact-batch").alias("reason")
+    if corpus is not None and index is None:
+        index = build_signature_index(
+            corpus,
+            id_col=id_col,
+            text_col=text_col,
+            n_hashes=n_hashes,
+            rows_per_band=rows_per_band,
+            shingle_n=shingle_n,
+        )
+    rejects, survivors = exact_gates(
+        batch.select(bid, F.md5(F.col(text_col)).alias("text_hash")),
+        None if corpus is None else index.hashes,
+        id_col=id_col,
     )
-    b1 = ann.filter(bid == F.col("__keep")).select(id_col, "text_hash")
-
-    rejects = [exact_batch]
-    survivors = b1.select(id_col)
-
-    if corpus is not None:
-        if index is None:
-            index = build_signature_index(
-                corpus,
-                id_col=id_col,
-                text_col=text_col,
-                n_hashes=n_hashes,
-                rows_per_band=rows_per_band,
-                shingle_n=shingle_n,
-            )
-        # -- gate 2: exact vs corpus (stream corpus, broadcast batch) --
-        exact_corpus = (
-            index.hashes.select("text_hash")
-            .join(F.broadcast(b1), "text_hash")
-            .select(bid, F.lit("exact-corpus").alias("reason"))
-            .distinct()
-        )
-        rejects.append(exact_corpus)
-        survivors = survivors.join(
-            F.broadcast(exact_corpus.select(id_col)), id_col, "left_anti"
-        )
 
     if threshold is not None:
         # shingle/signature pipeline ONCE over the exact-gate survivors;
@@ -211,17 +198,7 @@ def dedup_gate(
             )
 
         # -- gate 4: near within batch (greedy pairwise, min id wins) --
-        cand_b = (
-            bands_b.alias("a")
-            .join(
-                F.broadcast(bands_b.alias("b")),
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bh") == F.col("b.bh"))
-                & (F.col("a.doc") < F.col("b.doc")),
-            )
-            .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
-            .distinct()
-        )
+        cand_b = bucket_pairs(bands_b, ["band", "bh"], broadcast=True)
         near_batch = (
             set_jaccard2(
                 sh_b,
@@ -238,19 +215,56 @@ def dedup_gate(
         )
         rejects.append(near_batch)
 
+    return annotate_gate(batch, rejects, id_col=id_col)
+
+
+def exact_gates(
+    hashes: DataFrame,
+    corpus_hashes: DataFrame | None,
+    *,
+    id_col: str,
+) -> tuple[list[DataFrame], DataFrame]:
+    """Gates 1-2 over the batch's (id_col, content hash) frame:
+    ``exact-batch`` (not the min-id row of its hash group) and, given
+    ``corpus_hashes``, ``exact-corpus`` (hash already in the corpus;
+    the corpus streams, the batch side is broadcast). Returns the (id,
+    reason) reject frames and the surviving batch ids."""
+    bid = F.col(id_col)
+    key = hashes.columns[1]
+    hashes_b = _pin(hashes)
+    keep = hashes_b.groupBy(key).agg(F.min(id_col).alias("__keep"))
+    ann = hashes_b.join(keep, key)
+    dups = ann.filter(bid != F.col("__keep"))
+    rejects = [dups.select(bid, F.lit("exact-batch").alias("reason"))]
+    b1 = ann.filter(bid == F.col("__keep")).select(id_col, key)
+    survivors = b1.select(id_col)
+    if corpus_hashes is not None:
+        exact_corpus = (
+            corpus_hashes.select(key)
+            .join(F.broadcast(b1), key)
+            .select(bid, F.lit("exact-corpus").alias("reason"))
+            .distinct()
+        )
+        rejects.append(exact_corpus)
+        survivors = survivors.join(
+            F.broadcast(exact_corpus.select(id_col)), id_col, "left_anti"
+        )
+    return rejects, survivors
+
+
+def annotate_gate(batch: DataFrame, rejects: list, *, id_col: str) -> DataFrame:
+    """The (id, admitted, reason) verdict over the full batch: gates are
+    sequential, so the union of the (id, reason) rejects is disjoint and
+    one broadcast left join annotates every row ('admitted' if none)."""
+    bid = F.col(id_col)
     rejected = rejects[0]
     for r in rejects[1:]:
         rejected = rejected.unionByName(r)
-    # one reason per doc even if later gates would also match: gates are
-    # sequential, so at most one fires per doc by construction — the
-    # union is disjoint; the left join annotates the full batch.
-    return batch.select(id_col).join(F.broadcast(rejected), id_col, "left").select(
-        bid,
-        F.coalesce(F.col("reason"), F.lit("admitted")).alias("reason"),
-    ).select(
-        bid,
-        (F.col("reason") == "admitted").alias("admitted"),
-        "reason",
+    return (
+        batch.select(id_col)
+        .join(F.broadcast(rejected), id_col, "left")
+        .select(bid, F.coalesce(F.col("reason"), F.lit("admitted")).alias("reason"))
+        .select(bid, (F.col("reason") == "admitted").alias("admitted"), "reason")
     )
 
 

@@ -665,59 +665,27 @@ def image_dup_pairs(
     id_col: str = "item_id",
     hash_col: str = "dhash",
 ) -> DataFrame:
-    """Near-duplicate image pairs by banded dHash blocking.
-
-    Scale shape (the audio_dup / minhash discipline — bucketed, never
-    all-pairs): each fingerprint explodes into 9 seven-bit band keys; only
-    rows sharing a (band_idx, band_val) bucket join, and the pigeonhole
-    bound guarantees every pair with hamming ≤ 8 shares a band, so
-    max_hamming ≤ 8 has perfect recall. The frame that shuffles carries
-    (id, hash, band) longs only — never pixels. Verify is row-local JVM
-    bit math: bit_count(a XOR b) ≤ max_hamming.
+    """Near-duplicate image pairs by banded dHash blocking:
+    ``dedup.hamming_band_pairs`` over the 63-bit dHash cut into
+    DHASH_BANDS slices of DHASH_BAND_BITS bits. The pigeonhole bound
+    guarantees every pair with hamming < DHASH_BANDS shares a slice, so
+    max_hamming <= DHASH_BANDS - 1 has perfect recall; the frame that
+    shuffles carries (id, hash, band) longs only — never pixels.
     Returns (id_a, id_b, hamming), id_a < id_b, each pair once."""
+    from .dedup import hamming_band_pairs
+
     if not (0 <= max_hamming <= DHASH_BANDS - 1):
         raise ValueError(
             f"max_hamming must be in [0, {DHASH_BANDS - 1}] for guaranteed "
             f"recall with {DHASH_BANDS} bands, got {max_hamming}"
         )
-    f = fingerprints.filter(F.col(hash_col).isNotNull()).select(
-        F.col(id_col).alias("id"), F.col(hash_col).alias("h")
-    )
-    bands = f.select(
-        "id",
-        "h",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("h"), DHASH_BAND_BITS * k).bitwiseAND(
-                        F.lit((1 << DHASH_BAND_BITS) - 1)
-                    )
-                    for k in range(DHASH_BANDS)
-                ]
-            )
-        ).alias("band_idx", "band_val"),
-    )
-    x, y = bands.alias("x"), bands.alias("y")
-    cand = (
-        x.join(
-            y,
-            (F.col("x.band_idx") == F.col("y.band_idx"))
-            & (F.col("x.band_val") == F.col("y.band_val"))
-            & (F.col("x.id") < F.col("y.id")),
-        )
-        .select(
-            F.col("x.id").alias("id_a"),
-            F.col("y.id").alias("id_b"),
-            F.col("x.h").alias("ha"),
-            F.col("y.h").alias("hb"),
-        )
-        .distinct()
-    )
-    ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    return (
-        cand.withColumn("hamming", ham.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+    return hamming_band_pairs(
+        fingerprints.filter(F.col(hash_col).isNotNull()),
+        id_col=id_col,
+        hash_col=hash_col,
+        n_bands=DHASH_BANDS,
+        band_bits=DHASH_BAND_BITS,
+        max_hamming=max_hamming,
     )
 
 

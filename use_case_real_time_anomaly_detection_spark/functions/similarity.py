@@ -358,7 +358,7 @@ def neardup_pairs_lsh(
     One band's recall for a pair at angle θ is (1-θ/π)^n_planes; b
     bands lift it to 1-(1-r)^b. At threshold 0.9 (θ≈0.451 rad),
     n_planes=6 / bands=8 gives ≈0.98 expected recall — measured ≥0.95
-    in tests/test_similarity.py. The band join is a single equi-join on
+    in tests/test_similarity.py. The band join is ``dedup.bucket_pairs`` on
     (band, bucket): no cross product, shuffle volume bands × ids (ids
     only — vectors are re-joined per side for the verify, so the heavy
     array column never fans out with the bands).
@@ -381,6 +381,8 @@ def neardup_pairs_lsh(
     Bit-identical output: members of a group share the rep's vector, so
     every expanded pair's cosine equals what the uncollapsed run computes.
     """
+    from .dedup import bucket_pairs
+
     if dim is None:
         dim = _probe_dim(emb, vec_col)
     if dim is None:  # empty input → no pairs, same schema
@@ -411,13 +413,8 @@ def neardup_pairs_lsh(
     banded = emb.select(
         F.col(id_col).alias("id"), F.posexplode(bucket_arr).alias("band", "bucket")
     ).localCheckpoint()
-    a = banded.select("band", "bucket", F.col("id").alias("a_id"))
-    b_ = banded.select("band", "bucket", F.col("id").alias("b_id"))
-    cand = (
-        a.join(b_, ["band", "bucket"])
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select("a_id", "b_id")
-        .distinct()
+    cand = bucket_pairs(banded, ["band", "bucket"], id_col="id").select(
+        F.col("id_a").alias("a_id"), F.col("id_b").alias("b_id")
     )
     va = emb.select(F.col(id_col).alias("a_id"), F.col(vec_col).alias("a_vec"))
     vb = emb.select(F.col(id_col).alias("b_id"), F.col(vec_col).alias("b_vec"))

@@ -21,6 +21,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
 class SchemaMismatch(ValueError):
@@ -97,6 +98,20 @@ CLIPS_TABLE_SCHEMA = TableSchema(
     ),
     allow_extra=True,  # layout columns (partition_key, seq) may be present
 )
+
+
+def with_partition_cols(df: DataFrame, key_col: str = "clip_id") -> DataFrame:
+    """Derive the layout columns (partition_key, seq) from a key that
+    follows the id contract c{part:03d}-{seq:09d} (clip_id by default;
+    any modality table whose key uses the same scheme — e.g. the video
+    table's item_id — passes its own key column). Each column is
+    derived only when absent, so a table's own value is never
+    overwritten."""
+    if "partition_key" not in df.columns:
+        df = df.withColumn("partition_key", F.substring(key_col, 1, 4))
+    if "seq" not in df.columns:
+        df = df.withColumn("seq", F.substring(key_col, 6, 9).cast("long"))
+    return df
 
 
 def check_schema(df: DataFrame, schema: TableSchema) -> list[str]:

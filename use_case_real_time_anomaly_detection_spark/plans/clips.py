@@ -34,7 +34,8 @@ from ..operators.rules import (
     ValueSetRule,
     ZScoreRule,
 )
-from ..sources.synth import SynthSpec, frontier_of, generate_clips, generate_manifest, with_partition_cols
+from ..operators.schema import with_partition_cols
+from ..sources.synth import SynthSpec, frontier_of, generate_clips, generate_manifest
 
 
 def default_rules(*, with_audio: bool = True, seed: int = 42) -> list:

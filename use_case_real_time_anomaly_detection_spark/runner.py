@@ -548,7 +548,7 @@ def main(argv: list[str] | None = None) -> int:
         drift_cols = [r.column for r in rules if isinstance(r, _DriftRule)]
         if drift_cols and store.catalog.exists("profile_state"):
             from .functions.stats import bounds_from_states
-            from .sources.synth import with_partition_cols as _wpc
+            from .operators.schema import with_partition_cols as _wpc
 
             states = store.catalog.read("profile_state").drop("pk")
             state_parts = {
@@ -633,7 +633,7 @@ def main(argv: list[str] | None = None) -> int:
     # column-pruned to the slim metadata columns.
     if args.sample is None:
         from .functions.stats import profile_state
-        from .sources.synth import with_partition_cols
+        from .operators.schema import with_partition_cols
 
         keyed = with_partition_cols(clips, key_col=args.key_col)
         validated = (

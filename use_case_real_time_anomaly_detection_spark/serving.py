@@ -227,6 +227,22 @@ class EventStore:
         self._seq += n
         return base
 
+    def _in_file_schema(self, rows: DataFrame) -> DataFrame:
+        """Parsed (event_id, id, ts, value) rows in the store's file
+        schema, so the snapshot's re-read keeps every value: a
+        driver-shaped store keys sensors as ``user_id`` and may hold
+        columns the Events API does not fill (written NULL). A new store,
+        or one with the rows' own columns, takes the rows as they are."""
+        if self._file_schema is None or set(self._file_schema.names) == set(rows.columns):
+            return rows
+        cols = {"user_id": F.col("id"), **{c: F.col(c) for c in rows.columns}}
+        return rows.select(
+            *[
+                cols.get(f.name, F.lit(None)).cast(f.dataType).alias(f.name)
+                for f in self._file_schema.fields
+            ]
+        )
+
     def append_ndjson(self, body: str) -> tuple[int, int]:
         lines = [ln for ln in body.splitlines() if ln.strip()]
         if not lines:
@@ -267,7 +283,7 @@ class EventStore:
             ).first()
             quarantined = len(lines) - n_ok
             if n_ok:
-                ok.write.mode("append").parquet(self.path)
+                self._in_file_schema(ok).write.mode("append").parquet(self.path)
                 if self._file_schema is None:
                     self._file_schema = ok.schema
                 df = self.spark.read.schema(self._file_schema).parquet(self.path)

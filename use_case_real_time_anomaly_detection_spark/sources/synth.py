@@ -30,7 +30,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -1181,18 +1180,6 @@ def generate_manifest(spark: SparkSession, spec: SynthSpec = SynthSpec()) -> Dat
         spark.range(spec.partitions)
         .repartition(spec.partitions, "id")
         .mapInPandas(gen, MANIFEST_SCHEMA)
-    )
-
-
-def with_partition_cols(df: DataFrame, key_col: str = "clip_id") -> DataFrame:
-    """Derive (partition_key, seq) from a key following the id contract
-    c{part:03d}-{seq:09d} (clip_id by default; any modality table whose
-    key uses the same scheme — e.g. the video table's item_id — passes
-    its own key column). Tables already carrying both columns skip this."""
-    if "partition_key" in df.columns and "seq" in df.columns:
-        return df
-    return df.withColumn("partition_key", F.substring(key_col, 1, 4)).withColumn(
-        "seq", F.substring(key_col, 6, 9).cast("long")
     )
 
 

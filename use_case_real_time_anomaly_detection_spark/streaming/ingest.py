@@ -114,7 +114,6 @@ def stream_corpus_ingest(
     *,
     checkpoint_dir: str,
     threshold: float | None = 0.5,
-    available_now: bool = True,
     on_batch=None,
     **gate_params,
 ):
@@ -131,16 +130,13 @@ def stream_corpus_ingest(
         if on_batch is not None:
             on_batch(gate, batch_id)
 
-    writer = (
+    return (
         doc_stream.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 minute")
-    return writer.start()
 
 
 # ---------------------------------------------------------------------------
@@ -223,7 +219,6 @@ def stream_clip_ingest(
     catalog: ParquetCatalog,
     *,
     checkpoint_dir: str,
-    available_now: bool = True,
     on_batch=None,
     **gate_params,
 ):
@@ -237,13 +232,10 @@ def stream_clip_ingest(
         if on_batch is not None:
             on_batch(gate, batch_id)
 
-    writer = (
+    return (
         clip_stream.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 minute")
-    return writer.start()

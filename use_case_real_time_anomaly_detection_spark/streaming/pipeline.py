@@ -6,9 +6,10 @@ streams events in (ST1); copy pipes run per minute appending detections
 at-least-once → exactly-once (ST3, quirk §2.8.4).
 
 Spark mapping: Structured Streaming `foreachBatch` with
-Trigger.AvailableNow (drain-everything-then-stop; the scheduled-batch
-analog of a cron tick) or ProcessingTime for a long-lived job. Inside
-each micro-batch the SAME batch detectors run (plans/copylog.py) — one
+Trigger.AvailableNow — every stream starter drains what has landed and
+stops, the scheduled-batch analog of a cron tick and the runner's
+per-invocation contract (the scheduler, not a long-lived query, sets
+the cadence). Inside each micro-batch the SAME batch detectors run (plans/copylog.py) — one
 code path for batch and streaming, the Spark-idiomatic replacement for
 the reference's five separate scheduled SQL jobs.
 """
@@ -46,7 +47,6 @@ def stream_clips_validation(
     checkpoint_dir: str,
     key_col: str = "clip_id",
     rules: list | None = None,
-    available_now: bool = True,
     quarantine: bool = False,
     fail_threshold: float = 0.0,
     profile: bool = False,
@@ -100,7 +100,7 @@ def stream_clips_validation(
     history accumulates one row per cycle in the lineage table.
     """
     from ..plans.clips import default_rules, validate_table
-    from ..sources.synth import with_partition_cols
+    from ..operators.schema import with_partition_cols
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -195,16 +195,13 @@ def stream_clips_validation(
             store.record_drift_batch(flags, batch_id)
         res.unpersist()
 
-    writer = (
+    return (
         clip_stream.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 minute")
-    return writer.start()
 
 
 def dedup_log_stream(
@@ -246,7 +243,6 @@ def stream_dedup_log(
     checkpoint_dir: str,
     keys: tuple = ("ts", "id", "anomaly_type"),
     delay: str = "61 seconds",
-    available_now: bool = True,
 ):
     """Wire an at-least-once violations-log stream through the native
     watermark dedup into an exactly-once parquet sink — the streaming MV
@@ -254,18 +250,15 @@ def stream_dedup_log(
     pipeline. The file-sink + checkpoint pair makes replays idempotent
     end-to-end: re-delivered rows are dropped by the dedup state, and a
     replayed micro-batch is skipped by the sink's commit log."""
-    writer = (
+    return (
         dedup_log_stream(log_stream, keys=keys, delay=delay)
         .writeStream.format("parquet")
         .option("path", out_path)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 minute")
-    return writer.start()
 
 
 def stream_violations(
@@ -273,7 +266,6 @@ def stream_violations(
     sink_append,
     *,
     checkpoint_dir: str,
-    available_now: bool = True,
     **detector_params,
 ):
     """Wire a streaming events source to the detection cycle.
@@ -296,13 +288,10 @@ def stream_violations(
             )
         run_copy_cycle(batch_df, sink_append, **detector_params)
 
-    writer = (
+    return (
         event_stream.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime="1 minute")  # ≙ COPY_SCHEDULE
-    return writer.start()
