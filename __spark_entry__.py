@@ -22,6 +22,7 @@ Parameter conventions (shared by Spark + SQL sides):
 from __future__ import annotations
 
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -883,7 +884,9 @@ def _q_get_anomalies(spark, sf):
 #   audio-decode rule — not SQL-expressible, rows-only here, exact
 #   oracles in tests/test_clips_engine.py + tests/test_audio.py.
 
-_ORACLE_DIR = "/root/repo/dist/oracle"
+# the oracle twins live under THIS checkout, so a second checkout
+# tests (and caches) its own tree
+_ORACLE_DIR = str(Path(__file__).resolve().parent / "dist" / "oracle")
 _CLIPS_META = f"{_ORACLE_DIR}/clips_meta.parquet"
 _CLIPS_MAN = f"{_ORACLE_DIR}/manifest.parquet"
 _CLIPS_AUDIO = f"{_ORACLE_DIR}/clips_audio_violations.parquet"

@@ -8,11 +8,13 @@ same comparison the driver does at sf0.01.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# this checkout, not any other on the machine
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from tools.parity_check import TABLES, normalize  # noqa: E402

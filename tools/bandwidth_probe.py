@@ -21,6 +21,9 @@ import json
 import subprocess
 import sys
 import time
+from pathlib import Path
+
+REPO = str(Path(__file__).resolve().parents[1])
 
 CPU_CODE = """
 import numpy as np, time
@@ -52,7 +55,7 @@ def fanout(code: str, procs: int) -> list[float]:
 def arrow_probe(data_dir: str, cores: int) -> float:
     code = f"""
 import sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {REPO!r})
 import pyarrow as pa
 from use_case_real_time_anomaly_detection_spark.session import get_spark
 spark = get_spark("local[{cores}]", extra_confs={{

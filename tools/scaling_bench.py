@@ -33,8 +33,10 @@ import os
 import subprocess
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = str(Path(__file__).resolve().parents[1])
+sys.path.insert(0, REPO)
 
 # Big enough that parallel audio work dominates fixed costs (JVM/codegen/
 # python-worker spawn, per-stage scheduling — ~5-10 s in total): ~1.43M
@@ -193,7 +195,7 @@ def main() -> None:
         spark.stop()
 
     if proc_only:
-        with open("/root/repo/BENCH/scaling.json") as f:
+        with open(f"{REPO}/BENCH/scaling.json") as f:
             prev = json.load(f)
         results = {
             4: {"seconds": prev["proc_pair"]["seconds_N"], "clips": prev["clips"]}
@@ -212,7 +214,7 @@ def main() -> None:
         for _ in range(3):
             out = subprocess.run(
                 [sys.executable, os.path.abspath(__file__), "--worker", "4", DATA_DIR],
-                capture_output=True, text=True, cwd="/root/repo", timeout=1800,
+                capture_output=True, text=True, cwd=REPO, timeout=1800,
             )
             lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
             if not lines:
@@ -247,7 +249,7 @@ def main() -> None:
                 [sys.executable, os.path.abspath(__file__), "--worker", str(cpus), DATA_DIR],
                 capture_output=True,
                 text=True,
-                cwd="/root/repo",
+                cwd=REPO,
                 timeout=1800,
             )
             lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
@@ -279,7 +281,7 @@ def _run_proc_pair_and_finish(results, samples, levels, reps, prev) -> None:
                 [sys.executable, os.path.abspath(__file__), "--worker", "4",
                  DATA_DIR, str(i), "4"],
                 stdout=subprocess.PIPE, stderr=subprocess.DEVNULL,
-                text=True, cwd="/root/repo",
+                text=True, cwd=REPO,
             )
             for i in range(4)
         ]
@@ -331,13 +333,13 @@ def _run_proc_pair_and_finish(results, samples, levels, reps, prev) -> None:
         "peak_clips_per_sec": round(max(thr.values()), 1),
     }
     _write_report(summary)
-    with open("/root/repo/BENCH/scaling.json", "w") as f:
+    with open(f"{REPO}/BENCH/scaling.json", "w") as f:
         json.dump(summary, f)
     print(json.dumps(summary))
 
 
 def _write_report(s: dict) -> None:
-    os.makedirs("/root/repo/BENCH", exist_ok=True)
+    os.makedirs(f"{REPO}/BENCH", exist_ok=True)
     rows = "\n".join(
         f"| local[{p['N_cores']}] → local[{p['4N_cores']}] (threads) | {p['seconds_N']} s | {p['seconds_4N']} s "
         f"| {p['throughput_N_clips_per_sec']:,} | {p['throughput_4N_clips_per_sec']:,} "
@@ -349,7 +351,7 @@ def _write_report(s: dict) -> None:
         f"\n| 1 executor JVM → 4 executor JVMs (local[4] each) | {pp['seconds_N']} s "
         f"| {pp['seconds_4N']} s | — | — | **{pp['scaling_efficiency']}** |"
     )
-    with open("/root/repo/BENCH/BASELINE.md", "w") as f:
+    with open(f"{REPO}/BENCH/BASELINE.md", "w") as f:
         f.write(f"""# BENCH/BASELINE — two-parallelism-level scaling evidence
 
 North rule: throughput scaling efficiency >= 0.8 from N to 4N executors.

@@ -14,8 +14,14 @@ aggregation (no UDFs).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+import operator
+from functools import reduce
+from itertools import accumulate
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StructField, StructType
 
 from ..operators.rules import ProfileSpec
 
@@ -166,9 +172,102 @@ def corr_profile(
                 r.alias("pearson_r"),
             )
         )
-    from functools import reduce as _reduce
+    return reduce(DataFrame.unionByName, parts)
 
-    return _reduce(DataFrame.unionByName, parts)
+
+def drift_bin_edges(bounds, bins: int) -> tuple[float, float]:
+    """(lo, width) of the fixed equal-width grid over ``bounds``; a
+    degenerate range (hi <= lo) widens to one unit so every bin is
+    well-defined."""
+    lo, hi = float(bounds[0]), float(bounds[1])
+    if hi <= lo:
+        hi = lo + 1.0
+    return lo, (hi - lo) / bins
+
+
+def drift_histogram(column: str, lo: float, width: float, bins: int) -> Column:
+    """Aggregate: the dense per-bin count array of ``column`` on the grid
+    (lo, width, bins), NULLs excluded. Both ends clamp: callers may pass
+    bounds from an external source (profile state, column stats) that is
+    narrower than the live data, and such rows must land in the edge
+    bins instead of vanishing."""
+    v = F.col(column).cast("double")
+    # greatest/least SKIP nulls, so the NULL guard must be explicit
+    b = F.when(
+        v.isNotNull(),
+        F.greatest(
+            F.lit(0),
+            F.least(F.lit(bins - 1), F.floor((v - F.lit(lo)) / F.lit(width))),
+        ),
+    )
+    return F.array(*[F.count(F.when(b == i, 1)) for i in range(bins)])
+
+
+def _median(values) -> float:
+    """Spark ``percentile(x, 0.5D)``: linear interpolation between the
+    order statistics around position (n - 1) / 2."""
+    v = sorted(values)
+    pos = (len(v) - 1) * 0.5
+    lo, hi = math.floor(pos), math.ceil(pos)
+    if lo == hi or v[lo] == v[hi]:
+        return v[lo]
+    return (hi - pos) * v[lo] + (pos - lo) * v[hi]
+
+
+def _sum_in_order(xs) -> float:
+    # plain left-to-right IEEE adds in bin order (no compensated sum)
+    return reduce(operator.add, xs, 0.0)
+
+
+def score_drift(hists) -> list[tuple]:
+    """KS + PSI + W1 per partition from dense per-bin histograms, on the
+    driver: ``hists`` yields (partition_key, counts, bin_width) with one
+    count per bin; returns [(partition_key, psi, ks, w1)].
+
+    - Laplace-smoothed fractions p = (n + 0.5) / (N + 0.5 * bins);
+    - baseline q = per-bin MEDIAN of partition fractions (Spark
+      ``percentile`` interpolation), renormalized — robust to a minority
+      of drifted partitions, which a global mixture baseline would be
+      contaminated by;
+    - PSI = Σ (p - q) ln(p / q); KS = max |CDF_p - CDF_q|;
+    - W1 (Wasserstein-1 / earth-mover) = Σ |CDF_p - CDF_q| · bin_width —
+      the SCALE-AWARE complement: PSI and KS saturate once supports stop
+      overlapping (a 1-bin shift and a 10-bin shift both score KS ≈ 1),
+      while W1 keeps growing with HOW FAR the mass moved, in the column's
+      own units (both CDFs end at 1, so summing over all bins is exact).
+
+    Every sum runs in bin order. A partition whose counts are all zero
+    (its column is entirely NULL) has no distribution and is omitted; it
+    does not enter the baseline either. O(partitions × bins).
+    """
+    rows = [(pk, c, w) for pk, c, w in hists if any(c)]
+    if not rows:
+        return []
+    ps = [
+        [(n + 0.5) / (sum(c) + 0.5 * len(c)) for n in c] for _, c, _ in rows
+    ]
+    qraw = [_median(col) for col in zip(*ps, strict=True)]
+    qsum = _sum_in_order(qraw)
+    q = [x / qsum for x in qraw]
+    qcum = list(accumulate(q))
+    out = []
+    for (pk, _, width), p in zip(rows, ps):
+        dcdf = [abs(a - b) for a, b in zip(accumulate(p), qcum)]
+        psi = _sum_in_order((pi - qi) * math.log(pi / qi) for pi, qi in zip(p, q))
+        out.append((pk, psi, max(dcdf), _sum_in_order(dcdf) * width))
+    return out
+
+
+def drift_frame(spark, scores: list[tuple], key_type) -> DataFrame:
+    """``score_drift`` rows as a (partition_key, psi, ks, w1) frame
+    planned as a LocalRelation (no scan, no Python worker)."""
+    from ..session import local_frame
+
+    schema = StructType([
+        StructField("partition_key", key_type),
+        *[StructField(c, DoubleType()) for c in ("psi", "ks", "w1")],
+    ])
+    return local_frame(spark, schema, scores)
 
 
 def drift_scores(
@@ -179,105 +278,44 @@ def drift_scores(
     bins: int = 20,
     bounds: tuple[float, float] | None = None,
 ) -> DataFrame:
-    """Per-partition KS + PSI of `column` vs a robust consensus baseline.
+    """Per-partition KS + PSI + W1 of `column` vs a robust consensus
+    baseline (the math of :func:`score_drift`).
 
     The engine's drift math (operators/compiler.py DriftRule), exposed as
     a standalone operator so any table/axis can be scored and so the
     DuckDB oracle can verify it SQL-side (__spark_entry__.drift_events):
-
-    - fixed equal-width bins over the global [min, max] (one cheap
-      column-pruned driver agg fixes the edges);
-    - per (partition, bin) counts — map-side partial agg, then a dense
-      grid so empty buckets participate;
-    - Laplace-smoothed fractions p = (n + 0.5) / (N + 0.5 * bins);
-    - baseline q = per-bin MEDIAN of partition fractions, renormalized
-      (robust to a minority of drifted partitions — a global mixture
-      baseline would be contaminated by the very partitions under test);
-    - PSI = Σ (p - q) ln(p / q); KS = max |CDF_p - CDF_q|;
-    - W1 (Wasserstein-1 / earth-mover) = Σ |CDF_p - CDF_q| · bin_width —
-      the SCALE-AWARE complement: PSI and KS saturate once supports
-      stop overlapping (a 1-bin shift and a 10-bin shift both score
-      KS ≈ 1), while W1 keeps growing with HOW FAR the mass moved, in
-      the column's own units (the standard discrete identity
-      W1 = ∫|CDF_p − CDF_q|; both CDFs end at 1, so the last bin
-      contributes ~0 and summing over all bins is exact).
+    fixed equal-width bins over the global [min, max] (one cheap
+    column-pruned driver agg fixes the edges, unless ``bounds`` is
+    given), then ONE grouped action collects a dense per-bin count array
+    per partition, scored on the driver.
 
     Returns (partition_key, psi, ks, w1) for ALL partitions
     (thresholding is the caller's policy). NULLs in `column` are
-    excluded.
+    excluded. Eager: both actions run before this returns.
     """
-    from pyspark.sql import Window
-
     spark = df.sparkSession
-    src = df.filter(F.col(column).isNotNull())
+    key_type = df.schema[partition_col].dataType
     if bounds is None:
-        # one cheap column-pruned driver agg fixes the bin edges; callers
-        # scoring several columns can batch these into a single agg and
-        # pass `bounds` (operators/compiler.py does)
-        mm = src.agg(F.min(column).alias("lo"), F.max(column).alias("hi")).collect()[0]
+        mm = (
+            df.filter(F.col(column).isNotNull())
+            .agg(F.min(column).alias("lo"), F.max(column).alias("hi"))
+            .collect()[0]
+        )
         bounds = (mm["lo"], mm["hi"])
     if bounds[0] is None:
         # all-NULL column: keep the FULL result schema (incl. w1) so a
         # DriftRule with any fence set degrades to zero violations
         # instead of an UNRESOLVED_COLUMN crash downstream
-        return spark.createDataFrame(
-            [], "partition_key string, psi double, ks double, w1 double"
-        )
-    lo, hi = float(bounds[0]), float(bounds[1])
-    if hi <= lo:
-        hi = lo + 1.0
-    width = (hi - lo) / bins
-
-    binned = src.select(
-        F.col(partition_col).alias("pk"),
-        # clamp BOTH ends: callers may pass `bounds` from an external
-        # source (profile state, column stats) that is narrower than the
-        # live data — without the floor-at-0 clamp such rows would land
-        # in negative bins and silently vanish at the dense-grid join
-        F.greatest(
-            F.lit(0),
-            F.least(
-                F.lit(bins - 1),
-                F.floor((F.col(column).cast("double") - F.lit(lo)) / F.lit(width)),
-            ),
-        ).alias("bin"),
+        return drift_frame(spark, [], key_type)
+    lo, width = drift_bin_edges(bounds, bins)
+    hists = (
+        df.groupBy(F.col(partition_col).alias("pk"))
+        .agg(drift_histogram(column, lo, width, bins).alias("h"))
+        .collect()
     )
-    # pin the histogram: ≤ partitions × bins rows, but consumed by FIVE
-    # downstream subtrees (pks, grid join, median baseline ×2, cum sums)
-    # — Catalyst does no cross-branch CSE, so without this every branch
-    # re-scans the source column (measured: 6 FileScans per drift column)
-    part_counts = (
-        binned.groupBy("pk", "bin")
-        .agg(F.count(F.lit(1)).alias("pn"))
-        .localCheckpoint()
+    return drift_frame(
+        spark, score_drift((r["pk"], r["h"], width) for r in hists), key_type
     )
-    pks = part_counts.select("pk").distinct()
-    bins_df = spark.range(bins).select(F.col("id").alias("bin"))
-    grid = pks.crossJoin(F.broadcast(bins_df))
-    h = grid.join(part_counts, ["pk", "bin"], "left").fillna(0, subset=["pn"])
-    wpk = Window.partitionBy("pk")
-    h = h.withColumn("pt", F.sum("pn").over(wpk))
-    h = h.withColumn("p", (F.col("pn") + 0.5) / (F.col("pt") + 0.5 * bins))
-    med = h.groupBy("bin").agg(F.expr("percentile(p, 0.5D)").alias("qraw"))
-    med = med.crossJoin(F.broadcast(med.agg(F.sum("qraw").alias("qsum")))).select(
-        "bin", (F.col("qraw") / F.col("qsum")).alias("q")
-    )
-    h = h.join(F.broadcast(med), "bin")
-    h = h.withColumn(
-        "psi_term", (F.col("p") - F.col("q")) * F.log(F.col("p") / F.col("q"))
-    )
-    wcum = Window.partitionBy("pk").orderBy("bin")
-    h = h.withColumn("pcum", F.sum("p").over(wcum)).withColumn(
-        "qcum", F.sum("q").over(wcum)
-    )
-    return h.groupBy("pk").agg(
-        F.sum("psi_term").alias("psi"),
-        F.max(F.abs(F.col("pcum") - F.col("qcum"))).alias("ks"),
-        # Σ|ΔCDF| first, ONE multiply by the width last — the same IEEE
-        # op order as drift_from_states' state path, so the two stay
-        # bit-comparable under the parity test
-        (F.sum(F.abs(F.col("pcum") - F.col("qcum"))) * F.lit(width)).alias("w1"),
-    ).select(F.col("pk").alias("partition_key"), "psi", "ks", "w1")
 
 
 def categorical_scores(
@@ -673,72 +711,41 @@ def drift_from_states(states: DataFrame, column: str) -> DataFrame:
     is a full-corpus scan per drift check. The checkpointed state table
     (profile_state's `{column}__hist`, maintained per validated
     partition by every runner invocation) already holds the fixed-grid
-    per-partition histograms, so the entire drift computation collapses
-    to O(partitions x bins) rows of arithmetic over the slim state
-    table. The scoring math is drift_scores' stage-for-stage: Laplace
-    smoothing (n + 0.5)/(N + 0.5*bins), per-bin median consensus
-    baseline renormalized, PSI = Σ(p-q)ln(p/q), KS = max |ΔCDF| —
-    parity with drift_scores over the same grid is test-asserted.
+    per-partition histograms, so the drift check collects
+    O(partitions x bins) counts from the slim state table and scores
+    them through the same driver-side :func:`score_drift` — parity with
+    drift_scores over the same grid is test-asserted.
 
     The one semantic difference is the GRID: drift_scores bins over the
     current run's global [min, max]; the state grid is the FIXED
     (lo, hi, nbins) declared when the state was first written (the
     merge contract). Fixed grids are what make run-over-run drift
     comparable anyway — the bounds travel inside the state
-    (`{column}__hlo/__hhi`), self-describing.
+    (`{column}__hlo/__hhi`), self-describing, and the bin count is the
+    stored array's length.
 
-    Bin count is derived from the stored array per partition (no
-    driver probe, no parameter to keep in sync).
+    State rows with a NULL histogram (the column was never
+    histogram-profiled for that partition) are skipped, and all-zero
+    histograms are omitted by the scorer, as drift_scores omits an
+    all-NULL partition.
     """
-    from pyspark.sql import Window
-
-    # NULL-hist state rows (the column was never histogram-profiled for
-    # that partition) would be SILENTLY dropped by posexplode; filter them
-    # explicitly so the omission is a stated contract, not an accident.
-    h = states.filter(F.col(f"{column}__hist").isNotNull()).select(
-        F.col("partition_key").alias("pk"),
-        F.posexplode(F.col(f"{column}__hist")).alias("bin", "pn"),
-        # the self-describing grid bounds ride along so W1 can be
-        # expressed in the column's own units (bin_width = (hi-lo)/nb)
-        F.col(f"{column}__hlo").alias("hlo"),
-        F.col(f"{column}__hhi").alias("hhi"),
-    )
-    # the stored array is dense (every bin present, zeros included), so
-    # no grid join is needed; nb == nbins recovers the smoothing constant
-    wpk = Window.partitionBy("pk")
-    h = h.withColumn("pt", F.sum("pn").over(wpk)).withColumn(
-        "nb", F.count("pn").over(wpk)
-    )
-    # degenerate states: a partition whose histogram is all zeros (the
-    # column was entirely NULL there) has no distribution to score —
-    # drift_scores omits such partitions (no rows survive its binning),
-    # so omit them here too instead of scoring a uniform smoothed p that
-    # would also contaminate the median consensus baseline
-    h = h.filter(F.col("pt") > 0)
-    h = h.withColumn("p", (F.col("pn") + 0.5) / (F.col("pt") + 0.5 * F.col("nb")))
-    med = h.groupBy("bin").agg(F.expr("percentile(p, 0.5D)").alias("qraw"))
-    med = med.crossJoin(F.broadcast(med.agg(F.sum("qraw").alias("qsum")))).select(
-        "bin", (F.col("qraw") / F.col("qsum")).alias("q")
-    )
-    h = h.join(F.broadcast(med), "bin")
-    h = h.withColumn(
-        "psi_term", (F.col("p") - F.col("q")) * F.log(F.col("p") / F.col("q"))
-    )
-    wcum = Window.partitionBy("pk").orderBy("bin")
-    h = h.withColumn("pcum", F.sum("p").over(wcum)).withColumn(
-        "qcum", F.sum("q").over(wcum)
-    )
-    # same op order as drift_scores: Σ|ΔCDF| first, one multiply by the
-    # (per-state, self-described) bin width last
-    width = (F.first("hhi") - F.first("hlo")) / F.first("nb")
-    return (
-        h.groupBy("pk")
-        .agg(
-            F.sum("psi_term").alias("psi"),
-            F.max(F.abs(F.col("pcum") - F.col("qcum"))).alias("ks"),
-            (F.sum(F.abs(F.col("pcum") - F.col("qcum"))) * width).alias("w1"),
+    rows = (
+        states.filter(F.col(f"{column}__hist").isNotNull())
+        .select(
+            "partition_key",
+            F.col(f"{column}__hist").alias("h"),
+            F.col(f"{column}__hlo").alias("lo"),
+            F.col(f"{column}__hhi").alias("hi"),
         )
-        .select(F.col("pk").alias("partition_key"), "psi", "ks", "w1")
+        .collect()
+    )
+    return drift_frame(
+        states.sparkSession,
+        score_drift(
+            (r["partition_key"], r["h"], (r["hi"] - r["lo"]) / len(r["h"]))
+            for r in rows
+        ),
+        states.schema["partition_key"].dataType,
     )
 
 

@@ -5,6 +5,16 @@ independent SQL queries re-run every minute; its docs call out the cost of
 that — reference: content/copies-pipes.md:13). Here ALL rules over a table
 compile into ONE plan that Catalyst can optimize as a whole:
 
+at compile time, one collected partition-stats action (_partition_stats):
+ └─ ONE groupBy(partition).agg over the column-pruned pre-payload frame:
+     row count (rows_checked, volume fences), IQR quartiles, latest
+     seq/key (staleness) and a dense per-bin count array per drift
+     column; the rows come back as a LocalRelation and drift is scored
+     on the driver (functions/stats.score_drift). A drift column whose
+     bin edges are not given costs one more min/max collect, shared by
+     every such column.
+
+the lazy violations plan:
 scan (column-pruned: only referenced columns are read)
  ├─ the payload pass (audio, image or video decode, only if requested):
  │   one zero-copy functions/payload.map_payloads Arrow pass; it consumes
@@ -13,15 +23,17 @@ scan (column-pruned: only referenced columns are read)
  ├─ one Window pass over (partition, seq) (covers rate-of-change, gap,
  │   rolling z-score — all window columns share the same WindowSpec, so
  │   Spark evaluates them in a single Window exec → a single shuffle)
- ├─ one broadcast join of per-partition IQR fences (tiny agg side,
- │   ≙ reference JOIN stats ON id — tinybird/pipes/iqr.pipe:49-50 — which
- │   we broadcast because stats has ≤1 row per partition)
+ ├─ one broadcast join of the per-partition IQR fences from the stats
+ │   rows (≙ reference JOIN stats ON id — tinybird/pipes/iqr.pipe:49-50 —
+ │   broadcast because stats has ≤1 row per partition)
  └─ fused violation projection: each row-local/window rule contributes a
      WHEN(cond, struct(...)) element; array_compact + explode emits the
      violation rows in the same stage (no extra scan per rule).
 
-Table-level rules (unique, drift) aggregate instead of scanning per-row
-and are unioned into the same violations output.
+Staleness, volume and drift violations are projections of the stats rows;
+other table-level rules (unique, aggregate, categorical, …) aggregate
+instead of scanning per-row, and all are unioned into the same violations
+output.
 
 Scale notes (100 TB / 10^12 rows):
 - the only wide shuffle is the Window pass, keyed by the table's physical
@@ -264,12 +276,15 @@ def compile_rules(
 ) -> CompiledPlan:
     """Compile ``rules`` over ``df`` into a single fused plan.
 
+    Eager: compiling runs the partition-stats action (see
+    :func:`_partition_stats`); the returned violations stay lazy.
+
     ``drift_bounds`` — optional {column: (lo, hi)} bin-edge bounds for
     DriftRule columns, typically served from the checkpointed profile
-    state table (functions/stats.bounds_from_states): when a drift
-    column is covered the per-run corpus min/max agg is skipped for it
-    (the one extra full scan a DriftRule otherwise costs); uncovered
-    columns fall back to the agg (cold start).
+    state table (functions/stats.bounds_from_states): when every drift
+    column is covered the per-run corpus min/max collect is skipped
+    (the one extra job DriftRules otherwise cost); uncovered columns
+    fall back to it (cold start).
 
     ``df`` must already expose ``partition_col`` (the verdict axis) and,
     for sequence rules, ``seq_col`` (monotone within a partition — for the
@@ -633,26 +648,24 @@ def compile_rules(
             we = Window.partitionBy(partition_col).orderBy(seq_col, key_col)
             base = base.select("*", *ewma_cols(we))
 
-    # ---- per-partition IQR fences: two-level agg + broadcast join --------
+    # ---- the partition-stats pass: ONE grouped action over the pre-audio
+    # frame serves rows_checked, volume fences, IQR fences, staleness and
+    # drift histograms (see _partition_stats) ------------------------------
+    part_stats, drift = _partition_stats(
+        df, rules, key_col=key_col, partition_col=partition_col,
+        seq_col=seq_col, frontier=frontier, drift_bounds=drift_bounds,
+    )
+
+    # ---- per-partition IQR fences: a broadcast join of the stats rows ----
     iqr_rules = [r for r in rules if isinstance(r, IqrRule)]
-    for r in iqr_rules:
-        if r.exact:
-            # quantileExact ≙ tinybird/pipes/iqr.pipe:31-33 (test scale)
-            q1 = F.expr(f"percentile({r.column}, 0.25D)")
-            q3 = F.expr(f"percentile({r.column}, 0.75D)")
-        else:
-            # approx at 10^12 scale (north star; SURVEY.md §4.2.5)
-            q1 = F.percentile_approx(r.column, 0.25, r.accuracy)
-            q3 = F.percentile_approx(r.column, 0.75, r.accuracy)
-        # stats from the PRE-audio frame: the audio mapInArrow pass is a
-        # column-pruning barrier, so an agg branch hanging off `base`
-        # would re-decode every payload just to read one numeric column
-        stats = df.groupBy(partition_col).agg(
-            q1.alias(f"__q1_{r.column}"), q3.alias(f"__q3_{r.column}")
-        )
+    if iqr_rules:
         # ≤1 row per partition → always broadcast (≙ the reference's
         # stats-CTE join, iqr.pipe:49-50, which ClickHouse keeps in memory).
-        base = base.join(F.broadcast(stats), partition_col, "left")
+        fences = part_stats.select(
+            partition_col,
+            *[f"__q{k}_{r.column}" for r in iqr_rules for k in (1, 3)],
+        )
+        base = base.join(F.broadcast(fences), partition_col, "left")
 
     # ---- per-partition median/MAD: two sequential aggs + broadcast join ---
     mad_rules = [r for r in rules if isinstance(r, MadRule)]
@@ -1186,12 +1199,7 @@ def compile_rules(
         # ≙ timeout.pipe:15-37 — latest report per key, flagged if older
         # than the allowed staleness vs the (frozen) frontier. max_by keeps
         # the full latest row like the reference's LIMIT 1 BY id (W3→A6).
-        # pre-audio frame for the same pruning-barrier reason as IQR stats
-        latest = df.groupBy(partition_col).agg(
-            F.max(seq_col).alias("__last_seq"),
-            F.max_by(F.col(key_col), F.col(seq_col)).alias("__last_key"),
-        )
-        stale = latest.filter(
+        stale = part_stats.filter(
             F.col("__last_seq") < F.lit(frontier - r.max_staleness)
         ).select(
             F.col(partition_col).alias("partition_key"),
@@ -1403,45 +1411,14 @@ def compile_rules(
             ref.select(F.col(partition_col).alias("partition_key")).distinct()
         )
 
-    # ---- drift (KS + PSI over binned histograms) -------------------------
-    drift_rules = [r for r in rules if isinstance(r, DriftRule)]
-    if drift_rules:
-        bounds_map = dict(drift_bounds or {})
-        missing = list(
-            dict.fromkeys(
-                r.column for r in drift_rules if r.column not in bounds_map
-            )
-        )
-        if missing:
-            # ONE driver agg fixes bin edges for every UNCOVERED drift
-            # column (vs one full-scan collect per rule); columns served
-            # by drift_bounds (profile state / column stats) skip the
-            # corpus scan entirely
-            bounds_row = df.agg(
-                *[
-                    a
-                    for c in missing
-                    for a in (
-                        F.min(c).alias(f"__lo_{c}"),
-                        F.max(c).alias(f"__hi_{c}"),
-                    )
-                ]
-            ).collect()[0]
-            for c in missing:
-                bounds_map[c] = (bounds_row[f"__lo_{c}"], bounds_row[f"__hi_{c}"])
-    for r in drift_rules:
-        fused_parts.append(
-            _drift_violations(
-                df,
-                r,
-                partition_col=partition_col,
-                bounds=bounds_map[r.column],
-            )
-        )
-        if r.detector not in detectors:
-            detectors.append(r.detector)
-        if r.detector not in partition_level:
-            partition_level.append(r.detector)
+    # ---- drift (KS + PSI over binned histograms, scored on the driver) ----
+    for r in rules:
+        if isinstance(r, DriftRule):
+            fused_parts.append(_drift_violations(drift[r.column, r.bins], r))
+            if r.detector not in detectors:
+                detectors.append(r.detector)
+            if r.detector not in partition_level:
+                partition_level.append(r.detector)
 
     # ---- categorical mix: PSI drift + entropy fences ----------------------
     # Both rule families read the SAME per-(partition, value) count frame
@@ -1639,11 +1616,11 @@ def compile_rules(
         if r.detector not in partition_level:
             partition_level.append(r.detector)
 
-    # the per-partition count frame: built ONCE and shared by the
-    # VolumeRule fences and the plan's rows_checked output — one count
-    # subtree in the violations plan, not one per consumer
-    counts_frame = df.groupBy(F.col(partition_col).alias("partition_key")).agg(
-        F.count(F.lit(1)).alias("rows_checked")
+    # the per-partition row counts of the stats pass serve both the
+    # VolumeRule fences and the plan's rows_checked output
+    counts_frame = part_stats.select(
+        F.col(partition_col).alias("partition_key"),
+        F.col("__rows").alias("rows_checked"),
     )
 
     # ---- volume fences over the shared per-partition count frame ----------
@@ -1752,21 +1729,109 @@ def _agg_value(r: AggregateRule) -> Column:
     raise ValueError(f"unknown aggregate {r.agg!r}")  # pragma: no cover
 
 
-def _drift_violations(
-    df: DataFrame, r: DriftRule, *, partition_col: str, bounds=None
-) -> DataFrame:
-    """Per-partition KS + PSI vs a robust consensus baseline, via binned
-    histograms (two-level partial+final aggregation — SURVEY.md §4.2.6).
+def _partition_stats(
+    df: DataFrame,
+    rules: list,
+    *,
+    key_col: str,
+    partition_col: str,
+    seq_col: str | None,
+    frontier: int | None,
+    drift_bounds: dict | None,
+) -> tuple[DataFrame, dict]:
+    """The per-partition aggregates of the rule set in ONE collected
+    ``df.groupBy(partition_col).agg(...)``.
 
-    The score math lives in functions/stats.py drift_scores (shared with
-    the standalone drift operator + its DuckDB oracle); this wrapper
-    applies the rule thresholds and shapes violations rows.
+    Returns ``(stats, drift)``. ``stats`` holds one row per
+    partition, planned as a LocalRelation (no rescan when joined or
+    filtered later): ``__rows`` (rows_checked, VolumeRule), each IqrRule's
+    ``__q1_{col}``/``__q3_{col}``, and, for a GapRule with a frontier,
+    ``__last_seq``/``__last_key`` (latest seq and the key at it).
+    ``drift`` maps each DriftRule's (column, bins) to its
+    (partition_key, psi, ks, w1) frame, scored on the driver
+    (functions/stats.score_drift) from a dense per-bin count array the
+    same pass collects.
+
+    Reads ``df``, the pre-payload frame: the payload Arrow pass is a
+    column-pruning barrier, so an aggregate hanging off the decoded frame
+    would re-decode every payload to read one numeric column. Drift bin
+    edges come from ``drift_bounds`` or from one min/max collect over the
+    uncovered columns (the only other eager job).
     """
-    from ..functions.stats import drift_scores
-
-    scores = drift_scores(
-        df, r.column, partition_col=partition_col, bins=r.bins, bounds=bounds
+    from ..functions.stats import (
+        drift_bin_edges,
+        drift_frame,
+        drift_histogram,
+        score_drift,
     )
+
+    aggs = [F.count(F.lit(1)).alias("__rows")]
+    for r in rules:
+        if isinstance(r, IqrRule):
+            if r.exact:
+                # quantileExact ≙ tinybird/pipes/iqr.pipe:31-33 (test scale)
+                q1 = F.expr(f"percentile({r.column}, 0.25D)")
+                q3 = F.expr(f"percentile({r.column}, 0.75D)")
+            else:
+                # approx at 10^12 scale (north star; SURVEY.md §4.2.5)
+                q1 = F.percentile_approx(r.column, 0.25, r.accuracy)
+                q3 = F.percentile_approx(r.column, 0.75, r.accuracy)
+            aggs += [q1.alias(f"__q1_{r.column}"), q3.alias(f"__q3_{r.column}")]
+    if frontier is not None and any(isinstance(r, GapRule) for r in rules):
+        aggs += [
+            F.max(seq_col).alias("__last_seq"),
+            F.max_by(F.col(key_col), F.col(seq_col)).alias("__last_key"),
+        ]
+
+    drift = list(
+        dict.fromkeys((r.column, r.bins) for r in rules if isinstance(r, DriftRule))
+    )
+    bounds = dict(drift_bounds or {})
+    missing = list(dict.fromkeys(c for c, _ in drift if c not in bounds))
+    if missing:
+        # ONE driver agg fixes bin edges for every UNCOVERED drift column;
+        # columns served by drift_bounds (profile state / column stats)
+        # skip it entirely
+        row = df.agg(
+            *[
+                a
+                for c in missing
+                for a in (F.min(c).alias(f"__lo_{c}"), F.max(c).alias(f"__hi_{c}"))
+            ]
+        ).collect()[0]
+        for c in missing:
+            bounds[c] = (row[f"__lo_{c}"], row[f"__hi_{c}"])
+    grids = {}
+    for i, (c, bins) in enumerate(drift):
+        if bounds[c][0] is not None:  # an all-NULL column scores nothing
+            lo, width = drift_bin_edges(bounds[c], bins)
+            grids[c, bins] = (f"__hist_{i}", width)
+            aggs.append(drift_histogram(c, lo, width, bins).alias(f"__hist_{i}"))
+
+    spark = df.sparkSession
+    grouped = df.groupBy(partition_col).agg(*aggs)
+    table = grouped.toArrow()
+    hist_cols = [name for name, _ in grids.values()]
+    stats = spark.createDataFrame(
+        table.drop_columns(hist_cols), schema=grouped.drop(*hist_cols).schema
+    )
+    keys = table.column(partition_col).to_pylist()
+    key_type = grouped.schema[partition_col].dataType
+    scores = {}
+    for grid in drift:
+        hists = []
+        if grid in grids:
+            name, width = grids[grid]
+            hists = [(k, h, width) for k, h in zip(keys, table.column(name).to_pylist())]
+        scores[grid] = drift_frame(spark, score_drift(hists), key_type)
+    return stats, scores
+
+
+def _drift_violations(scores: DataFrame, r: DriftRule) -> DataFrame:
+    """A DriftRule's violation rows from its (partition_key, psi, ks, w1)
+    scores: the rule thresholds and the formatted notes stay Spark
+    projections, because Spark's double→string cast (E-notation below
+    1e-3) is the note contract the oracles check."""
     cond = (F.col("psi") > r.psi_threshold) | (F.col("ks") > r.ks_threshold)
     observed = F.concat(
         F.lit("psi:"), _fmt(F.col("psi"), 4), F.lit("|ks:"), _fmt(F.col("ks"), 4)

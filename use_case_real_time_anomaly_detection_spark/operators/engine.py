@@ -18,7 +18,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
+from ..session import local_frame
 from .compiler import compile_rules
 from .rules import ProfileSpec
 
@@ -81,8 +83,10 @@ class ValidationEngine:
         warn_detectors: tuple | list | None = None,
         drift_bounds: dict | None = None,
     ) -> RunResult:
-        """Compile + evaluate ``rules`` over ``df`` (lazy: returned
-        DataFrames trigger execution on action).
+        """Compile + evaluate ``rules`` over ``df``. Compiling runs the
+        partition-stats action (plus a drift bin-edge collect when a
+        DriftRule's bounds are not given); the returned violations and
+        verdicts stay lazy and trigger the scan on action.
 
         ``skip_partitions`` — one column ``partition_key`` of already-
         completed partitions (the resume path: anti-join, ≙ the
@@ -241,9 +245,10 @@ class ValidationEngine:
         partition_level: list | None = None,
         warn_detectors: tuple | list | None = None,
     ) -> DataFrame:
-        spark = violations.sparkSession
-        det = spark.createDataFrame(
-            [(d,) for d in detectors], "detector string"
+        det = local_frame(
+            violations.sparkSession,
+            StructType([StructField("detector", StringType())]),
+            [(d,) for d in detectors],
         )
         # partitions × detectors grid (detector side is tiny → broadcast),
         # so zero-violation (partition, detector) pairs still get pass=true.

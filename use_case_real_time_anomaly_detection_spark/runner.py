@@ -593,11 +593,16 @@ def main(argv: list[str] | None = None) -> int:
         # pre-gate must not mark partitions validated, replace full
         # evidence, or clear quarantine derived from the whole corpus
         store.record_smoke(result)
+        verdict_rows = result.verdicts.collect()
     else:
-        store.record_run(result, frontier=frontier)
+        verdict_rows = store.record_run(result, frontier=frontier)
+    validated_keys = list(dict.fromkeys(r["partition_key"] for r in verdict_rows))
 
     if args.quarantine and args.sample is None:
+        from pyspark.sql.types import StructType
+
         from .operators.engine import quarantine_split, reindex_quarantine
+        from .session import local_frame
 
         _, quar = quarantine_split(
             clips, result.violations, key_col=args.key_col, warn_detectors=warn
@@ -607,7 +612,11 @@ def main(argv: list[str] | None = None) -> int:
         # emit a NULL-clip_id marker row (reindex_quarantine) so dynamic
         # partition overwrite clears their stale quarantine rows instead
         # of skipping them
-        validated_parts = result.verdicts.select("partition_key").distinct()
+        validated_parts = local_frame(
+            spark,
+            StructType([result.verdicts.schema["partition_key"]]),
+            [(k,) for k in validated_keys],
+        )
         store.catalog.overwrite_partitions(
             reindex_quarantine(quar, validated_parts),
             "quarantine",
@@ -622,7 +631,7 @@ def main(argv: list[str] | None = None) -> int:
             store.catalog.drop_partitions(
                 "quarantine_stream",
                 "partition_key",
-                [r["partition_key"] for r in validated_parts.collect()],
+                validated_keys,
             )
 
     # maintain the mergeable profile-state table alongside lineage: only
@@ -679,29 +688,20 @@ def main(argv: list[str] | None = None) -> int:
                 ),
             }
 
-    verdicts = store.lineage().filter(F.col("run_id") == result.run_id)
-    agg = verdicts.agg(
-        F.sum("rows_checked").alias("rows"),
-        F.sum("violation_count").alias("violations"),
-    ).collect()[0]
-    per_det = {
-        r["detector"]: r["n"]
-        for r in verdicts.groupBy("detector")
-        .agg(F.sum("violation_count").alias("n"))
-        .collect()
-    }
+    # the summary reads the verdict rows this pass wrote: no lineage re-read
+    per_det: dict = {}
+    clips_per_part: dict = {}
+    for r in verdict_rows:
+        per_det[r["detector"]] = per_det.get(r["detector"], 0) + r["violation_count"]
+        # rows_checked is per (partition, detector): a partition's clip
+        # count is its max over detectors, whichever rules the ruleset
+        # declares
+        k = r["partition_key"]
+        clips_per_part[k] = max(clips_per_part.get(k, 0), r["rows_checked"] or 0)
     dt = time.time() - t0
     result.unpersist()
-    # rows_checked is per (partition, detector): a partition's clip count
-    # is its max over detectors, whichever rules the ruleset declares
-    n_parts = verdicts.select("partition_key").distinct().count()
-    clips_n = (
-        verdicts.groupBy("partition_key")
-        .agg(F.max("rows_checked").alias("n"))
-        .agg(F.sum("n"))
-        .collect()[0][0]
-        or 0
-    )
+    n_parts = len(validated_keys)
+    clips_n = sum(clips_per_part.values())
     print(
         json.dumps(
             {
@@ -709,7 +709,7 @@ def main(argv: list[str] | None = None) -> int:
                 "frontier": frontier,
                 "partitions_validated": n_parts,
                 "clips_validated": int(clips_n),
-                "violations": int(agg["violations"] or 0),
+                "violations": sum(per_det.values()),
                 "per_detector": per_det,
                 "seconds": round(dt, 2),
                 "clips_per_sec": round(clips_n / dt, 1) if dt > 0 else None,

@@ -17,7 +17,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # One knob per concern; everything else stays Spark default.
 _DEFAULT_CONFS: dict[str, str] = {
@@ -40,6 +40,11 @@ _DEFAULT_CONFS: dict[str, str] = {
     # batches win. Default favors the at-scale regime; see
     # BENCH/BASELINE.md for the numbers.
     "spark.sql.shuffle.partitions": "32",
+    # let AQE re-plan the output partitioning of a persisted plan: the
+    # engine's one persisted frame (the deduped violations) otherwise
+    # keeps all shuffle partitions, i.e. one write task and file per
+    # partition for a few hundred rows
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
@@ -90,6 +95,23 @@ def release_pinned(spark: SparkSession) -> int:
         jrdd.unpersist(False)
     spark.catalog.clearCache()
     return released
+
+
+def local_frame(spark: SparkSession, schema, rows) -> DataFrame:
+    """Driver-side ``rows`` (tuples in ``schema`` order) as a DataFrame
+    planned as a LocalRelation: built from an Arrow table, it needs no
+    scan and no Python worker, whereas ``createDataFrame(list)`` plans a
+    Python-worker RDD scan."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=schema)
 
 
 def get_spark(

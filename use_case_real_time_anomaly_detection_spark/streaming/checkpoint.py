@@ -36,9 +36,12 @@ class CheckpointStore:
 
     # -- write side ---------------------------------------------------------
 
-    def record_run(self, result, *, frontier: int) -> None:
+    def record_run(self, result, *, frontier: int) -> list:
         """Persist a BATCH run's outputs: violations (partition-overwritten
         → idempotent re-runs) + verdict/lineage rows (append-only history).
+        Returns the verdict rows it appended (partitions × detectors
+        rows, collected once), so callers summarize or route the run
+        without re-reading lineage.
 
         A batch run validates each partition's FULL row set, so its per-pk
         snapshot is authoritative: any streaming-accumulated violation dirs
@@ -46,23 +49,29 @@ class CheckpointStore:
         runner applies to quarantine_stream) — otherwise violations()'s
         union would keep presenting stream-era evidence this full
         validation just recomputed or cleared."""
+        from ..session import local_frame
+
         self.catalog.overwrite_partitions(
             result.violations.withColumn("pk", F.col("partition_key")),
             VIOLATIONS_TABLE,
             partition_by=["pk"],
         )
+        # after the violations write: with a persisted run the verdict
+        # counts read the cached violations, not the lazy plan
+        rows = result.verdicts.collect()
         if self.catalog.exists(VIOLATIONS_STREAM_TABLE):
             self.catalog.drop_partitions(
                 VIOLATIONS_STREAM_TABLE,
                 "partition_key",
-                [
-                    r["partition_key"]
-                    for r in result.verdicts.select("partition_key")
-                    .distinct()
-                    .collect()
-                ],
+                list(dict.fromkeys(r["partition_key"] for r in rows)),
             )
-        self.catalog.append(result.verdicts, LINEAGE_TABLE)
+        # one file per run, as the lazy verdict plan wrote (a local
+        # relation would otherwise split into one task per core)
+        verdicts = local_frame(
+            result.verdicts.sparkSession, result.verdicts.schema, rows
+        ).coalesce(1)
+        self.catalog.append(verdicts, LINEAGE_TABLE)
+        return rows
 
     def record_stream_run(self, result, *, batch_id: int, frontier: int) -> None:
         """Persist a MICRO-BATCH run's outputs. Violations land in the
