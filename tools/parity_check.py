@@ -6,15 +6,29 @@ value, and compare exactly (the driver hashes values — so we compare the
 stringified frames byte-for-byte, not approximately).
 
 Usage: python tools/parity_check.py [--json OUT.json] [sf_dir] [only_query ...]
+       python tools/parity_check.py --plans DIR [sf_dir] [only_query ...]
 
 --json writes a per-query record {ok, rows, oracle, secs} for EVERY
 registered query (the driver's CORRECTNESS record window rotates ~50
 queries/round; this artifact is the full-surface parity proof the judge
 asked for — PARITY_r{N}.json at the repo root).
+
+--plans writes, instead of checking values, one DIR/<query>.txt per
+registered query holding its canonical executedPlan: expression IDs
+(``#12``), ``plan_id``, RDD ids, lambda-variable numbers and the
+checkout's own path stripped, so two checkouts' outputs
+differ only where the physical plans do. Three more files hold the
+violations plan of a validation pass over a small synthetic clip table:
+the default audio ruleset (what the runner's batch pass compiles), and
+``rulesets/clips-strict.json`` with and without the chunked window path.
+A refactor that claims "same behaviour" proves it with
+``diff -r parent_plans/ change_plans/``. ``decontaminate``'s plan also
+depends on the queries run before it in the session: diff it alone.
 """
 
 from __future__ import annotations
 
+import re
 import sys
 import time
 from pathlib import Path
@@ -22,7 +36,8 @@ from pathlib import Path
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -64,11 +79,96 @@ def kind_mismatch(a: pd.DataFrame, b: pd.DataFrame) -> list[str]:
     return bad
 
 
+_PLAN_IDS = [
+    (re.compile(r"#\d+"), ""),
+    (re.compile(r"plan_id=\d+"), "plan_id="),
+    (re.compile(r"RDD\[\d+\]"), "RDD[]"),
+    # lambda variables are numbered from one session-wide counter
+    (re.compile(r"(lambda [a-z]+)_\d+"), r"\1"),
+]
+
+
+def canonical_plan(df) -> str:
+    """``df``'s executedPlan (before execution) with run-specific ids
+    stripped."""
+    text = df._jdf.queryExecution().executedPlan().toString()
+    text = text.replace(str(ROOT), "<repo>")
+    for pattern, repl in _PLAN_IDS:
+        text = pattern.sub(repl, text)
+    return text
+
+
+def validation_plans(spark) -> dict:
+    """Builders of the violations plan of a validation pass over a small
+    synthetic clip table: the default audio ruleset and the strict
+    ruleset file."""
+    from use_case_real_time_anomaly_detection_spark.operators.config import (
+        load_ruleset_document,
+    )
+    from use_case_real_time_anomaly_detection_spark.plans.clips import (
+        default_rules,
+        validate_clips,
+    )
+    from use_case_real_time_anomaly_detection_spark.sources.synth import (
+        SynthSpec,
+        frontier_of,
+        generate_clips,
+        generate_manifest,
+    )
+
+    spec = SynthSpec(partitions=2, clips_per_partition=40)
+    clips = generate_clips(spark, spec)
+    manifest = generate_manifest(spark, spec)
+    strict_rules = load_ruleset_document(str(ROOT / "rulesets/clips-strict.json"))[0]
+    runs = {
+        "validate_default_audio": (default_rules(with_audio=True), None),
+        "validate_strict": (strict_rules, None),
+        "validate_strict_chunked": (strict_rules, 64),
+    }
+    return {
+        name: lambda rules=rules, chunk=chunk: validate_clips(
+            clips, manifest, frontier=frontier_of(spec), rules=rules,
+            run_id="plans", window_chunk_size=chunk,
+        ).violations
+        for name, (rules, chunk) in runs.items()
+    }
+
+
+def write_plans(spark, sf_dir: str, only: set, out_dir: str) -> int:
+    import __spark_entry__ as entrymod
+    from use_case_real_time_anomaly_detection_spark.session import release_pinned
+
+    out = Path(out_dir)
+    out.mkdir(parents=True, exist_ok=True)
+    frames = {
+        name: (lambda fn=fn: fn(spark, sf_dir))
+        for name, fn in entrymod.queries().items()
+    }
+    frames.update(validation_plans(spark))
+    written, failures = 0, []
+    for name, build in frames.items():
+        if only and name not in only:
+            continue
+        try:
+            (out / f"{name}.txt").write_text(canonical_plan(build()) + "\n")
+            written += 1
+        except Exception as exc:
+            print(f"FAIL  {name:22s} {exc}")
+            failures.append(name)
+        release_pinned(spark)
+    print(f"wrote {written} plans to {out}")
+    return 1 if failures else 0
+
+
 def main() -> int:
     argv = list(sys.argv[1:])
     json_out = None
+    plans_dir = None
     if argv and argv[0] == "--json":
         json_out = argv[1]
+        argv = argv[2:]
+    elif argv and argv[0] == "--plans":
+        plans_dir = argv[1]
         argv = argv[2:]
     sf_dir = argv[0] if argv else "/root/testdata/sf0.01"
     only = set(argv[1:])
@@ -83,6 +183,8 @@ def main() -> int:
         "local[8]", extra_confs={"spark.ui.showConsoleProgress": "false"}
     )
     spark.sparkContext.setLogLevel("ERROR")
+    if plans_dir is not None:
+        return write_plans(spark, sf_dir, only, plans_dir)
 
     con = duckdb.connect()
     for t in TABLES:
