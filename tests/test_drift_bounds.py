@@ -1,130 +1,73 @@
-"""Drift bin bounds served from the profile state table (round-5 #4).
+"""Drift bin edges come from the validated table itself.
 
-A DriftRule-carrying run used to cost one extra full-corpus min/max agg
-for the bin edges. bounds_from_states derives the SAME exact bounds
-from the slim checkpointed state table (exact mergeable min/max, not
-sketches), and compile_rules(drift_bounds=...) skips the corpus agg for
-covered columns.
+A DriftRule bins every partition on one equal-width grid over the
+table's own [min, max] (one min/max collect at compile time). The
+checkpoint may decide which partitions a run re-validates; it must not
+change what a validation of the same table says.
 """
 
 from __future__ import annotations
 
-import pytest
-
-from use_case_real_time_anomaly_detection_spark.functions.stats import (
-    bounds_from_states,
-    profile_state,
-)
-from use_case_real_time_anomaly_detection_spark.operators.compiler import compile_rules
-from use_case_real_time_anomaly_detection_spark.operators.rules import DriftRule
+from pyspark.sql import functions as F
 
 
-@pytest.fixture(scope="module")
-def table(spark):
-    rows = []
-    for p in range(4):
-        for i in range(50):
-            dur = 500 + 7 * i + (300 if p == 1 else 0)
-            sr = 16000 if (i + p) % 3 else 8000
-            rows.append((f"p{p}", f"c{p}-{i:04d}", i, dur, sr))
-    return spark.createDataFrame(
-        rows, "partition_key string, clip_id string, seq long, dur_ms int, sr_hz int"
-    ).cache()
-
-
-def test_bounds_from_states_equal_corpus_min_max(spark, table):
-    states = profile_state(
-        table, partition_col="partition_key", numeric_columns=["dur_ms", "sr_hz"]
-    )
-    got = bounds_from_states(states, ["dur_ms", "sr_hz", "nope"])
-    mm = table.selectExpr(
-        "min(dur_ms) a", "max(dur_ms) b", "min(sr_hz) c", "max(sr_hz) d"
-    ).collect()[0]
-    assert got["dur_ms"] == (float(mm["a"]), float(mm["b"]))
-    assert got["sr_hz"] == (float(mm["c"]), float(mm["d"]))
-    assert "nope" not in got  # absent column -> caller falls back
-
-
-def test_compile_with_bounds_matches_and_skips_corpus_agg(spark, table):
-    rule = DriftRule("dur_ms", psi_threshold=0.1, ks_threshold=0.2)
-    states = profile_state(
-        table, partition_col="partition_key", numeric_columns=["dur_ms"]
-    ).localCheckpoint()  # materialize so the probe counts only compile jobs
-    bounds = bounds_from_states(states, ["dur_ms"])
-
-    sc = spark.sparkContext
-    sc.setJobGroup("drift-no-bounds", "probe")
-    plan_a = compile_rules(table, [rule], seq_col="seq")
-    sc.setJobGroup("drift-with-bounds", "probe")
-    plan_b = compile_rules(table, [rule], seq_col="seq", drift_bounds=bounds)
-    sc.setJobGroup("drift-after", "probe")
-
-    tracker = sc.statusTracker()
-    jobs_a = len(tracker.getJobIdsForGroup("drift-no-bounds"))
-    jobs_b = len(tracker.getJobIdsForGroup("drift-with-bounds"))
-    # same compile minus the corpus min/max agg (AQE can split either
-    # side's work into several jobs, so assert the direction, not an
-    # exact count: with bounds the agg jobs are gone entirely)
-    assert jobs_b < jobs_a
-
-    va = sorted(map(tuple, plan_a.violations.collect()))
-    vb = sorted(map(tuple, plan_b.violations.collect()))
-    assert va == vb
-    assert len(va) > 0  # partition p1 is planted +300ms off
-
-
-def test_stale_narrow_bounds_clamp_instead_of_dropping_rows(spark, table):
-    # bounds narrower than the live data (stale external source): rows
-    # outside clamp into the edge bins; every row still participates
-    from use_case_real_time_anomaly_detection_spark.functions.stats import drift_scores
-
-    full = drift_scores(table, "dur_ms", partition_col="partition_key")
-    narrow = drift_scores(
-        table, "dur_ms", partition_col="partition_key", bounds=(600.0, 800.0)
-    )
-    # all four partitions scored in both (nothing silently vanished)
-    assert {r.partition_key for r in narrow.collect()} == {
-        r.partition_key for r in full.collect()
-    }
-
-
-def test_runner_second_pass_uses_state_bounds_and_matches(spark, tmp_path, capsys):
-    """Warm-state re-validation: the second full pass serves drift bin
-    bounds from the profile_state table the first pass recorded, and the
-    verdict/violation surface is identical to the cold-start run."""
-    import json
-
+def test_warm_pass_over_drifted_table_matches_fresh_checkpoint(spark, tmp_path, capsys):
+    """Pass 1 validates table A; pass 2 re-validates B (A with one
+    partition's dur_ms tripled, so the column max moves) into the SAME
+    checkpoint; pass 3 validates B into a fresh checkpoint. Passes 2 and
+    3 saw the same table, so they persist the same drift rows and the
+    same verdicts."""
     from use_case_real_time_anomaly_detection_spark import runner
     from use_case_real_time_anomaly_detection_spark.sources.synth import (
         SynthSpec,
         generate_clips,
         generate_manifest,
     )
+    from use_case_real_time_anomaly_detection_spark.sources.tables import get_catalog
+    from use_case_real_time_anomaly_detection_spark.streaming.checkpoint import (
+        CheckpointStore,
+    )
 
     spec = SynthSpec(partitions=3, clips_per_partition=80)
-    generate_clips(spark, spec).write.parquet(str(tmp_path / "clips"))
+    generate_clips(spark, spec).write.parquet(str(tmp_path / "a"))
     generate_manifest(spark, spec).write.parquet(str(tmp_path / "manifest"))
+    a = spark.read.parquet(str(tmp_path / "a"))
+    a.withColumn(
+        "dur_ms",
+        F.when(F.col("clip_id").startswith("c002"), F.col("dur_ms") * 3).otherwise(
+            F.col("dur_ms")
+        ),
+    ).write.parquet(str(tmp_path / "b"))
 
-    def go(extra=()):
+    def go(table, ckpt, run_id):
         rc = runner.main([
-            "--clips", str(tmp_path / "clips"),
+            "--clips", str(tmp_path / table),
             "--manifest", str(tmp_path / "manifest"),
-            "--checkpoint-dir", str(tmp_path / "ckpt"),
-            "--no-audio", "--master", "local[8]", *extra,
+            "--checkpoint-dir", str(tmp_path / ckpt),
+            "--no-audio", "--no-resume", "--master", "local[8]",
+            "--run-id", run_id,
         ])
-        out = capsys.readouterr().out
-        lines = [l for l in out.splitlines() if l.startswith("{")]
-        return rc, (json.loads(lines[-1]) if lines else None)
+        capsys.readouterr()
+        assert rc == 0
+        store = CheckpointStore(get_catalog(spark, str(tmp_path / ckpt)))
+        drift = {
+            (r["partition_key"], r["detector"], r["observed"])
+            for r in store.violations()
+            .filter(F.col("detector").startswith("drift"))
+            .collect()
+        }
+        verdicts = sorted(
+            tuple(r)
+            for r in store.lineage()
+            .filter(F.col("run_id") == run_id)
+            .drop("run_id")
+            .collect()
+        )
+        return drift, verdicts
 
-    rc1, out1 = go()
-    assert rc1 == 0
-    # second pass: full revalidation (no resume) with warm state — the
-    # drift bounds come from profile_state; outputs must be identical
-    rc2, out2 = go(["--no-resume", "--run-id", "warm"])
-    assert rc2 == 0
-    assert out2["violations"] == out1["violations"]
-    assert out2["partitions_validated"] == out1["partitions_validated"]
-    # and --no-state-bounds (forced corpus agg) agrees too
-    rc3, out3 = go(["--no-resume", "--run-id", "cold", "--no-state-bounds"])
-    assert rc3 == 0
-    assert out3["violations"] == out1["violations"]
+    go("a", "warm", "a")
+    warm_drift, warm_verdicts = go("b", "warm", "b")
+    cold_drift, cold_verdicts = go("b", "cold", "b")
+    assert warm_drift  # the planted drift partition is flagged
+    assert warm_drift == cold_drift
+    assert warm_verdicts == cold_verdicts

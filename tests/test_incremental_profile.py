@@ -174,12 +174,12 @@ def test_drift_from_states_matches_raw_scan(spark):
         .agg(F.min("value").alias("lo"), F.max("value").alias("hi"))
         .collect()[0]
     )
+    # the state grid is the column's own [min, max]: the grid
+    # drift_scores bins on
     lo, hi = float(mm["lo"]), float(mm["hi"])
     ref = {
         r["partition_key"]: (r["psi"], r["ks"], r["w1"])
-        for r in drift_scores(
-            ev, "value", partition_col="event_type", bins=20, bounds=(lo, hi)
-        ).collect()
+        for r in drift_scores(ev, "value", partition_col="event_type", bins=20).collect()
     }
     states = profile_state(
         ev, partition_col="event_type",
@@ -202,6 +202,8 @@ def test_wasserstein_is_scale_aware_where_ks_saturates(spark):
     saturated KS (≈ 1) and comparable PSI, but W1 ranks them by HOW FAR
     the mass moved — and matches a numpy replay of the smoothed math
     bit-for-bit."""
+    import math
+
     import numpy as np
 
     from use_case_real_time_anomaly_detection_spark.functions.stats import (
@@ -220,12 +222,12 @@ def test_wasserstein_is_scale_aware_where_ks_saturates(spark):
     for i, v in enumerate(rng.uniform(90.0, 100.0, 200)):
         rows.append(("far", float(round(v, 2))))
     df = spark.createDataFrame(rows, "pk string, value double")
-    bins, lo, hi = 20, 0.0, 100.0
+    # drift_scores bins over the column's own [min, max]
+    bins = 20
+    lo, hi = min(v for _, v in rows), max(v for _, v in rows)
     got = {
         r["partition_key"]: (r["psi"], r["ks"], r["w1"])
-        for r in drift_scores(
-            df, "value", partition_col="pk", bins=bins, bounds=(lo, hi)
-        ).collect()
+        for r in drift_scores(df, "value", partition_col="pk", bins=bins).collect()
     }
     # KS saturates at the same (smoothing-capped) ceiling for both
     # shifted partitions — it cannot tell a 20-unit move from a 90-unit
@@ -243,7 +245,7 @@ def test_wasserstein_is_scale_aware_where_ks_saturates(spark):
     pks = sorted({r[0] for r in rows})
     counts = {pk: np.zeros(bins) for pk in pks}
     for pk, v in rows:
-        counts[pk][min(bins - 1, int((v - lo) // width))] += 1
+        counts[pk][min(bins - 1, math.floor((v - lo) / width))] += 1
     p = {pk: (c + 0.5) / (c.sum() + 0.5 * bins) for pk, c in counts.items()}
     med = np.median(np.stack([p[pk] for pk in pks]), axis=0)
     q = med / med.sum()
@@ -298,12 +300,6 @@ def test_drift_from_states_skips_degenerate_partitions(spark):
     )
 
     ev = _events(spark)
-    mm = (
-        ev.filter(F.col("value").isNotNull())
-        .agg(F.min("value").alias("lo"), F.max("value").alias("hi"))
-        .collect()[0]
-    )
-    lo, hi = float(mm["lo"]), float(mm["hi"])
     # one partition with value entirely NULL → all-zero histogram
     nulled = ev.withColumn(
         "value",
@@ -311,6 +307,10 @@ def test_drift_from_states_skips_degenerate_partitions(spark):
             F.col("value")
         ),
     )
+    # the state grid is the column's own [min, max]: the grid
+    # drift_scores bins on
+    mm = nulled.agg(F.min("value").alias("lo"), F.max("value").alias("hi")).collect()[0]
+    lo, hi = float(mm["lo"]), float(mm["hi"])
     states = profile_state(
         nulled, partition_col="event_type",
         histogram_columns={"value": (lo, hi, 20)},
@@ -318,8 +318,7 @@ def test_drift_from_states_skips_degenerate_partitions(spark):
     ref = {
         r["partition_key"]: (r["psi"], r["ks"])
         for r in drift_scores(
-            nulled, "value", partition_col="event_type", bins=20,
-            bounds=(lo, hi),
+            nulled, "value", partition_col="event_type", bins=20
         ).collect()
     }
     got = {

@@ -336,6 +336,42 @@ def test_runner_sample_mode(spark, tmp_path, capsys):
     ])
     assert rc == 2
 
+    # a --clips table without --frontier: the usage error still comes
+    # before the frontier collect (or any other Spark job)
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from use_case_real_time_anomaly_detection_spark.sources.synth import (
+        SynthSpec,
+        manifest_pandas,
+        metadata_pandas,
+    )
+
+    spec = SynthSpec(partitions=2, clips_per_partition=10)
+    for name, frame in (
+        ("clips", metadata_pandas(spec).assign(bytes=b"")),
+        ("manifest", manifest_pandas(spec)),
+    ):
+        (tmp_path / name).mkdir()
+        pq.write_table(
+            pa.Table.from_pandas(frame, preserve_index=False),
+            str(tmp_path / name / "part-0.parquet"),
+        )
+    sc = spark.sparkContext
+    sc.setJobGroup("bad-sample", "usage-error probe")
+    try:
+        rc, _ = _run(capsys, [
+            "--clips", str(tmp_path / "clips"),
+            "--manifest", str(tmp_path / "manifest"),
+            "--checkpoint-dir", str(tmp_path / "bad-clips"),
+            "--no-audio", "--sample", "1.5",
+        ])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rc == 2
+    assert sc.statusTracker().getJobIdsForGroup("bad-sample") == []
+
 
 def test_runner_compact_maintenance(spark, tmp_path, capsys):
     """--compact: the append-only lineage history (one file per run)

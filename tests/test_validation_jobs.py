@@ -119,18 +119,14 @@ def test_runner_pass_job_budget_and_summary_without_jobs(
 
 def test_drift_rules_share_one_histogram_action(spark, corpus):
     clips = with_partition_cols(spark.read.parquet(str(corpus / "clips")))
-    bounds = {"dur_ms": (0.0, 4000.0), "sr_hz": (8000.0, 48000.0)}
     one = [DriftRule("dur_ms")]
     two = [DriftRule("dur_ms"), DriftRule("sr_hz", bins=10)]
-    jobs_one, _ = _jobs(
-        spark, "drift-one", lambda: compile_rules(clips, one, drift_bounds=bounds)
-    )
-    jobs_two, plan = _jobs(
-        spark, "drift-two", lambda: compile_rules(clips, two, drift_bounds=bounds)
-    )
-    # compiling is the one partition-stats action; a second drift column
-    # rides in it instead of adding a histogram
-    assert jobs_two == jobs_one <= 2
+    jobs_one, _ = _jobs(spark, "drift-one", lambda: compile_rules(clips, one))
+    jobs_two, plan = _jobs(spark, "drift-two", lambda: compile_rules(clips, two))
+    # compiling is the bin-edge min/max collect plus the one
+    # partition-stats action; a second drift column rides in both
+    # instead of adding a histogram
+    assert jobs_two == jobs_one <= 4
     # scoring ran on the driver: the violations are projections of a
     # local relation and need no further scan
     assert "Scan parquet" not in plan.violations._jdf.queryExecution().executedPlan().toString()

@@ -22,8 +22,7 @@ violations plan of a validation pass over a small synthetic clip table:
 the default audio ruleset (what the runner's batch pass compiles), and
 ``rulesets/clips-strict.json`` with and without the chunked window path.
 A refactor that claims "same behaviour" proves it with
-``diff -r parent_plans/ change_plans/``. ``decontaminate``'s plan also
-depends on the queries run before it in the session: diff it alone.
+``diff -r parent_plans/ change_plans/``.
 """
 
 from __future__ import annotations

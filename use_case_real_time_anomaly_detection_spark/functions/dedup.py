@@ -872,11 +872,12 @@ def contamination_scores(
     (score is exact: both counts come from the same distinct-gram
     relation).
 
-    ONE corpus pass: the corpus gram relation is built once, left-joined
-    against the broadcast benchmark gram SET (identity of the benchmark
-    item doesn't matter for gating), and both counts fall out of a
-    single partial-aggregating groupBy — no re-derivation of the shingle
-    pipeline per count (the round-2 multiple-FileScan class).
+    ONE corpus pass: the distinct (id, gram) relation is built once,
+    left-joined against the broadcast benchmark gram SET (identity of the
+    benchmark item doesn't matter for gating), and both counts are plain
+    counts of one groupBy — no re-derivation of the shingle pipeline per
+    count (the round-2 multiple-FileScan class), and no distinct
+    aggregates, whose Expand column order Spark picks per session.
     """
     if not 0.0 <= min_score < 1.0:
         raise ValueError(
@@ -890,13 +891,12 @@ def contamination_scores(
         .withColumn("__hit", F.lit(1))
     )
     return (
-        cg.join(F.broadcast(bset), "gram", "left")
+        cg.distinct()
+        .join(F.broadcast(bset), "gram", "left")
         .groupBy(id_col)
         .agg(
-            F.count_distinct("gram").alias("n_grams"),
-            F.count_distinct(
-                F.when(F.col("__hit").isNotNull(), F.col("gram"))
-            ).alias("shared_grams"),
+            F.count("gram").alias("n_grams"),
+            F.count("__hit").alias("shared_grams"),
         )
         .withColumn(
             "score",

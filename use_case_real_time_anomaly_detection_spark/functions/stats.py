@@ -187,10 +187,10 @@ def drift_bin_edges(bounds, bins: int) -> tuple[float, float]:
 
 def drift_histogram(column: str, lo: float, width: float, bins: int) -> Column:
     """Aggregate: the dense per-bin count array of ``column`` on the grid
-    (lo, width, bins), NULLs excluded. Both ends clamp: callers may pass
-    bounds from an external source (profile state, column stats) that is
-    narrower than the live data, and such rows must land in the edge
-    bins instead of vanishing."""
+    (lo, width, bins), NULLs excluded. Callers build the grid over the
+    frame's own [min, max]: the upper clamp keeps the column max, which
+    floors to index ``bins``, in the last bin, and the lower clamp never
+    fires."""
     v = F.col(column).cast("double")
     # greatest/least SKIP nulls, so the NULL guard must be explicit
     b = F.when(
@@ -276,7 +276,6 @@ def drift_scores(
     *,
     partition_col: str,
     bins: int = 20,
-    bounds: tuple[float, float] | None = None,
 ) -> DataFrame:
     """Per-partition KS + PSI + W1 of `column` vs a robust consensus
     baseline (the math of :func:`score_drift`).
@@ -284,10 +283,10 @@ def drift_scores(
     The engine's drift math (operators/compiler.py DriftRule), exposed as
     a standalone operator so any table/axis can be scored and so the
     DuckDB oracle can verify it SQL-side (__spark_entry__.drift_events):
-    fixed equal-width bins over the global [min, max] (one cheap
-    column-pruned driver agg fixes the edges, unless ``bounds`` is
-    given), then ONE grouped action collects a dense per-bin count array
-    per partition, scored on the driver.
+    fixed equal-width bins over the frame's own [min, max] (one cheap
+    column-pruned driver agg fixes the edges), then ONE grouped action
+    collects a dense per-bin count array per partition, scored on the
+    driver.
 
     Returns (partition_key, psi, ks, w1) for ALL partitions
     (thresholding is the caller's policy). NULLs in `column` are
@@ -295,19 +294,17 @@ def drift_scores(
     """
     spark = df.sparkSession
     key_type = df.schema[partition_col].dataType
-    if bounds is None:
-        mm = (
-            df.filter(F.col(column).isNotNull())
-            .agg(F.min(column).alias("lo"), F.max(column).alias("hi"))
-            .collect()[0]
-        )
-        bounds = (mm["lo"], mm["hi"])
-    if bounds[0] is None:
+    mm = (
+        df.filter(F.col(column).isNotNull())
+        .agg(F.min(column).alias("lo"), F.max(column).alias("hi"))
+        .collect()[0]
+    )
+    if mm["lo"] is None:
         # all-NULL column: keep the FULL result schema (incl. w1) so a
         # DriftRule with any fence set degrades to zero violations
         # instead of an UNRESOLVED_COLUMN crash downstream
         return drift_frame(spark, [], key_type)
-    lo, width = drift_bin_edges(bounds, bins)
+    lo, width = drift_bin_edges((mm["lo"], mm["hi"]), bins)
     hists = (
         df.groupBy(F.col(partition_col).alias("pk"))
         .agg(drift_histogram(column, lo, width, bins).alias("h"))
@@ -747,40 +744,3 @@ def drift_from_states(states: DataFrame, column: str) -> DataFrame:
         ),
         states.schema["partition_key"].dataType,
     )
-
-
-def bounds_from_states(states: DataFrame, columns: list[str]) -> dict:
-    """Global [min, max] per numeric column from the slim profile-state
-    table — ZERO corpus IO.
-
-    The drift bin-edge agg (compile_rules' one driver collect over all
-    DriftRule columns) is the only per-run full-corpus scan a
-    DriftRule-carrying ruleset adds; at 10^12 rows it is avoidable
-    whenever the checkpointed state table (maintained per validated
-    partition by every runner invocation — CheckpointStore.
-    record_profile) covers the table: min over the states' ``{c}__min``
-    / max over ``{c}__max`` IS the exact corpus min/max (the states are
-    exact mergeable moments, not sketches). One agg over
-    O(partitions) rows serves every drift column at once.
-
-    Columns without state fields, or whose state min/max are NULL
-    (never profiled / all-NULL column), are omitted from the result —
-    the caller falls back to the corpus agg for those (cold start).
-    """
-    have = set(states.columns)
-    usable = [c for c in columns if f"{c}__min" in have and f"{c}__max" in have]
-    if not usable:
-        return {}
-    aggs = []
-    for c in usable:
-        aggs += [
-            F.min(f"{c}__min").alias(f"__lo_{c}"),
-            F.max(f"{c}__max").alias(f"__hi_{c}"),
-        ]
-    row = states.agg(*aggs).collect()[0]
-    out = {}
-    for c in usable:
-        lo, hi = row[f"__lo_{c}"], row[f"__hi_{c}"]
-        if lo is not None and hi is not None:
-            out[c] = (float(lo), float(hi))
-    return out

@@ -803,19 +803,11 @@ def compile_rules(
     refs: dict[str, DataFrame] | None = None,
     window_chunk_size: int | None = None,
     exclusion_windows: DataFrame | None = None,
-    drift_bounds: dict | None = None,
 ) -> CompiledPlan:
     """Compile ``rules`` over ``df`` into a single fused plan.
 
     Eager: compiling runs the partition-stats action (see
     :func:`_partition_stats`); the returned violations stay lazy.
-
-    ``drift_bounds`` — optional {column: (lo, hi)} bin-edge bounds for
-    DriftRule columns, typically served from the checkpointed profile
-    state table (functions/stats.bounds_from_states): when every drift
-    column is covered the per-run corpus min/max collect is skipped
-    (the one extra job DriftRules otherwise cost); uncovered columns
-    fall back to it (cold start).
 
     ``df`` must already expose ``partition_col`` (the verdict axis) and,
     for sequence rules, ``seq_col`` (monotone within a partition — for the
@@ -1087,7 +1079,6 @@ def compile_rules(
         df, quartiles, of(DriftRule), key_col=key_col,
         partition_col=partition_col, seq_col=seq_col,
         last_seq=frontier is not None and bool(of(GapRule)),
-        drift_bounds=drift_bounds,
     )
 
     # ---- per-partition IQR fences: a broadcast join of the stats rows ----
@@ -1608,7 +1599,6 @@ def _partition_stats(
     partition_col: str,
     seq_col: str | None,
     last_seq: bool,
-    drift_bounds: dict | None,
 ) -> tuple[DataFrame, dict]:
     """The per-partition aggregates of the rule set in ONE collected
     ``df.groupBy(partition_col).agg(...)``.
@@ -1627,8 +1617,8 @@ def _partition_stats(
     Reads ``df``, the pre-payload frame: the payload Arrow pass is a
     column-pruning barrier, so an aggregate hanging off the decoded frame
     would re-decode every payload to read one numeric column. Drift bin
-    edges come from ``drift_bounds`` or from one min/max collect over the
-    uncovered columns (the only other eager job).
+    edges come from one min/max collect over ``df``'s drift columns (the
+    only other eager job), so the same table always gets the same edges.
     """
     from ..functions.stats import (
         drift_bin_edges,
@@ -1655,27 +1645,22 @@ def _partition_stats(
         ]
 
     drift = list(dict.fromkeys((r.column, r.bins) for r in drift_rules))
-    bounds = dict(drift_bounds or {})
-    missing = list(dict.fromkeys(c for c, _ in drift if c not in bounds))
-    if missing:
-        # ONE driver agg fixes bin edges for every UNCOVERED drift column;
-        # columns served by drift_bounds (profile state / column stats)
-        # skip it entirely
+    grids = {}
+    if drift:
+        # ONE driver agg fixes bin edges for every drift column
         row = df.agg(
             *[
                 a
-                for c in missing
+                for c in dict.fromkeys(c for c, _ in drift)
                 for a in (F.min(c).alias(f"__lo_{c}"), F.max(c).alias(f"__hi_{c}"))
             ]
         ).collect()[0]
-        for c in missing:
-            bounds[c] = (row[f"__lo_{c}"], row[f"__hi_{c}"])
-    grids = {}
-    for i, (c, bins) in enumerate(drift):
-        if bounds[c][0] is not None:  # an all-NULL column scores nothing
-            lo, width = drift_bin_edges(bounds[c], bins)
-            grids[c, bins] = (f"__hist_{i}", width)
-            aggs.append(drift_histogram(c, lo, width, bins).alias(f"__hist_{i}"))
+        for i, (c, bins) in enumerate(drift):
+            bounds = (row[f"__lo_{c}"], row[f"__hi_{c}"])
+            if bounds[0] is not None:  # an all-NULL column scores nothing
+                lo, width = drift_bin_edges(bounds, bins)
+                grids[c, bins] = (f"__hist_{i}", width)
+                aggs.append(drift_histogram(c, lo, width, bins).alias(f"__hist_{i}"))
 
     spark = df.sparkSession
     grouped = df.groupBy(partition_col).agg(*aggs)

@@ -81,12 +81,12 @@ class ValidationEngine:
         max_violations_per_group: int | None = None,
         exclusion_windows: DataFrame | None = None,
         warn_detectors: tuple | list | None = None,
-        drift_bounds: dict | None = None,
     ) -> RunResult:
         """Compile + evaluate ``rules`` over ``df``. Compiling runs the
-        partition-stats action (plus a drift bin-edge collect when a
-        DriftRule's bounds are not given); the returned violations and
-        verdicts stay lazy and trigger the scan on action.
+        partition-stats action (plus, with a DriftRule, the min/max
+        collect that fixes its bin edges from ``df`` itself); the
+        returned violations and verdicts stay lazy and trigger the scan
+        on action.
 
         ``skip_partitions`` — one column ``partition_key`` of already-
         completed partitions (the resume path: anti-join, ≙ the
@@ -165,7 +165,6 @@ class ValidationEngine:
             refs=refs,
             window_chunk_size=window_chunk_size,
             exclusion_windows=exclusion_windows,
-            drift_bounds=drift_bounds,
         )
 
         # composite-key dedup ≙ dedup_log.pipe:4-6 (FIXTURES.md §3).

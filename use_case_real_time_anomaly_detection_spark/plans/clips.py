@@ -76,7 +76,6 @@ def validate_table(
     exclusion_windows: DataFrame | None = None,
     extra_refs: dict[str, DataFrame] | None = None,
     warn_detectors: tuple | list | None = None,
-    drift_bounds: dict | None = None,
 ) -> RunResult:
     """Run a rule set over ANY modality table (clips, images, videos —
     the engine is key-agnostic; §2.10's multimodal mandate).
@@ -118,7 +117,6 @@ def validate_table(
         max_violations_per_group=max_violations_per_group,
         exclusion_windows=exclusion_windows,
         warn_detectors=warn_detectors,
-        drift_bounds=drift_bounds,
     )
 
 

@@ -218,12 +218,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
         "schema in the ruleset document instead",
     )
     p.add_argument("--no-resume", action="store_true", help="revalidate everything")
-    p.add_argument(
-        "--no-state-bounds",
-        action="store_true",
-        help="always derive drift bin bounds from a corpus min/max scan "
-        "instead of the checkpointed profile-state table",
-    )
     p.add_argument("--run-id", default=None)
     p.add_argument(
         "--master",
@@ -261,19 +255,6 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark(args.master)
     spark.sparkContext.setLogLevel("WARN")
-
-    extra_refs = None
-    if args.ref_table:
-        extra_refs = {}
-        for binding in args.ref_table:
-            name, sep, path = binding.partition("=")
-            if not sep or not name or not path:
-                print(
-                    f"--ref-table needs NAME=PATH, got {binding!r}",
-                    file=sys.stderr,
-                )
-                return 2
-            extra_refs[name] = spark.read.parquet(path)
 
     if args.diff_runs:
         from .operators.engine import verdict_diff
@@ -376,57 +357,84 @@ def main(argv: list[str] | None = None) -> int:
         }))
         return 1 if cur_rows else 0
 
-    if args.stream:
-        if not args.manifest and args.key_col == "clip_id":
-            print("--manifest is required with --stream", file=sys.stderr)
+    # usage errors and the config load come before any Spark job
+    ref_paths = {}
+    for binding in args.ref_table or ():
+        name, sep, path = binding.partition("=")
+        if not sep or not name or not path:
+            print(f"--ref-table needs NAME=PATH, got {binding!r}", file=sys.stderr)
             return 2
+        ref_paths[name] = path
+    if not args.synth and not args.manifest and args.key_col == "clip_id":
+        # the clip contract carries referential/transcript rules;
+        # generic tables (--key-col) may validate manifest-free
+        mode = "--stream" if args.stream else "--clips"
+        print(f"--manifest is required with {mode}", file=sys.stderr)
+        return 2
+    if args.max_violations is not None and args.max_violations < 1:
+        print("--max-violations needs an integer >= 1", file=sys.stderr)
+        return 2
+    if args.sample is not None and not (0.0 < args.sample <= 1.0):
+        print("--sample needs a fraction in (0, 1]", file=sys.stderr)
+        return 2
+    if args.rules:
+        rules, declared_schema, doc_warn = load_ruleset_document(args.rules)
+    else:
+        rules = default_rules(with_audio=not args.no_audio)
+        declared_schema = None
+        doc_warn = ()
+    # severity demotions: the ruleset document's warn_detectors plus any
+    # --warn names (union — either source can demote)
+    warn = tuple(dict.fromkeys([*doc_warn, *_split_warn(args.warn)]))
+    if args.stream and args.key_col != "clip_id" and declared_schema is None:
+        print(
+            "--stream with --key-col needs a ruleset document "
+            "declaring the table schema",
+            file=sys.stderr,
+        )
+        return 2
+    drift_col, drift_psi = None, 0.25
+    if args.stream_drift:
+        drift_col, _, psi_s = args.stream_drift.partition(":")
+        if drift_col not in ("dur_ms", "sr_hz"):
+            print(
+                "--stream-drift: column must be one of dur_ms, sr_hz "
+                "(the columns the streamed profile states carry "
+                f"histograms for), got {drift_col!r}",
+                file=sys.stderr,
+            )
+            return 2
+        try:
+            drift_psi = float(psi_s) if psi_s else 0.25
+        except ValueError:
+            print(
+                f"--stream-drift: PSI threshold must be a number, "
+                f"got {psi_s!r}",
+                file=sys.stderr,
+            )
+            return 2
+    extra_refs = (
+        {name: spark.read.parquet(path) for name, path in ref_paths.items()}
+        or None
+    )
+    exclusion_windows = (
+        spark.read.parquet(args.exclusion_windows) if args.exclusion_windows else None
+    )
+
+    if args.stream:
         from .sources.synth import CLIPS_SCHEMA
         from .streaming.pipeline import stream_clips_validation
 
-        drift_col, drift_psi = None, 0.25
-        if args.stream_drift:
-            drift_col, _, psi_s = args.stream_drift.partition(":")
-            if drift_col not in ("dur_ms", "sr_hz"):
-                print(
-                    "--stream-drift: column must be one of dur_ms, sr_hz "
-                    "(the columns the streamed profile states carry "
-                    f"histograms for), got {drift_col!r}",
-                    file=sys.stderr,
-                )
-                return 2
-            try:
-                drift_psi = float(psi_s) if psi_s else 0.25
-            except ValueError:
-                print(
-                    f"--stream-drift: PSI threshold must be a number, "
-                    f"got {psi_s!r}",
-                    file=sys.stderr,
-                )
-                return 2
-        store = CheckpointStore(get_catalog(spark, args.checkpoint_dir))
-        manifest = spark.read.parquet(args.manifest) if args.manifest else None
-        if args.rules:
-            s_rules, s_schema, s_doc_warn = load_ruleset_document(args.rules)
-        else:
-            s_rules = default_rules(with_audio=not args.no_audio)
-            s_schema = None
-            s_doc_warn = ()
         if args.key_col != "clip_id":
-            # generic-table stream: the file source needs a declared read
-            # schema — take it from the ruleset document's schema contract
-            # (the same one the batch gate enforces)
-            if s_schema is None:
-                print(
-                    "--stream with --key-col needs a ruleset document "
-                    "declaring the table schema",
-                    file=sys.stderr,
-                )
-                return 2
-            ddl = ", ".join(f"{c.name} {c.dtype}" for c in s_schema.columns)
+            # generic-table stream: the file source's read schema is the
+            # ruleset document's schema contract (the one the batch gate
+            # enforces)
+            ddl = ", ".join(f"{c.name} {c.dtype}" for c in declared_schema.columns)
             stream = spark.readStream.schema(ddl).parquet(args.stream)
         else:
             stream = spark.readStream.schema(CLIPS_SCHEMA).parquet(args.stream)
-        s_warn = tuple(dict.fromkeys([*s_doc_warn, *_split_warn(args.warn)]))
+        store = CheckpointStore(get_catalog(spark, args.checkpoint_dir))
+        manifest = spark.read.parquet(args.manifest) if args.manifest else None
         t0 = time.time()
         q = stream_clips_validation(
             stream,
@@ -434,18 +442,14 @@ def main(argv: list[str] | None = None) -> int:
             store,
             checkpoint_dir=f"{args.checkpoint_dir}/_stream_ckpt",
             key_col=args.key_col,
-            rules=s_rules,
-            warn_detectors=s_warn or None,
+            rules=rules,
+            warn_detectors=warn or None,
             quarantine=args.quarantine,
             fail_threshold=args.fail_threshold,
             profile=args.stream_profile or drift_col is not None,
             drift_on=drift_col,
             drift_psi=drift_psi,
-            exclusion_windows=(
-                spark.read.parquet(args.exclusion_windows)
-                if args.exclusion_windows
-                else None
-            ),
+            exclusion_windows=exclusion_windows,
             extra_refs=extra_refs,
         )
         q.awaitTermination()
@@ -484,11 +488,6 @@ def main(argv: list[str] | None = None) -> int:
         frontier = args.frontier if args.frontier is not None else frontier_of(spec)
     else:
         clips = spark.read.parquet(args.clips)
-        if not args.manifest and args.key_col == "clip_id":
-            # the clip contract carries referential/transcript rules;
-            # generic tables (--key-col) may validate manifest-free
-            print("--manifest is required with --clips", file=sys.stderr)
-            return 2
         manifest = spark.read.parquet(args.manifest) if args.manifest else None
         if args.frontier is not None:
             frontier = args.frontier
@@ -504,28 +503,13 @@ def main(argv: list[str] | None = None) -> int:
     store = CheckpointStore(get_catalog(spark, args.checkpoint_dir))
     skip = None if args.no_resume else store.completed_partitions(frontier)
 
-    if args.rules:
-        rules, declared_schema, doc_warn = load_ruleset_document(args.rules)
-    else:
-        rules = default_rules(with_audio=not args.no_audio)
-        declared_schema = None
-        doc_warn = ()
-    # severity demotions: the ruleset document's warn_detectors plus any
-    # --warn names (union — either source can demote)
-    warn = tuple(dict.fromkeys([*doc_warn, *_split_warn(args.warn)]))
     # pre-flight schema gate: driver-side metadata comparison only (no
     # job) — a mis-typed upstream column aborts here, not mid-scan.
     # The ruleset document's "schema" key overrides the built-in clip
     # contract (BASELINE.json input_hint shape).
     if declared_schema is not None or args.key_col == "clip_id":
         clips = enforce_schema(clips, declared_schema or CLIPS_TABLE_SCHEMA)
-    if args.max_violations is not None and args.max_violations < 1:
-        print("--max-violations needs an integer >= 1", file=sys.stderr)
-        return 2
     if args.sample is not None:
-        if not (0.0 < args.sample <= 1.0):
-            print("--sample needs a fraction in (0, 1]", file=sys.stderr)
-            return 2
         from .functions.text import hash_sample
 
         # applied AFTER the schema gate (the contract is checked on the
@@ -534,37 +518,6 @@ def main(argv: list[str] | None = None) -> int:
         clips = hash_sample(
             clips, id_col=args.key_col, fraction=args.sample, salt="validate"
         )
-    # drift bin bounds from the checkpointed profile-state table when it
-    # covers every partition of this table — the corpus min/max agg (the
-    # one extra full-column scan a DriftRule-carrying ruleset adds per
-    # run) then never happens; cold start / partial coverage falls back
-    # per column inside compile_rules. Coverage is checked against the
-    # table's partition set (a clip_id-pruned distinct here; free catalog
-    # metadata on Iceberg).
-    drift_bounds = None
-    if not args.no_state_bounds and args.sample is None:
-        from .operators.rules import DriftRule as _DriftRule
-
-        drift_cols = [r.column for r in rules if isinstance(r, _DriftRule)]
-        if drift_cols and store.catalog.exists("profile_state"):
-            from .functions.stats import bounds_from_states
-            from .operators.schema import with_partition_cols as _wpc
-
-            states = store.catalog.read("profile_state").drop("pk")
-            state_parts = {
-                r["partition_key"]
-                for r in states.select("partition_key").distinct().collect()
-            }
-            table_parts = {
-                r["partition_key"]
-                for r in _wpc(clips, key_col=args.key_col)
-                .select("partition_key")
-                .distinct()
-                .collect()
-            }
-            if table_parts <= state_parts:
-                drift_bounds = bounds_from_states(states, drift_cols) or None
-
     t0 = time.time()
     result = validate_table(
         clips,
@@ -577,14 +530,9 @@ def main(argv: list[str] | None = None) -> int:
         persist=True,
         fail_threshold=args.fail_threshold,
         max_violations_per_group=args.max_violations,
-        exclusion_windows=(
-            spark.read.parquet(args.exclusion_windows)
-            if args.exclusion_windows
-            else None
-        ),
+        exclusion_windows=exclusion_windows,
         extra_refs=extra_refs,
         warn_detectors=warn or None,
-        drift_bounds=drift_bounds,
     )
     if args.sample is not None:
         # smoke runs are NON-AUTHORITATIVE: verdicts recorded for
