@@ -1243,7 +1243,7 @@ def _q_clips_quarantine(spark, sf):
 
     res = _clips_meta_result(spark)
     meta = spark.read.parquet(_CLIPS_META)
-    _, quar = quarantine_split(meta, res.violations)
+    _, quar = quarantine_split(meta, res)
     return quar
 
 
@@ -1256,7 +1256,7 @@ def _q_clips_clean(spark, sf):
 
     res = _clips_meta_result(spark)
     meta = spark.read.parquet(_CLIPS_META)
-    clean, _ = quarantine_split(meta, res.violations)
+    clean, _ = quarantine_split(meta, res)
     return clean.select("clip_id", "codec", "dur_ms")
 
 

@@ -1,28 +1,19 @@
-"""Incremental dedup-gated ingestion: gate semantics + streaming sink.
+"""Incremental dedup gate (functions/incremental): gate semantics.
 
-Gate semantics are pinned by a hand-built scenario with one doc per
-rejection reason; the streaming sink is exercised end-to-end (two file
-waves through a real Structured Streaming query) plus a replayed-batch
-idempotence check (the at-least-once → exactly-once contract,
-≙ the reference's overlap+dedup copy design, SURVEY.md §2.8.4).
+Pinned by a hand-built scenario with one doc per rejection reason
+(exact-batch, exact-corpus, near-corpus, near-batch, admitted), with
+and without the near gates, without a corpus, and with a prebuilt
+signature index.
 """
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from use_case_real_time_anomaly_detection_spark.functions.incremental import (
     admit,
     build_signature_index,
     dedup_gate,
-)
-from use_case_real_time_anomaly_detection_spark.sources.tables import ParquetCatalog
-from use_case_real_time_anomaly_detection_spark.streaming.ingest import (
-    CORPUS_TABLE,
-    HASH_TABLE,
-    ingest_batch,
-    stream_corpus_ingest,
 )
 
 BASE = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -100,139 +91,3 @@ def test_gate_with_prebuilt_index_matches_on_the_fly(spark, scenario):
     a = _reasons(dedup_gate(batch, corpus, threshold=0.5))
     b = _reasons(dedup_gate(batch, corpus, index=idx, threshold=0.5))
     assert a == b
-
-
-def test_stream_two_waves_dedups_across_and_within(spark, tmp_path):
-    src = tmp_path / "incoming"
-    src.mkdir()
-    catalog = ParquetCatalog(spark, str(tmp_path / "tables"))
-    schema = "doc_id BIGINT, text STRING"
-
-    def run_wave():
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        q = stream_corpus_ingest(
-            stream,
-            catalog,
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            threshold=0.5,
-        )
-        q.awaitTermination(120)
-
-    wave1 = spark.createDataFrame(
-        [(1, BASE), (2, NOVEL), (3, NOVEL)], ["doc_id", "text"]
-    )
-    wave1.coalesce(1).write.mode("append").parquet(str(src))
-    run_wave()
-    got1 = sorted(
-        r["doc_id"] for r in catalog.read(CORPUS_TABLE).select("doc_id").collect()
-    )
-    assert got1 == [1, 2]  # 3 is an exact within-wave dup
-
-    wave2 = spark.createDataFrame(
-        [
-            (4, BASE),  # exact vs wave-1 corpus
-            (5, BASE + " lambda"),  # near vs wave-1 corpus
-            (6, "fresh unseen sentence with enough distinct tokens inside"),
-        ],
-        ["doc_id", "text"],
-    )
-    wave2.coalesce(1).write.mode("append").parquet(str(src))
-    run_wave()
-    got2 = sorted(
-        r["doc_id"] for r in catalog.read(CORPUS_TABLE).select("doc_id").collect()
-    )
-    assert got2 == [1, 2, 6]
-    # the hash index tracks the corpus exactly
-    assert sorted(
-        r["doc_id"] for r in catalog.read(HASH_TABLE).select("doc_id").collect()
-    ) == [1, 2, 6]
-
-
-def test_replayed_batch_is_idempotent(spark, tmp_path):
-    catalog = ParquetCatalog(spark, str(tmp_path / "tables"))
-    b0 = spark.createDataFrame([(1, BASE), (2, NOVEL)], ["doc_id", "text"])
-    ingest_batch(b0, 0, catalog)
-    b1 = spark.createDataFrame(
-        [(3, "some new words never seen before in this corpus")], ["doc_id", "text"]
-    )
-    ingest_batch(b1, 1, catalog)
-    # replay batch 1 (failure before the stream checkpoint committed):
-    # dynamic partition overwrite replaces __batch=1 instead of appending
-    ingest_batch(b1, 1, catalog)
-    corpus = catalog.read(CORPUS_TABLE)
-    assert corpus.count() == 3
-    assert corpus.filter(F.col("doc_id") == 3).count() == 1
-
-
-def test_stream_clip_ingest_two_waves(spark, tmp_path):
-    """Audio twin of the doc sink: wave 2's byte-identical copy and
-    transcoded twin of wave-1 clips are rejected against the corpus
-    built by wave 1; the fresh clip is admitted; the AudioIndex tables
-    track the corpus exactly."""
-    from pyspark.sql import functions as F
-
-    from use_case_real_time_anomaly_detection_spark.functions.audio_features import (
-        reencode_clips,
-    )
-    from use_case_real_time_anomaly_detection_spark.sources.synth import (
-        CLIPS_SCHEMA,
-        SynthSpec,
-        generate_clips,
-    )
-    from use_case_real_time_anomaly_detection_spark.streaming.ingest import (
-        CLIP_HASH_TABLE,
-        CLIP_VERIFY_TABLE,
-        CLIPS_TABLE,
-        stream_clip_ingest,
-    )
-
-    src = tmp_path / "incoming_clips"
-    src.mkdir()
-    catalog = ParquetCatalog(spark, str(tmp_path / "clip_tables"))
-
-    clips = (
-        generate_clips(spark, SynthSpec(partitions=1, clips_per_partition=40))
-        .dropDuplicates(["clip_id"])
-        .where(F.col("codec") == "pcm16")
-        .limit(8)
-        .localCheckpoint()
-    )
-    ids = sorted(r["clip_id"] for r in clips.select("clip_id").collect())
-
-    def run_wave():
-        stream = spark.readStream.schema(CLIPS_SCHEMA).parquet(str(src))
-        q = stream_clip_ingest(
-            stream, catalog, checkpoint_dir=str(tmp_path / "clip_ckpt")
-        )
-        q.awaitTermination(180)
-
-    wave1 = clips.where(F.col("clip_id") != ids[-1])
-    wave1.coalesce(1).write.mode("append").parquet(str(src))
-    run_wave()
-    got1 = sorted(
-        r["clip_id"] for r in catalog.read(CLIPS_TABLE).select("clip_id").collect()
-    )
-    assert got1 == ids[:-1]
-
-    wave2 = (
-        clips.where(F.col("clip_id") == ids[0])
-        .withColumn("clip_id", F.concat("clip_id", F.lit("~copy")))  # exact-corpus
-        .unionByName(
-            reencode_clips(
-                clips.where(F.col("clip_id") == ids[1])
-            ).withColumn("clip_id", F.concat("clip_id", F.lit("~re")))  # near-corpus
-        )
-        .unionByName(clips.where(F.col("clip_id") == ids[-1]))  # fresh
-    )
-    wave2.coalesce(1).write.mode("append").parquet(str(src))
-    run_wave()
-    got2 = sorted(
-        r["clip_id"] for r in catalog.read(CLIPS_TABLE).select("clip_id").collect()
-    )
-    assert got2 == ids  # only the fresh clip joined the corpus
-    assert sorted(
-        r["clip_id"] for r in catalog.read(CLIP_HASH_TABLE).select("clip_id").collect()
-    ) == ids
-    assert sorted(
-        r["doc"] for r in catalog.read(CLIP_VERIFY_TABLE).select("doc").collect()
-    ) == ids

@@ -419,6 +419,7 @@ def test_empty_inputs_yield_empty_results(spark):
         topk_values,
     )
     from use_case_real_time_anomaly_detection_spark.operators.engine import (
+        RunResult,
         quarantine_split,
         verdict_diff,
     )
@@ -437,7 +438,10 @@ def test_empty_inputs_yield_empty_results(spark):
     empty_docs = spark.createDataFrame([], "doc_id string, text string")
     empty_emb = spark.createDataFrame([], "emb_id long, vec array<float>")
 
-    clean, quar = quarantine_split(empty_clips, empty_viol)
+    empty_run = RunResult(
+        violations=empty_viol, verdicts=empty_verd, profile=None, run_id="empty"
+    )
+    clean, quar = quarantine_split(empty_clips, empty_run)
     assert clean.count() == 0 and quar.count() == 0
     assert verdict_diff(empty_verd, empty_verd).count() == 0
     assert topk_values(empty_clips, ["codec", "sr_hz"], k=3).count() == 0

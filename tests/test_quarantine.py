@@ -33,7 +33,7 @@ def split(spark):
         refs={"clip_manifest": manifest},
         persist=True,
     )
-    clean, quar = quarantine_split(clips, res.violations)
+    clean, quar = quarantine_split(clips, res)
     return clips, res.violations.persist(), clean.persist(), quar.persist()
 
 
@@ -103,6 +103,47 @@ def test_duplicated_keys_quarantine_every_copy(split):
     assert dup_keys  # fixture plants duplicates
     remaining = clean.filter(F.col("clip_id").isin(dup_keys)).count()
     assert remaining == 0  # strict: ALL copies of a duplicated key routed out
+
+
+def test_run_partition_level_detectors_do_not_quarantine(spark):
+    """The skip list is the run's own partition_level: a second-tier
+    GapRule names its stale partition's last clip and an FdRule names
+    the joined determinant values, and neither lands in quarantine."""
+    from use_case_real_time_anomaly_detection_spark.operators.rules import (
+        FdRule,
+        GapRule,
+        RangeRule,
+    )
+
+    clips = spark.createDataFrame(
+        [
+            ("p0", "p0-1", 1, "pcm16", 16000, 500),
+            ("p0", "p0-2", 2, "pcm16", 16000, 500),
+            ("p1", "p1-1", 1, "pcm16", 16000, 500),
+            ("p1", "p1-2", 2, "pcm16", 8000, 500),
+            ("p1", "p1-3", 3, "pcm16", 16000, 9000),
+            ("p1", "p1-4", 4, "pcm16", 16000, 500),
+        ],
+        "partition_key string, clip_id string, seq long, codec string, "
+        "sr_hz int, dur_ms int",
+    )
+    rules = [
+        GapRule(max_staleness=1, max_gap=5, detector="timeout-tier2"),
+        FdRule(determinants=("codec",), dependent="sr_hz", scope="partition"),
+        RangeRule("dur_ms", 200, 2000),
+    ]
+    res = ValidationEngine(seq_col="seq").run(clips, rules, frontier=4)
+    fired = {
+        (r["detector"], r["clip_id"]) for r in res.violations.collect()
+    }
+    assert fired == {
+        ("timeout-tier2", "p0-2"),
+        ("functional-dependency", "pcm16"),
+        ("out-of-range", "p1-3"),
+    }
+    clean, quar = quarantine_split(clips, res)
+    assert {r["clip_id"] for r in quar.collect()} == {"p1-3"}
+    assert "p0-2" in {r["clip_id"] for r in clean.collect()}
 
 
 def test_verdict_diff_all_statuses(spark):

@@ -14,7 +14,6 @@ import pytest
 from use_case_real_time_anomaly_detection_spark.operators.config import (
     RULE_TYPES,
     dump_ruleset,
-    load_ruleset,
     rules_from_config,
     rules_to_config,
 )
@@ -128,7 +127,8 @@ def test_file_roundtrip_and_engine_equivalence(spark, tmp_path):
     ]
     path = str(tmp_path / "ruleset.json")
     dump_ruleset(hand, path)
-    loaded = load_ruleset(path)
+    with open(path, encoding="utf-8") as f:
+        loaded = rules_from_config(json.load(f))
     assert loaded == hand
 
     spec = SynthSpec(partitions=4, clips_per_partition=200)

@@ -434,6 +434,29 @@ def test_append_to_a_bigint_sensor_store_keeps_the_sensor_id(spark, tmp_path):
         assert _rows(ev.filter("event_id = 1").select("id", "value")) == [(7, 5000.0)]
 
 
+def test_append_parses_a_quoted_id_like_the_declared_schema(spark, tmp_path):
+    """The Events API parses through sources/ingest.parse_events: a
+    quoted numeric id is stored and served by the next GET, while a
+    non-numeric id is still quarantined."""
+    store = EventStore(spark, str(tmp_path / "ev"))
+    store.append_ndjson(NDJSON)
+    srv = AnalyticsAPIServer(store).start()
+    try:
+        body = "\n".join([
+            json.dumps({"id": "12", "timestamp": "2024-01-01T00:10:00", "value": "5000"}),
+            json.dumps({"id": "x", "timestamp": "2024-01-01T00:10:00", "value": "5000"}),
+        ])
+        assert store.append_ndjson(body) == (1, 1)
+        code, got = _get(
+            f"http://127.0.0.1:{srv.port}/v0/pipes/out_of_range.json"
+            "?max_value=1000&detect_window_seconds=600"
+        )
+    finally:
+        srv.shutdown()
+    assert code == 200 and got["rows"] == 1
+    assert got["data"][0]["id"] == 12 and got["data"][0]["value"] == 5000.0
+
+
 def test_copy_log_cron_logs_and_records_failures(spark, tmp_path, caplog):
     mat = MaterializedCopyLog(EventStore(spark, str(tmp_path / "ev")),
                               str(tmp_path / "copylog"))

@@ -23,7 +23,6 @@ from use_case_real_time_anomaly_detection_spark.operators.rules import (
 from use_case_real_time_anomaly_detection_spark.operators.suggest import (
     column_facts,
     suggest_rules,
-    suggest_ruleset,
 )
 
 
@@ -109,7 +108,7 @@ def test_suggest_round_trips_through_config_and_self_validates(spark):
     df = _frame(spark)
     rules = suggest_rules(df, max_set_size=3)
     # exact document round-trip — the promotable-artifact contract
-    doc = suggest_ruleset(df, max_set_size=3)
+    doc = rules_to_config(suggest_rules(df, max_set_size=3))
     assert rules_from_config(doc) == rules
 
     # self-consistency: run the suggested rules back over the same data

@@ -69,7 +69,7 @@ def test_warned_violations_do_not_quarantine(spark, frame):
     eng = ValidationEngine(key_col="clip_id", partition_col="partition_key")
     res = eng.run(frame, RULES, warn_detectors=("out-of-range",))
     clean, quar = quarantine_split(
-        frame, res.violations, warn_detectors=("out-of-range",)
+        frame, res, warn_detectors=("out-of-range",)
     )
     # only the not-null clip is quarantined; warned clips stay in corpus
     assert {r.clip_id for r in quar.collect()} == {"c2"}

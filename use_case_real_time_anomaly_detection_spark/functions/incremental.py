@@ -36,8 +36,8 @@ Scale shape (daily increments into a 10^12-doc corpus):
 - The corpus side never recomputes signatures per batch: a
   ``SignatureIndex`` — two SLIM relations, (id, text_hash) and the
   (doc, band, bh) LSH band index, both O(corpus) rows of a few dozen
-  bytes — is maintained incrementally (admitted docs' rows appended by
-  the streaming sink in `streaming/pipeline.py`).
+  bytes — is maintained incrementally (the caller appends
+  ``build_signature_index`` of each batch's admitted docs).
 - Every corpus-side join streams the big relation and BROADCASTS the
   batch side (a batch is a day's increment — always the small side).
 - The exact-Jaccard verify touches corpus TEXT only for candidate docs

@@ -187,10 +187,11 @@ def drift_bin_edges(bounds, bins: int) -> tuple[float, float]:
 
 def drift_histogram(column: str, lo: float, width: float, bins: int) -> Column:
     """Aggregate: the dense per-bin count array of ``column`` on the grid
-    (lo, width, bins), NULLs excluded. Callers build the grid over the
-    frame's own [min, max]: the upper clamp keeps the column max, which
-    floors to index ``bins``, in the last bin, and the lower clamp never
-    fires."""
+    (lo, width, bins), NULLs excluded; values outside the grid clamp to
+    the edge bins. Drift builds the grid over the frame's own [min, max],
+    where the upper clamp keeps the column max (which floors to index
+    ``bins``) in the last bin; profile_state's fixed grids clamp on both
+    sides."""
     v = F.col(column).cast("double")
     # greatest/least SKIP nulls, so the NULL guard must be explicit
     b = F.when(
@@ -457,24 +458,18 @@ def profile_state(
         )
     for c, (lo, hi, nbins) in histogram_columns.items():
         width = (float(hi) - float(lo)) / int(nbins)
-        b = F.floor((F.col(c).cast("double") - F.lit(float(lo))) / F.lit(width))
-        b = F.least(F.greatest(b, F.lit(0)), F.lit(int(nbins) - 1))
         aggs += [
-            F.sum(
-                F.when(F.col(c).isNotNull() & (b == i), 1).otherwise(0)
-            ).cast("long").alias(f"{c}__hb{i}")
-            for i in range(int(nbins))
+            # the stored state's type, array<bigint> with nullable
+            # elements: the optimizer drops a plain widening cast
+            # (SimplifyCasts), not a concat with a typed empty array
+            F.concat(
+                drift_histogram(c, float(lo), width, int(nbins)),
+                F.array().cast("array<bigint>"),
+            ).alias(f"{c}__hist"),
+            F.lit(float(lo)).alias(f"{c}__hlo"),
+            F.lit(float(hi)).alias(f"{c}__hhi"),
         ]
-    out = df.groupBy(F.col(partition_col).alias("partition_key")).agg(*aggs)
-    for c, (lo, hi, nbins) in histogram_columns.items():
-        bins = [f"{c}__hb{i}" for i in range(int(nbins))]
-        out = (
-            out.withColumn(f"{c}__hist", F.array(*bins))
-            .withColumn(f"{c}__hlo", F.lit(float(lo)))
-            .withColumn(f"{c}__hhi", F.lit(float(hi)))
-            .drop(*bins)
-        )
-    return out
+    return df.groupBy(F.col(partition_col).alias("partition_key")).agg(*aggs)
 
 
 def combine_profile_states(states: DataFrame) -> DataFrame:

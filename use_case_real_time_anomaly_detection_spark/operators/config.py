@@ -210,12 +210,6 @@ def warn_from_config(cfg) -> tuple:
     return tuple(w)
 
 
-def load_ruleset(path: str) -> list:
-    """Read a ruleset JSON file → rule list."""
-    with open(path, "r", encoding="utf-8") as f:
-        return rules_from_config(json.load(f))
-
-
 def load_ruleset_document(
     path: str,
 ) -> tuple[list, "TableSchema | None", tuple]:

@@ -42,6 +42,9 @@ class RunResult:
     verdicts: DataFrame  # VERDICT_COLUMNS
     profile: DataFrame | None  # per (partition, column) stats, if requested
     run_id: str
+    # detectors that emit O(1) rows per partition (compiled plan's
+    # partition_level): exact verdicts, and never a quarantined clip
+    partition_level: tuple = ()
     # the persisted frame when run(persist=True). With evidence capping,
     # `violations` is a DIFFERENT plan layered over this one, so
     # violations.unpersist() would uncache nothing — release through
@@ -230,7 +233,8 @@ class ValidationEngine:
 
         return RunResult(
             violations=violations, verdicts=verdicts, profile=profile,
-            run_id=run_id, cached=cached,
+            run_id=run_id, partition_level=tuple(plan.partition_level),
+            cached=cached,
         )
 
     def _verdicts(
@@ -293,10 +297,9 @@ class ValidationEngine:
 
 def quarantine_split(
     df: DataFrame,
-    violations: DataFrame,
+    result: RunResult,
     *,
     key_col: str = "clip_id",
-    partition_level_detectors: tuple = ("timeout",),
     broadcast_keys: bool = True,
     warn_detectors: tuple | list = (),
 ) -> tuple[DataFrame, DataFrame]:
@@ -314,9 +317,10 @@ def quarantine_split(
 
     Partition-level conditions do not indict individual clips, so they
     never quarantine rows: violations with a NULL clip_id (drift) are
-    skipped, as are ``partition_level_detectors`` (timeout names the
-    partition's LAST clip only as the reference's 'time of last report'
-    idiom — copy_timeout.pipe:39 — not as a bad row). Uniqueness
+    skipped, as are the run's ``result.partition_level`` detectors (a
+    GapRule names the partition's LAST clip only as the reference's
+    'time of last report' idiom — copy_timeout.pipe:39 — not as a bad
+    row; an FdRule's clip_id is its joined determinant values). Uniqueness
     violations name the duplicated key, so ALL copies of a duplicated
     clip are quarantined (strict: triage decides which copy returns).
     ``warn_detectors`` (WARN severity, see ValidationEngine.run) are
@@ -329,8 +333,8 @@ def quarantine_split(
     pathological runs where violations approach corpus size (the
     anti-join then shuffles both sides instead of OOMing the driver).
     """
-    skip = tuple(partition_level_detectors) + tuple(warn_detectors)
-    clip_level = violations.filter(
+    skip = result.partition_level + tuple(warn_detectors)
+    clip_level = result.violations.filter(
         F.col("clip_id").isNotNull() & ~F.col("detector").isin(*skip)
     )
     quarantine = clip_level.groupBy("partition_key", "clip_id").agg(

@@ -6,11 +6,11 @@ adopting this engine on a NEW corpus starts from nothing. This module
 closes that bootstrap gap the way production validation engines do
 (Deequ's ConstraintSuggestion, Great Expectations' profiler): compute
 column facts in one aggregation pass, derive the rules the observed data
-already satisfies, and hand back a ruleset document that round-trips
-through operators/config — diffable, promotable, and immediately
-runnable with ZERO violations on the data that produced it (every bound
-is an observed bound). The human then tightens what the data merely
-suggests.
+already satisfies, and hand back a rule list that round-trips through
+operators/config (``dump_ruleset``, or ``rules_to_config`` for the
+document) — diffable, promotable, and immediately runnable with ZERO
+violations on the data that produced it (every bound is an observed
+bound). The human then tightens what the data merely suggests.
 
 Suggestion policy (deterministic — the DuckDB oracle replays it exactly):
 
@@ -52,7 +52,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.stats import NUMERIC_TYPES
-from .config import rules_to_config
 from .rules import (
     AggregateRule,
     NotNullRule,
@@ -195,17 +194,3 @@ def suggest_rules(
         ):
             rules.append(UniqueRule(columns=(c,)))
     return rules
-
-
-def suggest_ruleset(
-    df: DataFrame,
-    *,
-    columns: list[str] | None = None,
-    max_set_size: int = 16,
-) -> dict:
-    """Suggested rules as a config DOCUMENT (operators/config schema) —
-    json.dump it, check it in, load_ruleset it back. The bootstrap
-    artifact a new corpus onboarding produces."""
-    return rules_to_config(
-        suggest_rules(df, columns=columns, max_set_size=max_set_size)
-    )

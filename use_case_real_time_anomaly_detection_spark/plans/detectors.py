@@ -225,10 +225,10 @@ def running_z_score(
     min_periods: int = 30,
 ) -> DataFrame:
     """Prefix (expanding-window) z-score: each event scored against the
-    mean/stddevPop of ALL its key's prior events — the batch twin of the
-    stateful streaming operator (streaming/stateful.py
-    running_zscore_stream; both self-exclude the current row). One
-    cumulative window pass, single shuffle by id."""
+    mean/stddevPop of ALL its key's prior events (the current row is
+    excluded, like z_score's trailing frame). One cumulative window
+    pass, single shuffle by id; the ``running_z_score`` parity row checks
+    it against its DuckDB oracle."""
     w = (
         Window.partitionBy("id")
         .orderBy("ts", "event_id")

@@ -241,7 +241,11 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import functions as F
 
     from .operators.config import load_ruleset_document
-    from .operators.schema import CLIPS_TABLE_SCHEMA, enforce_schema
+    from .operators.schema import (
+        CLIPS_TABLE_SCHEMA,
+        enforce_schema,
+        with_partition_cols,
+    )
     from .plans.clips import default_rules, validate_table
     from .session import get_spark
     from .sources.synth import (
@@ -491,14 +495,14 @@ def main(argv: list[str] | None = None) -> int:
         manifest = spark.read.parquet(args.manifest) if args.manifest else None
         if args.frontier is not None:
             frontier = args.frontier
-        elif "seq" in clips.columns:
-            frontier = clips.select(F.max("seq").alias("m")).collect()[0]["m"]
         else:
-            # frontier = highest sequence present (the key carries the
-            # monotone sequence — FIXTURES.md §1, SURVEY.md §7.3)
-            frontier = clips.select(
-                F.max(F.substring(args.key_col, 6, 9).cast("long")).alias("m")
-            ).collect()[0]["m"]
+            # frontier = highest sequence present: the table's own seq, or
+            # the one its key carries (the id contract, FIXTURES.md §1)
+            frontier = (
+                with_partition_cols(clips, key_col=args.key_col)
+                .agg(F.max("seq").alias("m"))
+                .collect()[0]["m"]
+            )
 
     store = CheckpointStore(get_catalog(spark, args.checkpoint_dir))
     skip = None if args.no_resume else store.completed_partitions(frontier)
@@ -553,7 +557,7 @@ def main(argv: list[str] | None = None) -> int:
         from .session import local_frame
 
         _, quar = quarantine_split(
-            clips, result.violations, key_col=args.key_col, warn_detectors=warn
+            clips, result, key_col=args.key_col, warn_detectors=warn
         )
         # idempotence contract: every partition this run validated is
         # replaced — including ones whose violations all cleared, which
@@ -590,7 +594,6 @@ def main(argv: list[str] | None = None) -> int:
     # column-pruned to the slim metadata columns.
     if args.sample is None:
         from .functions.stats import profile_state
-        from .operators.schema import with_partition_cols
 
         keyed = with_partition_cols(clips, key_col=args.key_col)
         validated = (

@@ -16,7 +16,7 @@ that layer for the Spark engine:
   plan functions (plans/detectors.py, plans/copylog.py) plus its param
   specs and token scope.
 - ``EventStore`` ≙ the `incoming_data` datasource: parquet-backed,
-  append via the same declared-schema NDJSON parse the batch path uses
+  append via the declared-schema NDJSON parse
   (sources/ingest.parse_events), malformed rows quarantined — the
   Events API's ``successful_rows`` / ``quarantined_rows`` contract.
   Requests read one immutable ``(events, frontier)`` snapshot per data
@@ -55,6 +55,7 @@ from pyspark.sql.types import StructType
 from .plans import copylog as C
 from .plans import detectors as D
 from .plans.envelope import response_envelope
+from .sources.ingest import parse_events
 
 _log = logging.getLogger(__name__)
 
@@ -142,9 +143,10 @@ class EventStore:
     """Parquet-backed `incoming_data` with NDJSON append, served from a
     per-append snapshot.
 
-    ``append_ndjson`` applies the SAME declared-schema parse the batch
-    ingest uses (sources/ingest.parse_events ≙ the JSONPath mapping,
-    incoming_data.datasource:3-5); rows whose id or ts fail coercion
+    ``append_ndjson`` is the Events API (ST1): it parses each posted
+    line with sources/ingest.parse_events (the declared-schema casts ≙
+    the JSONPath mapping, incoming_data.datasource:3-5, so a quoted
+    ``"id": "12"`` is stored as 12); rows whose id or ts fail coercion
     are counted ``quarantined`` and not stored — the Events API's
     at-the-edge schema enforcement. ``event_id`` is assigned at append
     time (stable once written) as the deterministic ordering tiebreaker
@@ -260,19 +262,8 @@ class EventStore:
                 [(base + i, ln) for i, ln in enumerate(lines)],
                 "event_id long, line string",
             )
-            # same declared-schema coercions as sources/ingest.parse_events,
-            # inlined so event_id rides the one projection (no join)
-            parsed = raw.select(
-                "event_id",
-                F.from_json(
-                    F.col("line"), "id INT, timestamp STRING, value STRING"
-                ).alias("e"),
-            ).select(
-                "event_id",
-                F.col("e.id").try_cast("int").alias("id"),
-                F.try_to_timestamp("e.timestamp").alias("ts"),
-                F.col("e.value").try_cast("float").alias("value"),
-            )
+            # event_id rides through the parse's one projection (no join)
+            parsed = parse_events(raw, "line")
             ok = parsed.filter(F.col("id").isNotNull() & F.col("ts").isNotNull())
             events, frontier = self._snap
             # max(ts) in the store's own ts type, so the folded frontier

@@ -8,13 +8,14 @@ datasources/incoming_data.datasource:3-5; config/sample_report.json:1
 shows `"value": "677.88"` arriving as a string).
 
 Spark equivalents: explicit StructType (never inferSchema — SURVEY.md
-§1.2), from_json for batch lines, and readStream for the continuous
-path. The declared-schema cast is the JSONPath-coercion analog.
+§1.2) and from_json over the posted lines; the declared-schema cast is
+the JSONPath-coercion analog. The Events API append
+(serving.EventStore.append_ndjson) is the one caller.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     StringType,
@@ -36,29 +37,21 @@ EVENT_JSON_SCHEMA = StructType(
 def parse_events(lines: DataFrame, line_col: str = "value") -> DataFrame:
     """NDJSON lines → typed events. Declared schema + explicit casts
     (the Float32/DateTime coercions the reference's JSONPath layer does).
-    Unparseable lines yield NULL id/ts and can be routed to a dead-letter
-    sink by the caller (from_json is permissive, never throws)."""
+    The frame's other columns (e.g. an ``event_id`` assigned at append)
+    ride through ahead of (id, ts, value). Unparseable lines yield NULL
+    id/ts and can be routed to a dead-letter sink by the caller
+    (from_json is permissive, never throws)."""
+    keep = [c for c in lines.columns if c != line_col]
     parsed = lines.select(
-        F.from_json(F.col(line_col).cast("string"), EVENT_JSON_SCHEMA).alias("e")
+        *keep,
+        F.from_json(F.col(line_col).cast("string"), EVENT_JSON_SCHEMA).alias("e"),
     )
     # try_cast / try_to_timestamp: under ANSI mode (Spark 4 default) plain
     # casts THROW on malformed data — ingest must degrade bad fields to
     # NULL (dead-letterable), never fail the job
     return parsed.select(
+        *keep,
         F.col("e.id").try_cast("int").alias("id"),
         F.try_to_timestamp("e.timestamp").alias("ts"),
         F.col("e.value").try_cast("float").alias("value"),  # string → Float32
     )
-
-
-def read_ndjson_batch(spark: SparkSession, path: str) -> DataFrame:
-    """Batch ingest of NDJSON files (one JSON object per line)."""
-    lines = spark.read.text(path).withColumnRenamed("value", "line")
-    return parse_events(lines, "line")
-
-
-def read_ndjson_stream(spark: SparkSession, path: str) -> DataFrame:
-    """Streaming ingest (file source; swap for Kafka in production —
-    same downstream plan). ≙ the generator's continuous POST loop (ST1)."""
-    lines = spark.readStream.text(path).withColumnRenamed("value", "line")
-    return parse_events(lines, "line")

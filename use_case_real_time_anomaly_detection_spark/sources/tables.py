@@ -367,9 +367,9 @@ def compact_partitions(
 ) -> dict:
     """Bin-pack fragmented partitions back to ~target-sized files.
 
-    The scheduled copy cadence (streaming/pipeline.py foreachBatch ≙ the
-    reference's per-minute copy pipes, SURVEY.md S4) APPENDS one small
-    file per partition per cycle — at 1-minute cadence that is ~1,440
+    A scheduled cadence (runner invocations or ``--stream`` micro-batches
+    ≙ the reference's per-minute copy pipes, SURVEY.md S4) APPENDS one
+    small file per partition per cycle — at 1-minute cadence that is ~1,440
     files/partition/day, and scan-task scheduling + footer reads come to
     dominate the read path long before data volume does. This is the
     maintenance pass that undoes it:

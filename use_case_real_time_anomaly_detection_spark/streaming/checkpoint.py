@@ -17,7 +17,7 @@ re-validating a partition here is idempotent because violations for a
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.tables import ParquetCatalog
@@ -288,24 +288,3 @@ class CheckpointStore:
         return drift_from_states(
             self.catalog.read(PROFILE_TABLE).drop("pk"), column
         )
-
-
-def run_with_resume(
-    spark: SparkSession,
-    clips: DataFrame,
-    manifest: DataFrame,
-    store: CheckpointStore,
-    *,
-    frontier: int,
-    rules: list | None = None,
-):
-    """Validate only partitions not already complete for this frontier,
-    then checkpoint. Returns the RunResult (possibly over a subset)."""
-    from ..plans.clips import validate_clips
-
-    done = store.completed_partitions(frontier)
-    result = validate_clips(
-        clips, manifest, frontier=frontier, rules=rules, skip_partitions=done
-    )
-    store.record_run(result, frontier=frontier)
-    return result

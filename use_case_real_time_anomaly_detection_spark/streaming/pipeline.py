@@ -1,42 +1,24 @@
-"""Streaming surface: continuous ingest → scheduled detection → log sink.
+"""Streaming clip validation: the runner's ``--stream`` mode.
 
-≙ the reference's runtime loop (SURVEY.md §2.9, §3.2): the generator
-streams events in (ST1); copy pipes run per minute appending detections
-(ST2, cron `* * * * *` — copy_out_of_range.pipe:51); overlap + dedup give
-at-least-once → exactly-once (ST3, quirk §2.8.4).
+Each micro-batch of newly landed clip files runs the same rule engine
+as the batch runner (plans/clips.validate_table) and checkpoints its
+verdicts and violations through the lineage store. Structured Streaming
+``foreachBatch`` with Trigger.AvailableNow drains what has landed and
+stops: the scheduled-batch analog of a cron tick, so the scheduler, not
+a long-lived query, sets the cadence.
 
-Spark mapping: Structured Streaming `foreachBatch` with
-Trigger.AvailableNow — every stream starter drains what has landed and
-stops, the scheduled-batch analog of a cron tick and the runner's
-per-invocation contract (the scheduler, not a long-lived query, sets
-the cadence). Inside each micro-batch the SAME batch detectors run (plans/copylog.py) — one
-code path for batch and streaming, the Spark-idiomatic replacement for
-the reference's five separate scheduled SQL jobs.
+The sensor side of the reference's runtime loop (SURVEY.md §2.9) is
+served, not streamed: Events API appends go through
+``serving.EventStore.append_ndjson`` (ST1), and the per-minute copy
+pipes with their overlap + dedup (ST2, ST3) are
+``serving.MaterializedCopyLog.start`` running ``tick``'s anti-join
+append.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..plans import detectors as D
-from ..plans.copylog import violations_log
-
-
-def run_copy_cycle(
-    events_batch: DataFrame,
-    sink_append,
-    *,
-    frontier=None,
-    **detector_params,
-) -> None:
-    """One detection cycle over a (micro-)batch of events: run all five
-    detectors, shape to the log schema, dedup, append via sink_append.
-    `frontier` freezes NOW() per cycle (≙ a copy run's snapshot)."""
-    if frontier is None:
-        frontier = D.frontier_ts(events_batch)
-    log = violations_log(events_batch, frontier, **detector_params)
-    sink_append(log)
 
 
 def stream_clips_validation(
@@ -138,7 +120,7 @@ def stream_clips_validation(
             from ..operators.engine import quarantine_split
 
             _, quar = quarantine_split(
-                clips, res.violations, key_col=key_col,
+                clips, res, key_col=key_col,
                 warn_detectors=warn_detectors or (),
             )
             # a SEPARATE table from the batch runner's `quarantine`:
@@ -197,99 +179,6 @@ def stream_clips_validation(
 
     return (
         clip_stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def dedup_log_stream(
-    log_stream: DataFrame,
-    *,
-    keys: tuple = ("ts", "id", "anomaly_type"),
-    watermark_col: str = "ts",
-    delay: str = "61 seconds",
-) -> DataFrame:
-    """Native Structured-Streaming rendition of the reference's dedup
-    materialization (≙ tinybird/pipes/dedup_log.pipe:4-6 `LIMIT 1 BY
-    timestamp, id, anomaly_type` feeding copy_log): state-backed
-    `dropDuplicates` over the composite key, with a `withWatermark`
-    bound so the dedup state is EVICTED once event time passes the
-    overlap horizon.
-
-    The 61-second default is the reference's own at-least-once contract:
-    copy pipes re-scan a 61 s window on a 60 s cadence, so a duplicate
-    detection can only arrive within 61 s of its first copy
-    (≙ copy_out_of_range.pipe:26, content/copies-pipes.md:44) — any
-    wider state would be waste, any narrower would leak duplicates.
-    This is the streaming-native complement to the batch path's
-    idempotent partition overwrite (ST3): use this when the log is a
-    continuous stream, the batch path when it is scheduled re-scans.
-
-    Scale: dedup state is keyed by the composite key and bounded by the
-    watermark to O(arrival rate × 61 s) entries per partition — constant
-    in corpus size.
-    """
-    return log_stream.withWatermark(watermark_col, delay).dropDuplicates(
-        list(keys)
-    )
-
-
-def stream_dedup_log(
-    log_stream: DataFrame,
-    out_path: str,
-    *,
-    checkpoint_dir: str,
-    keys: tuple = ("ts", "id", "anomaly_type"),
-    delay: str = "61 seconds",
-):
-    """Wire an at-least-once violations-log stream through the native
-    watermark dedup into an exactly-once parquet sink — the streaming MV
-    (copy_log_duplicates → dedup_log → copy_log) as one declarative
-    pipeline. The file-sink + checkpoint pair makes replays idempotent
-    end-to-end: re-delivered rows are dropped by the dedup state, and a
-    replayed micro-batch is skipped by the sink's commit log."""
-    return (
-        dedup_log_stream(log_stream, keys=keys, delay=delay)
-        .writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_violations(
-    event_stream: DataFrame,
-    sink_append,
-    *,
-    checkpoint_dir: str,
-    **detector_params,
-):
-    """Wire a streaming events source to the detection cycle.
-
-    foreachBatch gets the micro-batch as a normal DataFrame, so the batch
-    detectors (window functions, stats joins) run unchanged — Structured
-    Streaming's own stateful operators aren't needed for the reference's
-    semantics (its "streaming" is trailing-window re-evaluation per run,
-    ST5: no tumbling windows anywhere).
-    """
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        if "event_id" not in batch_df.columns:
-            # deterministic-ordering tiebreaker for the lag window; legal
-            # here because inside foreachBatch this is a plain batch DF
-            batch_df = batch_df.withColumn(
-                "event_id", F.monotonically_increasing_id()
-            )
-        run_copy_cycle(batch_df, sink_append, **detector_params)
-
-    return (
-        event_stream.writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
         .trigger(availableNow=True)
