@@ -89,16 +89,27 @@ def test_aggregate_rule_is_partition_level_and_null_keyed(spark):
 
 
 def test_aggregate_rules_fuse_into_one_scan(spark, tmp_path):
-    """All declared fences share ONE aggregation over ONE scan — adding a
-    bound must never add a corpus read (the round-2 20-FileScan class)."""
+    """All declared fences ride the ONE partition-stats aggregation —
+    adding a bound must never add a corpus read (the round-2 20-FileScan
+    class): compiling one fence or all of them runs the same jobs, and
+    the fences filter the collected stats rows, so the violations plan
+    reads no file at all."""
     p = str(tmp_path / "t.parquet")
     _frame(spark).write.parquet(p)
-    plan = compile_rules(
-        spark.read.parquet(p),
-        [r for r in RULES if r.agg != "distinct"],  # distinct adds an expand
-    )
+    sc = spark.sparkContext
+    jobs = []
+    fused = [r for r in RULES if r.agg != "distinct"]  # distinct adds an exchange
+    for group, rules in (("agg-one", fused[:1]), ("agg-all", fused)):
+        sc.setJobGroup(group, "aggregate fence probe")
+        try:
+            plan = compile_rules(spark.read.parquet(p), rules)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert jobs[0] == jobs[1], jobs
     phys = plan.violations._jdf.queryExecution().executedPlan().toString()
-    assert phys.count("Scan parquet") == 1, phys
+    assert phys.count("Scan parquet") == 0, phys
 
 
 def test_aggregate_rule_validates_config():
@@ -134,7 +145,7 @@ def test_completeness_requires_partition_col_on_manifest(spark):
     bare = spark.createDataFrame([("a000",)], "clip_id string")
     with pytest.raises(ValueError, match="must expose the partition column"):
         compile_rules(df, [CompletenessRule(ref_table="m")], refs={"m": bare})
-    with pytest.raises(ValueError, match="unknown table"):
+    with pytest.raises(ValueError, match="unknown ref table"):
         compile_rules(df, [CompletenessRule(ref_table="nope")], refs={})
 
 

@@ -17,6 +17,7 @@ from use_case_real_time_anomaly_detection_spark.operators.rules import (
     GapRule,
     IqrRule,
     MadRule,
+    ProfileSpec,
     RangeRule,
 )
 
@@ -136,6 +137,10 @@ def test_unknown_rule_class_raises_before_any_job(spark, frame):
     try:
         with pytest.raises(TypeError, match="unknown rule type: Bogus"):
             compile_rules(frame, [RangeRule("value", 0, 1), Bogus()])
+        # a ProfileSpec is a profiling request, not a rule: the engine
+        # strips it before compiling, and compile_rules has no lowering
+        with pytest.raises(TypeError, match="unknown rule type: ProfileSpec"):
+            compile_rules(frame, [ProfileSpec(columns=("value",))])
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)

@@ -10,18 +10,24 @@ that brings back a per-rule action or a lineage re-read fails here.
 from __future__ import annotations
 
 import json
+import re
+from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
 from use_case_real_time_anomaly_detection_spark import runner
+from use_case_real_time_anomaly_detection_spark.operators.config import (
+    load_ruleset_document,
+)
 from use_case_real_time_anomaly_detection_spark.operators.compiler import compile_rules
 from use_case_real_time_anomaly_detection_spark.operators.rules import DriftRule
 from use_case_real_time_anomaly_detection_spark.operators.schema import with_partition_cols
 from use_case_real_time_anomaly_detection_spark.plans import clips as plans
 from use_case_real_time_anomaly_detection_spark.sources.synth import (
     SynthSpec,
+    frontier_of,
     manifest_pandas,
     metadata_pandas,
 )
@@ -130,3 +136,35 @@ def test_drift_rules_share_one_histogram_action(spark, corpus):
     # scoring ran on the driver: the violations are projections of a
     # local relation and need no further scan
     assert "Scan parquet" not in plan.violations._jdf.queryExecution().executedPlan().toString()
+
+
+def test_strict_ruleset_compiles_in_one_stats_pass(spark, corpus):
+    """The strict ruleset's table-level families (aggregate fences,
+    Benford, reconciliation, MAD medians) read the one partition-stats
+    action, and categorical drift + entropy one collected count: compile
+    runs the drift-edge collect, the stats pass and the categorical
+    count, and the lazy violations plan scans the clip table only for the
+    row projection, unique, FD, completeness, MAD stage 2 and seasonal
+    (18 compile jobs and 10 clip scans when each family had its own
+    groupBy)."""
+    strict = Path(__file__).resolve().parents[1] / "rulesets/clips-strict.json"
+    rules = [
+        r
+        for r in load_ruleset_document(str(strict))[0]
+        if type(r).__name__ not in ("AudioDecodeRule", "AudioQcRule")
+    ]
+    clips = spark.read.parquet(str(corpus / "clips"))
+    manifest = spark.read.parquet(str(corpus / "manifest"))
+    jobs, result = _jobs(
+        spark,
+        "strict-compile",
+        lambda: plans.validate_table(
+            clips, rules, frontier=frontier_of(SPEC), manifest=manifest
+        ),
+    )
+    assert jobs <= 6, jobs
+    plan = result.violations._jdf.queryExecution().executedPlan().toString()
+    clip_scans = re.findall(
+        r"FileScan parquet [^\n]*" + re.escape(str(corpus / "clips")) + r"\]", plan
+    )
+    assert len(clip_scans) <= 6, plan

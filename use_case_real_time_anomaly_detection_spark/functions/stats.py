@@ -220,16 +220,33 @@ def _sum_in_order(xs) -> float:
     return reduce(operator.add, xs, 0.0)
 
 
+def _shares(counts, alpha: float) -> list[float]:
+    """Laplace-smoothed fractions (n + α) / (N + α·len(counts))."""
+    return [(n + alpha) / (sum(counts) + alpha * len(counts)) for n in counts]
+
+
+def _median_baseline(shares: list) -> list[float]:
+    """Per-position MEDIAN of the partitions' share vectors (Spark
+    ``percentile`` interpolation), renormalized to sum to 1 — robust to
+    a minority of drifted partitions, which a global mixture baseline
+    would be contaminated by."""
+    qraw = [_median(col) for col in zip(*shares, strict=True)]
+    qsum = _sum_in_order(qraw)
+    return [x / qsum for x in qraw]
+
+
+def _psi(p: list, q: list) -> float:
+    return _sum_in_order((pi - qi) * math.log(pi / qi) for pi, qi in zip(p, q))
+
+
 def score_drift(hists) -> list[tuple]:
     """KS + PSI + W1 per partition from dense per-bin histograms, on the
     driver: ``hists`` yields (partition_key, counts, bin_width) with one
     count per bin; returns [(partition_key, psi, ks, w1)].
 
     - Laplace-smoothed fractions p = (n + 0.5) / (N + 0.5 * bins);
-    - baseline q = per-bin MEDIAN of partition fractions (Spark
-      ``percentile`` interpolation), renormalized — robust to a minority
-      of drifted partitions, which a global mixture baseline would be
-      contaminated by;
+    - baseline q = per-bin median of partition fractions, renormalized
+      (:func:`_median_baseline`);
     - PSI = Σ (p - q) ln(p / q); KS = max |CDF_p - CDF_q|;
     - W1 (Wasserstein-1 / earth-mover) = Σ |CDF_p - CDF_q| · bin_width —
       the SCALE-AWARE complement: PSI and KS saturate once supports stop
@@ -244,18 +261,13 @@ def score_drift(hists) -> list[tuple]:
     rows = [(pk, c, w) for pk, c, w in hists if any(c)]
     if not rows:
         return []
-    ps = [
-        [(n + 0.5) / (sum(c) + 0.5 * len(c)) for n in c] for _, c, _ in rows
-    ]
-    qraw = [_median(col) for col in zip(*ps, strict=True)]
-    qsum = _sum_in_order(qraw)
-    q = [x / qsum for x in qraw]
+    ps = [_shares(c, 0.5) for _, c, _ in rows]
+    q = _median_baseline(ps)
     qcum = list(accumulate(q))
     out = []
     for (pk, _, width), p in zip(rows, ps):
         dcdf = [abs(a - b) for a, b in zip(accumulate(p), qcum)]
-        psi = _sum_in_order((pi - qi) * math.log(pi / qi) for pi, qi in zip(p, q))
-        out.append((pk, psi, max(dcdf), _sum_in_order(dcdf) * width))
+        out.append((pk, _psi(p, q), max(dcdf), _sum_in_order(dcdf) * width))
     return out
 
 
@@ -328,67 +340,52 @@ def categorical_scores(
     (codec / sr_hz-mode mixes have no bin order, so KS is meaningless
     and the histogram is the value domain itself).
 
-    Same robust-baseline construction as drift_scores:
+    ONE collected (partition, value) count groupBy, scored on the driver
+    with :func:`score_drift`'s baseline math over the dense partition ×
+    observed-domain grid (absent categories count 0):
 
-    - per (partition, value) counts — map-side partial agg, then a dense
-      partition × domain grid so absent categories participate;
     - Laplace-smoothed shares p = (n + α) / (N + α·V), α = `smoothing`,
       V = |observed domain|;
-    - baseline q = per-category MEDIAN of partition shares, renormalized
-      (robust to a minority of drifted partitions);
+    - baseline q = per-category median of partition shares, renormalized
+      (:func:`_median_baseline`);
     - PSI = Σ (p − q) ln(p / q);
     - entropy H = −Σ (n/N) ln(n/N) over the UNsmoothed observed mix
       (zero-count categories contribute 0; a single-valued partition
       scores exactly 0.0).
 
-    Returns (partition_key, psi, entropy) for ALL partitions
-    (thresholding is the caller's policy). NULLs in `column` are
-    excluded. Scale shape: the count frame is ≤ partitions × V rows and
-    is localCheckpoint-pinned because four downstream subtrees consume
-    it (Catalyst does no cross-branch CSE — same measured pathology as
-    drift_scores' histogram).
+    Every sum runs in sorted-value order. Returns (partition_key, psi,
+    entropy) for ALL partitions (thresholding is the caller's policy),
+    planned as a LocalRelation. NULLs in `column` are excluded. Eager:
+    the count action runs before this returns; its result is ≤
+    partitions × V rows.
     """
-    from pyspark.sql import Window
+    from ..session import local_frame
 
-    src = df.filter(F.col(column).isNotNull()).select(
-        F.col(partition_col).alias("pk"),
-        F.col(column).cast("string").alias("value"),
-    )
-    counts = (
-        src.groupBy("pk", "value")
-        .agg(F.count(F.lit(1)).alias("pn"))
-        .localCheckpoint()
-    )
-    pks = counts.select("pk").distinct()
-    vals = counts.select("value").distinct()
-    nvals = vals.agg(F.count(F.lit(1)).alias("nv"))
-    grid = pks.crossJoin(F.broadcast(vals))
-    h = grid.join(counts, ["pk", "value"], "left").fillna(0, subset=["pn"])
-    h = h.crossJoin(F.broadcast(nvals))
-    wpk = Window.partitionBy("pk")
-    h = h.withColumn("pt", F.sum("pn").over(wpk))
-    h = h.withColumn(
-        "p",
-        (F.col("pn") + F.lit(smoothing))
-        / (F.col("pt") + F.lit(smoothing) * F.col("nv")),
-    )
-    med = h.groupBy("value").agg(F.expr("percentile(p, 0.5D)").alias("qraw"))
-    med = med.crossJoin(F.broadcast(med.agg(F.sum("qraw").alias("qsum")))).select(
-        "value", (F.col("qraw") / F.col("qsum")).alias("q")
-    )
-    h = h.join(F.broadcast(med), "value")
-    h = h.withColumn(
-        "psi_term", (F.col("p") - F.col("q")) * F.log(F.col("p") / F.col("q"))
-    )
-    share = F.col("pn") / F.col("pt")
-    h = h.withColumn(
-        "ent_term",
-        F.when(F.col("pn") > 0, -share * F.log(share)).otherwise(F.lit(0.0)),
-    )
-    return h.groupBy("pk").agg(
-        F.sum("psi_term").alias("psi"),
-        F.sum("ent_term").alias("entropy"),
-    ).select(F.col("pk").alias("partition_key"), "psi", "entropy")
+    counts: dict = {}
+    for pk, value, n in (
+        df.filter(F.col(column).isNotNull())
+        .groupBy(F.col(partition_col), F.col(column).cast("string").alias("value"))
+        .agg(F.count(F.lit(1)))
+        .collect()
+    ):
+        counts.setdefault(pk, {})[value] = n
+    domain = sorted({v for mix in counts.values() for v in mix})
+    grid = [[mix.get(v, 0) for v in domain] for mix in counts.values()]
+    ps = [_shares(c, smoothing) for c in grid]
+    q = _median_baseline(ps)
+    rows = [
+        (
+            pk,
+            _psi(p, q),
+            _sum_in_order(-(n / sum(c)) * math.log(n / sum(c)) for n in c if n > 0),
+        )
+        for pk, c, p in zip(counts, grid, ps)
+    ]
+    schema = StructType([
+        StructField("partition_key", df.schema[partition_col].dataType),
+        *[StructField(c, DoubleType()) for c in ("psi", "entropy")],
+    ])
+    return local_frame(df.sparkSession, schema, rows)
 
 
 # --- incremental / mergeable profiling --------------------------------------

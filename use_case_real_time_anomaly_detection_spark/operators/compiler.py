@@ -9,10 +9,13 @@ grouped by exact class; each class is lowered once, onto the shared passes:
 at compile time, one collected partition-stats action (_partition_stats):
  └─ ONE groupBy(partition).agg over the column-pruned pre-payload frame:
      row count (rows_checked, volume fences), IQR quartiles, latest
-     seq/key (staleness) and a dense per-bin count array per drift
-     column; the rows come back as a LocalRelation and drift is scored
-     on the driver (functions/stats.score_drift). A drift column whose
-     bin edges are not given costs one more min/max collect.
+     seq/key (staleness), MAD medians, AggregateRule values, Benford
+     digit counts, reconciliation totals and a dense per-bin count
+     array per drift column; the rows come back as a LocalRelation and
+     drift is scored on the driver (functions/stats.score_drift). Drift
+     bin edges cost one more min/max collect, and each categorical
+     column one collected (partition, value) count
+     (functions/stats.categorical_scores).
 
 the lazy violations plan:
 scan (column-pruned: only referenced columns are read)
@@ -34,7 +37,8 @@ scan (column-pruned: only referenced columns are read)
 
 Table-level rules (staleness, unique, FD, aggregate fences, completeness,
 drift, categorical, Benford, reconciliation, volume) aggregate instead of
-scanning per row; each emits its rows through one VIOLATION_COLUMNS
+scanning per row; those that read one row per partition filter or
+project the stats rows. Each emits its rows through one VIOLATION_COLUMNS
 emitter, and all are unioned into the same violations output. The fence
 rules (range, aggregate, entropy, volume, audio QC) build their condition
 and note through _fence; z-score and seasonal share _moments_z.
@@ -82,7 +86,6 @@ from .rules import (
     PayloadSizeRule,
     PredicateRule,
     RefMatchRule,
-    ProfileSpec,
     RangeRule,
     RateOfChangeRule,
     ReconciliationRule,
@@ -333,6 +336,30 @@ def _moments_z(
 def _stat_key(r: IqrRule | MadRule) -> tuple:
     """Rules with equal keys share one set of per-partition stats."""
     return type(r), r.column, r.exact, r.accuracy
+
+
+def _quantile(r: IqrRule | MadRule, c: Column, q: float) -> Column:
+    """The ``q`` quantile of ``c`` an IQR/MAD rule fences with: exact
+    at test scale (quantileExact ≙ tinybird/pipes/iqr.pipe:31-33),
+    approximate at 10^12 scale (north star; SURVEY.md §4.2.5)."""
+    if r.exact:
+        return F.percentile(c, F.lit(q))
+    return F.percentile_approx(c, q, r.accuracy)
+
+
+def _ref_table(refs: dict, name: str, r, partition_col: str | None = None):
+    """Ref table ``name`` of rule ``r``; with ``partition_col``, it must
+    expose that column (the verdict axis of the rows emitted from it)."""
+    if name not in refs:
+        raise ValueError(
+            f"{type(r).__name__}: unknown ref table {name!r} (pass it via refs=)"
+        )
+    if partition_col is not None and partition_col not in refs[name].columns:
+        raise ValueError(
+            f"{type(r).__name__}: ref table {name!r} must expose the "
+            f"partition column {partition_col!r}"
+        )
+    return refs[name]
 
 
 @dataclass(frozen=True)
@@ -784,7 +811,7 @@ _WINDOW_INPUTS = {
 _TABLE_LEVEL = {
     UniqueRule, FdRule, AggregateRule, CompletenessRule, DriftRule,
     CategoricalDriftRule, EntropyRule, BenfordRule, ReconciliationRule,
-    VolumeRule, ProfileSpec,
+    VolumeRule,
 }
 
 _SEQUENTIAL = (CalibratedRangeRule, *_WINDOW_INPUTS, CusumRule, EwmaRule, SeasonalRule)
@@ -903,10 +930,7 @@ def compile_rules(
         names = {r.ref_table for r in ref_rules}
         if len(names) > 1:
             raise ValueError(f"multiple ref tables in one run not supported: {names}")
-        ref_name = names.pop()
-        if ref_name not in refs:
-            raise ValueError(f"rule references unknown table {ref_name!r}")
-        manifest = refs[ref_name]
+        manifest = _ref_table(refs, names.pop(), ref_rules[0])
         # dedup while preserving order: the exact and distance transcript
         # rules share ref_column, and a duplicate __ref_ alias would be
         # ambiguous downstream
@@ -929,9 +953,7 @@ def compile_rules(
     # the revision set is operator-declared (≪ data), so the fact table
     # never shuffles and never fans out for the rule.
     for i, r in enumerate(of(CalibratedRangeRule)):
-        if r.revisions_table not in refs:
-            raise ValueError(f"rule references unknown table {r.revisions_table!r}")
-        revs = refs[r.revisions_table]
+        revs = _ref_table(refs, r.revisions_table, r)
         wanted = ("partition_key", r.eff_seq_column, r.lo_column, r.hi_column)
         missing = [c for c in wanted if c not in revs.columns]
         if missing:
@@ -1072,45 +1094,65 @@ def compile_rules(
         base = windowed(base, ewma_cols, frame_rows, seq_col, key_col)
 
     # ---- the partition-stats pass: ONE grouped action over the pre-payload
-    # frame serves rows_checked, volume fences, IQR fences, staleness and
-    # drift histograms (see _partition_stats) ------------------------------
+    # frame serves rows_checked and every per-partition aggregate a rule
+    # fences or joins back (see _partition_stats) --------------------------
     quartiles = {tags[_stat_key(r)]: r for r in of(IqrRule)}
+    medians = {tags[_stat_key(r)]: r for r in of(MadRule)}
+    stats_aggs = [
+        _quantile(r, F.col(r.column), q).alias(f"__q{k}_{tag}")
+        for tag, r in quartiles.items()
+        for k, q in ((1, 0.25), (3, 0.75))
+    ]
+    if frontier is not None and of(GapRule):
+        # latest seq and the key at it, for staleness
+        stats_aggs += [
+            F.max(seq_col).alias("__last_seq"),
+            F.max_by(F.col(key_col), F.col(seq_col)).alias("__last_key"),
+        ]
+    stats_aggs += [
+        _quantile(r, F.col(r.column).cast("double"), 0.5).alias(f"__med_{tag}")
+        for tag, r in medians.items()
+    ]
+    stats_aggs += [
+        _agg_value(r).alias(f"__agg_{i}") for i, r in enumerate(of(AggregateRule))
+    ]
+    for i, r in enumerate(of(BenfordRule)):
+        stats_aggs += _benford_counts(r.column, f"__ben{i}")
+    stats_aggs += [
+        _recon_total(r, r.column).alias(f"__rec_{i}")
+        for i, r in enumerate(of(ReconciliationRule))
+    ]
     part_stats, drift = _partition_stats(
-        df, quartiles, of(DriftRule), key_col=key_col,
-        partition_col=partition_col, seq_col=seq_col,
-        last_seq=frontier is not None and bool(of(GapRule)),
+        df, stats_aggs, of(DriftRule), partition_col=partition_col
     )
 
-    # ---- per-partition IQR fences: a broadcast join of the stats rows ----
-    if quartiles:
+    # ---- per-partition IQR fences and medians: a broadcast join of the
+    # stats rows ----------------------------------------------------------
+    if quartiles or medians:
         # ≤1 row per partition → always broadcast (≙ the reference's
         # stats-CTE join, iqr.pipe:49-50, which ClickHouse keeps in memory).
         fences = part_stats.select(
             partition_col,
             *[f"__q{k}_{tag}" for tag in quartiles for k in (1, 3)],
+            *[f"__med_{tag}" for tag in medians],
         )
         base = base.join(F.broadcast(fences), partition_col, "left")
 
-    # ---- per-partition median/MAD: two sequential aggs + broadcast join ---
-    for tag, r in {tags[_stat_key(r)]: r for r in of(MadRule)}.items():
-        vcol = F.col(r.column).cast("double")
-
-        def median(c: Column, r=r) -> Column:
-            if r.exact:
-                return F.percentile(c, F.lit(0.5))
-            return F.percentile_approx(c, 0.5, r.accuracy)
-
-        # MAD is doubly holistic (median of |x - median|): pass 1 computes
-        # the per-partition median, pass 2 the median deviation. Both read
-        # ONE slim column off the pre-audio frame (column pruning keeps
-        # payloads out) and reduce to ~1 row per partition.
-        med = df.groupBy(partition_col).agg(median(vcol).alias(f"__med_{tag}"))
-        dev = df.select(partition_col, r.column).join(F.broadcast(med), partition_col)
-        stats = dev.groupBy(partition_col).agg(
-            F.first(f"__med_{tag}").alias(f"__med_{tag}"),
-            median(F.abs(vcol - F.col(f"__med_{tag}"))).alias(f"__mad_{tag}"),
+    # ---- per-partition MAD: median |x - median| off the stats medians ----
+    if medians:
+        # MAD is doubly holistic: the medians come from the stats pass,
+        # the median deviations need the rows again — ONE aggregate for
+        # every MAD key, reading slim columns off the pre-audio frame
+        # (column pruning keeps payloads out), ~1 row per partition.
+        meds = part_stats.select(partition_col, *[f"__med_{t}" for t in medians])
+        dev = {
+            t: F.abs(F.col(r.column).cast("double") - F.col(f"__med_{t}"))
+            for t, r in medians.items()
+        }
+        mads = df.join(F.broadcast(meds), partition_col).groupBy(partition_col).agg(
+            *[_quantile(r, dev[t], 0.5).alias(f"__mad_{t}") for t, r in medians.items()]
         )
-        base = base.join(F.broadcast(stats), partition_col, "left")
+        base = base.join(F.broadcast(mads), partition_col, "left")
 
     # ---- per-(partition, phase) seasonal baselines: one agg + broadcast ---
     for r in of(SeasonalRule):
@@ -1275,16 +1317,9 @@ def compile_rules(
             partition=partition_col,
         )
 
-    # ---- aggregate bounds: ONE fused groupBy for every AggregateRule -----
+    # ---- aggregate bounds: every AggregateRule fences its stats column ---
     agg_rules = of(AggregateRule)
     if agg_rules:
-        # one shuffle of partial aggregates for ALL declared bounds (the
-        # same fusion contract as the row-local projection: adding a rule
-        # never adds a scan). Pre-audio frame: these read slim metadata
-        # columns only.
-        fences = df.groupBy(partition_col).agg(
-            *[_agg_value(r).alias(f"__agg_{i}") for i, r in enumerate(agg_rules)]
-        )
         agg_flags: list[Column] = []
         for i, r in enumerate(agg_rules):
             v = F.col(f"__agg_{i}")
@@ -1295,25 +1330,18 @@ def compile_rules(
             note = " ".join([f"agg:{r.agg}({r.column})", *bits])
             agg_flags.append(_flag(r.detector, cond, _fmt(v, 4), F.lit(note)))
             book(r.detector)
-        # every rule's fence check reads the ONE fences row per partition
+        # every rule's fence check reads the ONE stats row per partition
         parts.append(
             _exploded(
-                fences, F.col(partition_col), F.lit(None).cast("string"), agg_flags
+                part_stats, F.col(partition_col), F.lit(None).cast("string"), agg_flags
             )
         )
 
     # ---- completeness: manifest keys missing from the table --------------
     comp_ref_parts: list[DataFrame] = []
     for r in of(CompletenessRule):
-        if r.ref_table not in refs:
-            raise ValueError(f"rule references unknown table {r.ref_table!r}")
-        ref = refs[r.ref_table]
-        if partition_col not in ref.columns:
-            raise ValueError(
-                f"CompletenessRule: ref table {r.ref_table!r} must expose "
-                f"the partition column {partition_col!r} (the verdict axis "
-                "for missing keys)"
-            )
+        # missing keys land in the manifest's partition (the verdict axis)
+        ref = _ref_table(refs, r.ref_table, r, partition_col)
         # left-anti from the manifest onto the table's keys: the inverse
         # direction of RefIntegrityRule. At 10^12 scale with both sides
         # bucketed by the key this is a storage-partitioned join; anti
@@ -1358,7 +1386,8 @@ def compile_rules(
         emit(drift[r.column, r.bins].filter(cond), r.detector, observed, note)
 
     # ---- categorical mix: PSI drift + entropy fences ----------------------
-    # Both rule families read the SAME per-(partition, value) count frame
+    # Both rule families read the SAME scores of one collected
+    # (partition, value) count, scored on the driver
     # (functions/stats.categorical_scores), so a CategoricalDriftRule and
     # an EntropyRule on one column cost one groupBy, not two.
     by_col: dict[str, list] = {}
@@ -1379,7 +1408,7 @@ def compile_rules(
             colname,
             partition_col=partition_col,
             smoothing=smoothings.pop() if smoothings else 0.5,
-        ).localCheckpoint()  # consumed once per rule below
+        )
         for r in rs:
             if type(r) is CategoricalDriftRule:
                 emit(
@@ -1402,94 +1431,57 @@ def compile_rules(
                 " ".join([f"column:{colname}", *bits]),
             )
 
-    # ---- Benford first-digit conformity (one conditional-count groupBy) ---
-    for r in of(BenfordRule):
-        v = F.abs(F.col(r.column).cast("double"))
-        # first significant digit via the string path: representation-
-        # agnostic (plain and E-notation both), immune to the classic
-        # log10(1000) = 2.999... floor bug a pow/log derivation has
-        digit = F.substring(F.regexp_replace(v.cast("string"), "[^1-9]", ""), 1, 1)
-        # finite positives only: NaN compares > 0 true in Spark and
-        # ±Inf has no first digit — counting either as usable would
-        # deflate every digit share and spuriously inflate the MAD
-        usable = v.isNotNull() & (v > 0) & ~F.isnan(v) & (v < float("inf"))
-        counts = [
-            F.sum(
-                F.when(usable & (digit == str(d)), F.lit(1)).otherwise(F.lit(0))
-            ).alias(f"n{d}")
-            for d in range(1, 10)
-        ]
-        per_part = df.groupBy(F.col(partition_col).alias("partition_key")).agg(
-            *counts, F.sum(F.when(usable, 1).otherwise(0)).alias("n_used")
-        )
-        n = F.col("n_used").cast("double")
+    # ---- Benford first-digit conformity over the stats digit counts ------
+    for i, r in enumerate(of(BenfordRule)):
+        n = F.col(f"__ben{i}_n").cast("double")
         # fixed left-to-right term order: one IEEE op sequence both the
         # engine and the SQL oracle replay identically
         mad = reduce(
             operator.add,
             [
-                F.abs(F.col(f"n{d}") / n - F.lit(_BENFORD[d - 1]))
+                F.abs(F.col(f"__ben{i}_{d}") / n - F.lit(_BENFORD[d - 1]))
                 for d in range(1, 10)
             ],
         ) / F.lit(9.0)
         emit(
-            per_part.filter(F.col("n_used") >= r.min_count)
-            .withColumn("mad", mad)
-            .filter(F.col("mad") > r.max_mad),
+            part_stats.filter(F.col(f"__ben{i}_n") >= r.min_count)
+            .withColumn("__mad", mad)
+            .filter(F.col("__mad") > r.max_mad),
             r.detector,
-            F.concat(F.lit("mad:"), _fmt(F.col("mad"), 4)),
+            F.concat(F.lit("mad:"), _fmt(F.col("__mad"), 4)),
             f"column:{r.column} max_mad:{r.max_mad:g} min_count:{r.min_count}",
+            partition=partition_col,
         )
 
-    # ---- reconciliation control totals (two tiny aggs, one re-aggregate) --
-    for r in of(ReconciliationRule):
-        if r.ref_table not in refs:
-            raise ValueError(
-                f"ReconciliationRule({r.column}): unknown ref table "
-                f"{r.ref_table!r} — pass it via refs="
-            )
-        ref = refs[r.ref_table]
-        if partition_col not in ref.columns:
-            raise ValueError(
-                f"ReconciliationRule({r.column}): ref table {r.ref_table!r} "
-                f"must carry the run partition column {partition_col!r}"
-            )
+    # ---- reconciliation control totals: the stats total vs the ref's -----
+    for i, r in enumerate(of(ReconciliationRule)):
+        ref = _ref_table(refs, r.ref_table, r, partition_col)
         rc = r.ref_column or r.column
-        if r.agg == "count":
-            a_expr = F.count(F.col(r.column)).cast("double")
-            e_expr = F.count(F.col(rc)).cast("double")
-        else:  # sum — exact decimal partials, order-independent verdict
-            a_expr = F.sum(F.col(r.column).cast("decimal(38,6)")).cast("double")
-            e_expr = F.sum(F.col(rc).cast("decimal(38,6)")).cast("double")
-        # full-outer semantics WITHOUT a join: tag each side's tiny
-        # per-partition aggregate and re-aggregate the union — a side
-        # absent from a partition contributes its 0, exactly the
-        # COALESCE(full_outer) contract, with one groupBy and zero join
-        # nodes (a full-outer can't broadcast, so the join form would
-        # plan an SMJ — needless even on operator-sized frames)
-        actual = (
-            df.groupBy(F.col(partition_col).alias("partition_key"))
-            .agg(a_expr.alias("actual"))
-            .select("partition_key", "actual", F.lit(0.0).alias("expected"))
-        )
-        expected = (
-            ref.groupBy(F.col(partition_col).alias("partition_key"))
-            .agg(e_expr.alias("expected"))
-            .select("partition_key", F.lit(0.0).alias("actual"), "expected")
-        )
-        joined = (
-            actual.unionByName(expected)
-            .groupBy("partition_key")
-            .agg(
-                F.sum("actual").alias("actual"),
-                F.sum("expected").alias("expected"),
+        # full-outer semantics WITHOUT a join: ONE aggregate over the
+        # stats rows (the table's totals) and the ref rows — a side absent
+        # from a partition contributes its 0, exactly the
+        # COALESCE(full_outer) contract, with zero join nodes (a
+        # full-outer can't broadcast, so the join form would plan an SMJ)
+        rows = part_stats.select(
+            F.col(partition_col).alias("partition_key"),
+            F.col(f"__rec_{i}").alias("actual"),
+            F.lit(None).alias("__e"),
+        ).unionByName(
+            ref.select(
+                F.col(partition_col).alias("partition_key"),
+                F.lit(0.0).alias("actual"),
+                F.col(rc).alias("__e"),
             )
+        )
+        totals = rows.groupBy("partition_key").agg(
+            F.sum("actual").alias("actual"),
+            F.coalesce(_recon_total(r, "__e"), F.lit(0.0)).alias("expected"),
         )
         tol = F.lit(float(r.abs_tolerance)) + F.lit(float(r.rel_tolerance)) * F.abs(
             F.col("expected")
         )
         emit(
-            joined.filter(F.abs(F.col("actual") - F.col("expected")) > tol),
+            totals.filter(F.abs(F.col("actual") - F.col("expected")) > tol),
             r.detector,
             F.concat(
                 F.lit(f"{r.agg}:"), _fmt(F.col("actual"), 2),
@@ -1590,35 +1582,58 @@ def _agg_value(r: AggregateRule) -> Column:
     raise ValueError(f"unknown aggregate {r.agg!r}")  # pragma: no cover
 
 
+def _benford_counts(column: str, prefix: str) -> list[Column]:
+    """Per-digit counts ``{prefix}_1``..``{prefix}_9`` of ``column``'s
+    first significant digit, and ``{prefix}_n``, the usable rows."""
+    v = F.abs(F.col(column).cast("double"))
+    # first significant digit via the string path: representation-
+    # agnostic (plain and E-notation both), immune to the classic
+    # log10(1000) = 2.999... floor bug a pow/log derivation has
+    digit = F.substring(F.regexp_replace(v.cast("string"), "[^1-9]", ""), 1, 1)
+    # finite positives only: NaN compares > 0 true in Spark and
+    # ±Inf has no first digit — counting either as usable would
+    # deflate every digit share and spuriously inflate the MAD
+    usable = v.isNotNull() & (v > 0) & ~F.isnan(v) & (v < float("inf"))
+    return [
+        F.sum(F.when(usable & (digit == str(d)), F.lit(1)).otherwise(F.lit(0)))
+        .alias(f"{prefix}_{d}")
+        for d in range(1, 10)
+    ] + [F.sum(F.when(usable, 1).otherwise(0)).alias(f"{prefix}_n")]
+
+
+def _recon_total(r: ReconciliationRule, column: str) -> Column:
+    """A ReconciliationRule's per-partition control total of ``column``
+    as a double; sums go through exact decimal partials, so the verdict
+    is order-independent."""
+    if r.agg == "count":
+        return F.count(F.col(column)).cast("double")
+    return F.sum(F.col(column).cast("decimal(38,6)")).cast("double")
+
+
 def _partition_stats(
-    df: DataFrame,
-    quartiles: dict,
-    drift_rules: list,
-    *,
-    key_col: str,
-    partition_col: str,
-    seq_col: str | None,
-    last_seq: bool,
+    df: DataFrame, aggs: list, drift_rules: list, *, partition_col: str
 ) -> tuple[DataFrame, dict]:
     """The per-partition aggregates of the rule set in ONE collected
     ``df.groupBy(partition_col).agg(...)``.
 
-    Returns ``(stats, drift)``. ``stats`` holds one row per
-    partition, planned as a LocalRelation (no rescan when joined or
-    filtered later): ``__rows`` (rows_checked, VolumeRule),
-    ``__q1_{tag}``/``__q3_{tag}`` for each IqrRule stats key of
-    ``quartiles`` (tag → a rule with that key), and, with ``last_seq``,
-    ``__last_seq``/``__last_key`` (latest seq and the key at it, for
-    staleness). ``drift`` maps each of ``drift_rules``' (column, bins) to
-    its (partition_key, psi, ks, w1) frame, scored on the driver
-    (functions/stats.score_drift) from a dense per-bin count array the
-    same pass collects.
+    Returns ``(stats, drift)``. ``stats`` holds one row per partition,
+    planned as a LocalRelation (no rescan when joined or filtered
+    later): ``__rows`` (rows_checked, VolumeRule), then the named
+    ``aggs`` compile_rules asks for — ``__q1_{tag}``/``__q3_{tag}`` (IQR
+    fences), ``__last_seq``/``__last_key`` (staleness), ``__med_{tag}``
+    (MAD stage 1), ``__agg_{i}`` (AggregateRule fences),
+    ``__ben{i}_{d}``/``__ben{i}_n`` (Benford digit counts) and
+    ``__rec_{i}`` (the table side of a reconciliation). ``drift`` maps
+    each of ``drift_rules``' (column, bins) to its (partition_key, psi,
+    ks, w1) frame, scored on the driver (functions/stats.score_drift)
+    from a dense per-bin count array the same pass collects.
 
     Reads ``df``, the pre-payload frame: the payload Arrow pass is a
     column-pruning barrier, so an aggregate hanging off the decoded frame
     would re-decode every payload to read one numeric column. Drift bin
-    edges come from one min/max collect over ``df``'s drift columns (the
-    only other eager job), so the same table always gets the same edges.
+    edges come from one min/max collect over ``df``'s drift columns (this
+    pass's only other action), so the same table always gets the same
+    edges.
     """
     from ..functions.stats import (
         drift_bin_edges,
@@ -1627,23 +1642,7 @@ def _partition_stats(
         score_drift,
     )
 
-    aggs = [F.count(F.lit(1)).alias("__rows")]
-    for tag, r in quartiles.items():
-        if r.exact:
-            # quantileExact ≙ tinybird/pipes/iqr.pipe:31-33 (test scale)
-            q1 = F.expr(f"percentile({r.column}, 0.25D)")
-            q3 = F.expr(f"percentile({r.column}, 0.75D)")
-        else:
-            # approx at 10^12 scale (north star; SURVEY.md §4.2.5)
-            q1 = F.percentile_approx(r.column, 0.25, r.accuracy)
-            q3 = F.percentile_approx(r.column, 0.75, r.accuracy)
-        aggs += [q1.alias(f"__q1_{tag}"), q3.alias(f"__q3_{tag}")]
-    if last_seq:
-        aggs += [
-            F.max(seq_col).alias("__last_seq"),
-            F.max_by(F.col(key_col), F.col(seq_col)).alias("__last_key"),
-        ]
-
+    aggs = [F.count(F.lit(1)).alias("__rows"), *aggs]
     drift = list(dict.fromkeys((r.column, r.bins) for r in drift_rules))
     grids = {}
     if drift:

@@ -167,8 +167,8 @@ class CheckpointStore:
         """Partitions fully validated at a frontier ≥ the requested one.
 
         Only BATCH verdicts grant resume authority: a streaming cycle
-        (run_id prefix ``stream-``, the convention runner.py's
-        --stream-verdicts view also keys on) validates only the slice of
+        (run_id prefix ``stream-``, which the runner's --stream mode
+        writes) validates only the slice of
         rows its micro-batch delivered — its partition stats (z-window,
         IQR fences, drift) are trailing-window snapshots, not
         full-partition facts — so counting those rows here would let a
