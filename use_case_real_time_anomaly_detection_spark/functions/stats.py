@@ -222,7 +222,8 @@ def _sum_in_order(xs) -> float:
 
 def _shares(counts, alpha: float) -> list[float]:
     """Laplace-smoothed fractions (n + α) / (N + α·len(counts))."""
-    return [(n + alpha) / (sum(counts) + alpha * len(counts)) for n in counts]
+    total = sum(counts) + alpha * len(counts)
+    return [(n + alpha) / total for n in counts]
 
 
 def _median_baseline(shares: list) -> list[float]:
@@ -373,14 +374,11 @@ def categorical_scores(
     grid = [[mix.get(v, 0) for v in domain] for mix in counts.values()]
     ps = [_shares(c, smoothing) for c in grid]
     q = _median_baseline(ps)
-    rows = [
-        (
-            pk,
-            _psi(p, q),
-            _sum_in_order(-(n / sum(c)) * math.log(n / sum(c)) for n in c if n > 0),
-        )
-        for pk, c, p in zip(counts, grid, ps)
-    ]
+    rows = []
+    for pk, c, p in zip(counts, grid, ps):
+        total = sum(c)
+        shares = [n / total for n in c if n > 0]
+        rows.append((pk, _psi(p, q), _sum_in_order(-s * math.log(s) for s in shares)))
     schema = StructType([
         StructField("partition_key", df.schema[partition_col].dataType),
         *[StructField(c, DoubleType()) for c in ("psi", "entropy")],
