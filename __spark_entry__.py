@@ -748,13 +748,20 @@ def _q_running_z_score(spark, sf):
 
 def _q_clips_profile(spark, sf):
     """Per-(partition, column) profiling stats of the clip metadata
-    (ProfileSpec → functions/stats.py), restricted to the
+    (functions/stats.profile_table), restricted to the
     engine-reproducible stats: approx_distinct (HLL) and the
     approx-percentile quartiles are sketch outputs no other engine
     reproduces bit-for-bit, so they stay pytest-verified
     (tests/test_operators_misc.py) while everything else is
     oracle-checked here."""
-    prof = _clips_meta_result(spark).profile
+    from use_case_real_time_anomaly_detection_spark.functions.stats import (
+        profile_table,
+    )
+
+    _ensure_clips_oracle_files()
+    prof = profile_table(
+        spark.read.parquet(_CLIPS_META), ("dur_ms", "sr_hz", "codec", "transcript")
+    )
     return prof.filter(
         ~F.col("stat").isin("approx_distinct", "q1", "median", "q3")
     )
@@ -1111,7 +1118,7 @@ def _clips_meta_result(spark, seq_cap=None, exclusion_windows=None):
     engine (row-level violations inside them are excused)."""
     from pyspark.sql import functions as F
 
-    from use_case_real_time_anomaly_detection_spark.operators.rules import IqrRule, ProfileSpec
+    from use_case_real_time_anomaly_detection_spark.operators.rules import IqrRule
     from use_case_real_time_anomaly_detection_spark.plans.clips import default_rules
     from use_case_real_time_anomaly_detection_spark.sources.synth import SynthSpec
 
@@ -1129,8 +1136,6 @@ def _clips_meta_result(spark, seq_cap=None, exclusion_windows=None):
         if isinstance(r, IqrRule):
             # exact quantiles so DuckDB's quantile_cont is the same math
             r = IqrRule(column=r.column, multiplier=r.multiplier, exact=True)
-        elif isinstance(r, ProfileSpec):
-            r = ProfileSpec(columns=("dur_ms", "sr_hz", "codec", "transcript"))
         rules.append(r)
     from use_case_real_time_anomaly_detection_spark.operators.engine import ValidationEngine
 

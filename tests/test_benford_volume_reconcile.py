@@ -130,6 +130,14 @@ def test_volume_factor_only_band(spark):
     df = spark.createDataFrame(rows, "partition_key string, clip_id string")
     plan = compile_rules(df, [VolumeRule(max_factor=2.5)])
     assert set(_viol(plan, "volume")) == {"e"}  # 260 > 100 * 2.5
+    # an even partition count interpolates the median like Spark's
+    # percentile(n, 0.5D): (100 + 260) / 2 = 180, so the band is [90, 360]
+    even = df.filter(F.col("partition_key").isin("a", "b", "e")).unionByName(
+        spark.createDataFrame([("f", f"f{i}") for i in range(400)], df.schema)
+    )
+    assert set(_viol(compile_rules(even, [VolumeRule(max_factor=2.0)]), "volume")) == {"f"}
+    # no partitions, no median: no rows
+    assert compile_rules(df.limit(0), [VolumeRule(max_factor=2.5)]).violations.count() == 0
 
 
 def test_volume_constructor_validation():

@@ -137,11 +137,26 @@ def test_unknown_rule_class_raises_before_any_job(spark, frame):
     try:
         with pytest.raises(TypeError, match="unknown rule type: Bogus"):
             compile_rules(frame, [RangeRule("value", 0, 1), Bogus()])
-        # a ProfileSpec is a profiling request, not a rule: the engine
-        # strips it before compiling, and compile_rules has no lowering
-        with pytest.raises(TypeError, match="unknown rule type: ProfileSpec"):
-            compile_rules(frame, [ProfileSpec(columns=("value",))])
+        # an object that is no rule class at all
+        with pytest.raises(TypeError, match="unknown rule type: object"):
+            compile_rules(frame, [object()])
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert sc.statusTracker().getJobIdsForGroup("unknown-rule") == []
+
+
+def test_profile_misdeclarations_raise_before_any_job(spark, frame):
+    with pytest.raises(ValueError, match="histogram_columns entries"):
+        ProfileSpec(histogram_columns=(("value", 1.0, 0.0, 4),))
+    sc = spark.sparkContext
+    sc.setJobGroup("bad-profile", "compile_rules profile checks")
+    try:
+        with pytest.raises(ValueError, match="at most one ProfileSpec"):
+            compile_rules(frame, [ProfileSpec(("value",)), ProfileSpec()])
+        with pytest.raises(ValueError, match=r"columns \['dur_ms'\] not in the table"):
+            compile_rules(frame, [ProfileSpec(("value",), ("dur_ms",))])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("bad-profile") == []

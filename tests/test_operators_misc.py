@@ -11,7 +11,6 @@ from use_case_real_time_anomaly_detection_spark.functions.multimodal import (
 from use_case_real_time_anomaly_detection_spark.functions.stats import profile_table
 from use_case_real_time_anomaly_detection_spark.operators.limit_by import limit_by
 from use_case_real_time_anomaly_detection_spark.operators.rules import (
-    ProfileSpec,
     RangeRule,
     ValueSetRule,
 )
@@ -45,7 +44,7 @@ def test_profile_long_format(spark):
         [("p1", 1, None), ("p1", 3, "x"), ("p2", 5, "y")],
         "partition_key string, v long, s string",
     )
-    prof = profile_table(df, ProfileSpec(columns=("v", "s"))).toPandas()
+    prof = profile_table(df, ("v", "s")).toPandas()
     p1 = prof[(prof.partition_key == "p1")]
     null_rate = p1[(p1["column"] == "s") & (p1.stat == "null_rate")]["value"].iloc[0]
     assert null_rate == pytest.approx(0.5)

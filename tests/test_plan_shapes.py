@@ -163,10 +163,9 @@ def test_clips_plan_single_arrow_pass_no_payload_exchange(spark):
 
 
 def test_clips_profile_is_single_aggregation(spark):
-    """ProfileSpec compiles to one partial+final aggregation over one
+    """profile_table compiles to one partial+final aggregation over one
     scan — N columns never mean N scans."""
     from use_case_real_time_anomaly_detection_spark.functions.stats import profile_table
-    from use_case_real_time_anomaly_detection_spark.operators.rules import ProfileSpec
     from use_case_real_time_anomaly_detection_spark.operators.schema import (
         with_partition_cols,
     )
@@ -178,7 +177,7 @@ def test_clips_profile_is_single_aggregation(spark):
     clips = with_partition_cols(
         generate_clips(spark, SynthSpec(partitions=2, clips_per_partition=50))
     )
-    plan = _physical(profile_table(clips, ProfileSpec(columns=("dur_ms", "sr_hz", "codec"))))
+    plan = _physical(profile_table(clips, ("dur_ms", "sr_hz", "codec")))
     # one agg exchange; the generator's own repartition (REPARTITION_BY_NUM)
     # is not part of the profile plan under test
     assert (

@@ -520,3 +520,78 @@ def test_runner_ref_table_binds_calibration_revisions(spark, tmp_path, capsys):
 
     with _pytest.raises(ValueError, match="calibration_revisions"):
         _run(capsys, base_argv + ["--checkpoint-dir", str(tmp_path / "c3")])
+
+
+def test_runner_profile_state_is_the_validated_partitions_state(
+    spark, tmp_path, capsys
+):
+    """The stored profile_state rows are profile_state() of the frame the
+    pass validated, HLL bytes included: a cold pass writes every
+    partition's row, and a resumed pass rewrites only the partitions it
+    validated (a skipped partition whose data changed keeps its row)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from use_case_real_time_anomaly_detection_spark.functions.stats import (
+        profile_state,
+    )
+    from use_case_real_time_anomaly_detection_spark.operators.rules import (
+        ProfileSpec,
+    )
+    from use_case_real_time_anomaly_detection_spark.operators.schema import (
+        with_partition_cols,
+    )
+    from use_case_real_time_anomaly_detection_spark.plans.clips import (
+        default_rules,
+    )
+    from use_case_real_time_anomaly_detection_spark.sources.synth import (
+        SynthSpec,
+        manifest_pandas,
+        metadata_pandas,
+    )
+
+    spec = SynthSpec(partitions=3, clips_per_partition=60)
+    meta = metadata_pandas(spec).assign(bytes=b"")
+    changed = meta.copy()
+    c000 = changed.partition_key == "c000"
+    changed.loc[c000, "dur_ms"] += 7
+    frames = {
+        "cold": meta[meta.partition_key != "c002"],
+        "warm": changed,
+        "manifest": manifest_pandas(spec),
+    }
+    for name, frame in frames.items():
+        (tmp_path / name).mkdir()
+        pq.write_table(
+            pa.Table.from_pandas(frame, preserve_index=False),
+            str(tmp_path / name / "part-0.parquet"),
+        )
+    (prof,) = [r for r in default_rules() if isinstance(r, ProfileSpec)]
+    kw = dict(
+        numeric_columns=prof.numeric_columns,
+        distinct_columns=prof.distinct_columns,
+        histogram_columns={c: (lo, hi, n) for c, lo, hi, n in prof.histogram_columns},
+    )
+
+    def state(name, parts):
+        df = with_partition_cols(spark.read.parquet(str(tmp_path / name)))
+        return profile_state(df.filter(df.partition_key.isin(*parts)), **kw).collect()
+
+    ckpt = str(tmp_path / "ckpt")
+
+    def stored():
+        return sorted(
+            map(tuple, spark.read.parquet(f"{ckpt}/profile_state").drop("pk").collect())
+        )
+
+    argv = ["--manifest", str(tmp_path / "manifest"), "--checkpoint-dir", ckpt, "--no-audio"]
+    rc, out = _run(capsys, ["--clips", str(tmp_path / "cold"), *argv])
+    assert rc == 0 and out["partitions_validated"] == 2
+    cold = sorted(map(tuple, state("cold", ["c000", "c001"])))
+    assert stored() == cold
+
+    rc, out = _run(capsys, ["--clips", str(tmp_path / "warm"), *argv])
+    assert rc == 0 and out["partitions_validated"] == 1
+    # c000 changed but resume skipped it, so its row is the cold pass's
+    assert stored() == sorted(cold + list(map(tuple, state("warm", ["c002"]))))
+    assert state("warm", ["c000"])[0] != state("cold", ["c000"])[0]

@@ -75,6 +75,7 @@ def test_runner_pass_job_budget_and_summary_without_jobs(
     record_run = CheckpointStore.record_run
     record_profile = CheckpointStore.record_profile
     recorded = []
+    profile_plans = []
 
     def validate(*args, **kwargs):
         sc.setJobGroup("validate-record", "job-budget probe")
@@ -86,6 +87,7 @@ def test_runner_pass_job_budget_and_summary_without_jobs(
         return recorded
 
     def profile(self, states):
+        profile_plans.append(states._jdf.queryExecution().executedPlan().toString())
         record_profile(self, states)
         # the profile-state write is the runner's last step before its
         # summary; every job after it belongs to the summary
@@ -110,6 +112,10 @@ def test_runner_pass_job_budget_and_summary_without_jobs(
     # plan cost 33
     jobs = len(tracker.getJobIdsForGroup("validate-record"))
     assert jobs <= 18, jobs
+    # the profile state rows come out of the stats pass: writing them is
+    # the only job after the lineage append, and it reads no clip file
+    assert len(tracker.getJobIdsForGroup("after-append")) <= 1
+    assert len(profile_plans) == 1 and "Scan parquet" not in profile_plans[0]
     assert tracker.getJobIdsForGroup("runner-summary") == []
 
     out = json.loads(

@@ -26,18 +26,21 @@ from pyspark.sql.types import DoubleType, StructField, StructType
 from ..operators.rules import ProfileSpec
 
 NUMERIC_TYPES = {"int", "bigint", "smallint", "tinyint", "float", "double", "decimal"}
+HLL_RSD = 0.05  # profile_table's approx_count_distinct relative error
+LG_CONFIG_K = 12  # profile_state's HLL sketch size (log2 of its registers)
 
 
 def profile_table(
-    df: DataFrame, spec: ProfileSpec, *, partition_col: str = "partition_key"
+    df: DataFrame, columns: tuple | list, *, partition_col: str = "partition_key"
 ) -> DataFrame:
-    """Per (partition, column) stats, long format.
+    """Per (partition, column) stats of ``columns`` (every column but
+    the partition column when empty), long format.
 
     Returns columns: partition_key, column, stat, value(double) — string
     min/max are profiled via length to stay in one numeric value column.
     """
     dtypes = dict(df.dtypes)
-    cols = list(spec.columns) or [c for c in df.columns if c != partition_col]
+    cols = list(columns) or [c for c in df.columns if c != partition_col]
 
     aggs = [F.count(F.lit(1)).alias("__rows")]
     per_col: list[tuple[str, str]] = []  # (column, stat) in output order
@@ -50,31 +53,28 @@ def profile_table(
         t = dtypes.get(c, "")
         base = t.split("(")[0]
         add(c, "null_count", F.sum(F.col(c).isNull().cast("long")))
-        add(c, "approx_distinct", F.approx_count_distinct(c, spec.hll_rsd).cast("double"))
+        add(c, "approx_distinct", F.approx_count_distinct(c, HLL_RSD).cast("double"))
         if base in NUMERIC_TYPES:
             add(c, "min", F.min(c).cast("double"))
             add(c, "max", F.max(c).cast("double"))
-            if spec.extra_numeric_stats:
-                add(c, "avg", F.avg(c))
-                # explicit sum/sumsq moments, not F.stddev_pop: exact for
-                # integer/quantized columns regardless of partial-agg
-                # order, and a fixed IEEE op sequence the DuckDB oracle
-                # mirrors (Welford streaming moments differ per engine in
-                # the last ulp, which the driver's value hash would catch)
-                cd = F.col(c).cast("double")
-                mean = F.sum(cd) / F.count(c)
-                add(
-                    c,
-                    "stddev_pop",
-                    F.sqrt(
-                        F.greatest(
-                            F.sum(cd * cd) / F.count(c) - mean * mean, F.lit(0.0)
-                        )
-                    ),
-                )
-                add(c, "q1", F.percentile_approx(c, 0.25, 10000).cast("double"))
-                add(c, "median", F.percentile_approx(c, 0.5, 10000).cast("double"))
-                add(c, "q3", F.percentile_approx(c, 0.75, 10000).cast("double"))
+            add(c, "avg", F.avg(c))
+            # explicit sum/sumsq moments, not F.stddev_pop: exact for
+            # integer/quantized columns regardless of partial-agg
+            # order, and a fixed IEEE op sequence the DuckDB oracle
+            # mirrors (Welford streaming moments differ per engine in
+            # the last ulp, which the driver's value hash would catch)
+            cd = F.col(c).cast("double")
+            mean = F.sum(cd) / F.count(c)
+            add(
+                c,
+                "stddev_pop",
+                F.sqrt(
+                    F.greatest(F.sum(cd * cd) / F.count(c) - mean * mean, F.lit(0.0))
+                ),
+            )
+            add(c, "q1", F.percentile_approx(c, 0.25, 10000).cast("double"))
+            add(c, "median", F.percentile_approx(c, 0.5, 10000).cast("double"))
+            add(c, "q3", F.percentile_approx(c, 0.75, 10000).cast("double"))
         elif base == "string":
             add(c, "min_length", F.min(F.length(c)).cast("double"))
             add(c, "max_length", F.max(F.length(c)).cast("double"))
@@ -294,39 +294,25 @@ def drift_scores(
     """Per-partition KS + PSI + W1 of `column` vs a robust consensus
     baseline (the math of :func:`score_drift`).
 
-    The engine's drift math (operators/compiler.py DriftRule), exposed as
-    a standalone operator so any table/axis can be scored and so the
-    DuckDB oracle can verify it SQL-side (__spark_entry__.drift_events):
-    fixed equal-width bins over the frame's own [min, max] (one cheap
-    column-pruned driver agg fixes the edges), then ONE grouped action
-    collects a dense per-bin count array per partition, scored on the
-    driver.
+    The engine's DriftRule stats pass (operators/compiler.
+    _partition_stats) as a standalone operator, so any table/axis can be
+    scored and the DuckDB oracle can verify it SQL-side
+    (__spark_entry__.drift_events): fixed equal-width bins over the
+    frame's own [min, max] (one cheap column-pruned driver agg fixes the
+    edges), then ONE grouped action collects a dense per-bin count array
+    per partition, scored on the driver.
 
     Returns (partition_key, psi, ks, w1) for ALL partitions
-    (thresholding is the caller's policy). NULLs in `column` are
-    excluded. Eager: both actions run before this returns.
+    (thresholding is the caller's policy); an all-NULL column returns no
+    rows with the same schema. NULLs in `column` are excluded. Eager:
+    both actions run before this returns.
     """
-    spark = df.sparkSession
-    key_type = df.schema[partition_col].dataType
-    mm = (
-        df.filter(F.col(column).isNotNull())
-        .agg(F.min(column).alias("lo"), F.max(column).alias("hi"))
-        .collect()[0]
-    )
-    if mm["lo"] is None:
-        # all-NULL column: keep the FULL result schema (incl. w1) so a
-        # DriftRule with any fence set degrades to zero violations
-        # instead of an UNRESOLVED_COLUMN crash downstream
-        return drift_frame(spark, [], key_type)
-    lo, width = drift_bin_edges((mm["lo"], mm["hi"]), bins)
-    hists = (
-        df.groupBy(F.col(partition_col).alias("pk"))
-        .agg(drift_histogram(column, lo, width, bins).alias("h"))
-        .collect()
-    )
-    return drift_frame(
-        spark, score_drift((r["pk"], r["h"], width) for r in hists), key_type
-    )
+    from ..operators.compiler import _partition_stats
+    from ..operators.rules import DriftRule
+
+    rule = DriftRule(column, bins=bins)
+    _, drift, _ = _partition_stats(df, [], [rule], partition_col=partition_col)
+    return drift[column, bins]
 
 
 def categorical_scores(
@@ -389,6 +375,42 @@ def categorical_scores(
 # --- incremental / mergeable profiling --------------------------------------
 
 
+def profile_aggs(spec: ProfileSpec) -> list[Column]:
+    """The aggregates of a profile-state row after its ``rows`` count,
+    in stored column order; compile_rules lowers a ruleset's
+    ProfileSpec into the partition-stats pass with this list."""
+    aggs: list = []
+    for c in spec.numeric_columns:
+        vd = F.col(c).cast("decimal(18,2)")
+        aggs += [
+            F.count(c).alias(f"{c}__nonnull"),
+            F.min(c).cast("double").alias(f"{c}__min"),
+            F.max(c).cast("double").alias(f"{c}__max"),
+            F.sum(vd).cast("decimal(38,2)").alias(f"{c}__sum"),
+            F.sum(vd * vd).cast("decimal(38,4)").alias(f"{c}__sumsq"),
+        ]
+    for c in spec.distinct_columns:
+        aggs.append(
+            F.hll_sketch_agg(F.col(c).cast("string"), F.lit(LG_CONFIG_K)).alias(
+                f"{c}__hll"
+            )
+        )
+    for c, lo, hi, nbins in spec.histogram_columns:
+        width = (float(hi) - float(lo)) / int(nbins)
+        aggs += [
+            # the stored state's type, array<bigint> with nullable
+            # elements: the optimizer drops a plain widening cast
+            # (SimplifyCasts), not a concat with a typed empty array
+            F.concat(
+                drift_histogram(c, float(lo), width, int(nbins)),
+                F.array().cast("array<bigint>"),
+            ).alias(f"{c}__hist"),
+            F.lit(float(lo)).alias(f"{c}__hlo"),
+            F.lit(float(hi)).alias(f"{c}__hhi"),
+        ]
+    return aggs
+
+
 def profile_state(
     df: DataFrame,
     *,
@@ -396,22 +418,20 @@ def profile_state(
     numeric_columns: tuple[str, ...] | list[str] = (),
     distinct_columns: tuple[str, ...] | list[str] = (),
     histogram_columns: dict[str, tuple[float, float, int]] | None = None,
-    lg_config_k: int = 12,
 ) -> DataFrame:
     """One MERGEABLE profile-state row per partition: exact decimal
     moments for numeric columns plus a Datasketches HLL binary per
     distinct-counted column.
 
-    The 100 TB shape this enables: global corpus stats maintained
-    INCREMENTALLY. Each partition's state is computed from one scan of
-    that partition only; `merge_profile_states` rolls the global profile
-    up from the slim state table (O(partitions) rows) — re-profiling
-    after a partition lands or is re-validated costs one partition scan
-    + a rollup that never touches the corpus. This is the profiling
-    analog of the lineage-resume contract (streaming/checkpoint.py): the
-    reference recomputes its stats CTEs per query
-    (tinybird/pipes/z_score.pipe:14-19); at 10^12 rows that recompute is
-    the cost being engineered away.
+    Global corpus stats are maintained INCREMENTALLY: each partition's
+    state comes from that partition's rows only, and
+    `merge_profile_states` rolls the global profile up from the slim
+    state table (O(partitions) rows) without touching the corpus — the
+    profiling analog of the lineage-resume contract
+    (streaming/checkpoint.py), where the reference recomputes its stats
+    CTEs per query (tinybird/pipes/z_score.pipe:14-19). A validation
+    run gets the same rows from its ruleset's ProfileSpec, in the
+    partition-stats pass (:func:`profile_aggs`).
 
     Mergeability per stat — every one is algebraic, no holistic aggregate:
     - rows / nonnull: longs, merge = sum
@@ -434,37 +454,11 @@ def profile_state(
     fixed across runs for states to merge — the same fixed-grid contract
     as drift_scores' bins.
     """
-    histogram_columns = dict(histogram_columns or {})
-    aggs: list = [F.count(F.lit(1)).alias("rows")]
-    for c in numeric_columns:
-        vd = F.col(c).cast("decimal(18,2)")
-        aggs += [
-            F.count(c).alias(f"{c}__nonnull"),
-            F.min(c).cast("double").alias(f"{c}__min"),
-            F.max(c).cast("double").alias(f"{c}__max"),
-            F.sum(vd).cast("decimal(38,2)").alias(f"{c}__sum"),
-            F.sum(vd * vd).cast("decimal(38,4)").alias(f"{c}__sumsq"),
-        ]
-    for c in distinct_columns:
-        aggs.append(
-            F.hll_sketch_agg(F.col(c).cast("string"), F.lit(lg_config_k)).alias(
-                f"{c}__hll"
-            )
-        )
-    for c, (lo, hi, nbins) in histogram_columns.items():
-        width = (float(hi) - float(lo)) / int(nbins)
-        aggs += [
-            # the stored state's type, array<bigint> with nullable
-            # elements: the optimizer drops a plain widening cast
-            # (SimplifyCasts), not a concat with a typed empty array
-            F.concat(
-                drift_histogram(c, float(lo), width, int(nbins)),
-                F.array().cast("array<bigint>"),
-            ).alias(f"{c}__hist"),
-            F.lit(float(lo)).alias(f"{c}__hlo"),
-            F.lit(float(hi)).alias(f"{c}__hhi"),
-        ]
-    return df.groupBy(F.col(partition_col).alias("partition_key")).agg(*aggs)
+    hists = tuple((c, *g) for c, g in (histogram_columns or {}).items())
+    spec = ProfileSpec(tuple(numeric_columns), tuple(distinct_columns), hists)
+    return df.groupBy(F.col(partition_col).alias("partition_key")).agg(
+        F.count(F.lit(1)).alias("rows"), *profile_aggs(spec)
+    )
 
 
 def combine_profile_states(states: DataFrame) -> DataFrame:
@@ -697,8 +691,8 @@ def drift_from_states(states: DataFrame, column: str) -> DataFrame:
     `drift_scores` re-bins the raw column every run; at 10^12 rows that
     is a full-corpus scan per drift check. The checkpointed state table
     (profile_state's `{column}__hist`, maintained per validated
-    partition by every runner invocation) already holds the fixed-grid
-    per-partition histograms, so the drift check collects
+    partition by the ruleset's profile entry) already holds the
+    fixed-grid per-partition histograms, so the drift check collects
     O(partitions x bins) counts from the slim state table and scores
     them through the same driver-side :func:`score_drift` — parity with
     drift_scores over the same grid is test-asserted.

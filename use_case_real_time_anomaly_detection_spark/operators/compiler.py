@@ -10,12 +10,12 @@ at compile time, one collected partition-stats action (_partition_stats):
  └─ ONE groupBy(partition).agg over the column-pruned pre-payload frame:
      row count (rows_checked, volume fences), IQR quartiles, latest
      seq/key (staleness), MAD medians, AggregateRule values, Benford
-     digit counts, reconciliation totals and a dense per-bin count
-     array per drift column; the rows come back as a LocalRelation and
-     drift is scored on the driver (functions/stats.score_drift). Drift
-     bin edges cost one more min/max collect, and each categorical
-     column one collected (partition, value) count
-     (functions/stats.categorical_scores).
+     digit counts, reconciliation totals, a dense per-bin count array
+     per drift column and the ProfileSpec state (CompiledPlan.profile);
+     the rows come back as LocalRelations, and drift and the volume
+     median are computed on the driver. Drift bin edges cost one more
+     min/max collect, and each categorical column one collected
+     (partition, value) count (functions/stats.categorical_scores).
 
 the lazy violations plan:
 scan (column-pruned: only referenced columns are read)
@@ -26,10 +26,11 @@ scan (column-pruned: only referenced columns are read)
  ├─ one Window pass over (partition, seq): each window rule class names
  │   its inputs in _WINDOW_INPUTS; they share one WindowSpec, so Spark
  │   evaluates them in a single Window exec → a single shuffle
- ├─ broadcast joins of per-partition baselines: IQR fences from the
- │   stats rows (≙ reference JOIN stats ON id — tinybird/pipes/iqr.pipe:
- │   49-50), median/MAD and seasonal moments; rules with equal stats keys
- │   share one set of helper columns
+ ├─ broadcast joins of per-partition baselines: IQR fences and MAD
+ │   medians from the stats rows (≙ reference JOIN stats ON id —
+ │   tinybird/pipes/iqr.pipe:49-50; MAD stage 2 reuses that broadcast),
+ │   MADs and seasonal moments; rules with equal stats keys share one
+ │   set of helper columns
  └─ fused violation projection: _ROW_LOWERINGS maps each row-local or
      window rule class to its (detector, cond, observed, note); _flag
      wraps them as WHEN(cond, struct) elements and _exploded's
@@ -85,6 +86,7 @@ from .rules import (
     PatternRule,
     PayloadSizeRule,
     PredicateRule,
+    ProfileSpec,
     RefMatchRule,
     RangeRule,
     RateOfChangeRule,
@@ -168,6 +170,8 @@ class CompiledPlan:
     # disable them at production row counts (1 <= rate * 10^6), so the
     # verdict layer keeps exact any-violation-fails semantics for these.
     partition_level: list = field(default_factory=list)
+    # the ProfileSpec's state rows (functions/stats.profile_state layout)
+    profile: DataFrame | None = None
 
 
 def expected_payload_bytes(
@@ -811,7 +815,7 @@ _WINDOW_INPUTS = {
 _TABLE_LEVEL = {
     UniqueRule, FdRule, AggregateRule, CompletenessRule, DriftRule,
     CategoricalDriftRule, EntropyRule, BenfordRule, ReconciliationRule,
-    VolumeRule,
+    VolumeRule, ProfileSpec,
 }
 
 _SEQUENTIAL = (CalibratedRangeRule, *_WINDOW_INPUTS, CusumRule, EwmaRule, SeasonalRule)
@@ -867,6 +871,14 @@ def compile_rules(
 
     if seq_col is None and (of(*_SEQUENTIAL) or exclusion_windows is not None):
         raise ValueError("sequence rules and exclusion_windows need seq_col")
+    profiles = of(ProfileSpec)
+    if len(profiles) > 1:
+        raise ValueError(f"at most one ProfileSpec per ruleset, got {len(profiles)}")
+    for p in profiles:
+        cols = {*p.numeric_columns, *p.distinct_columns}
+        missing = cols.union(h[0] for h in p.histogram_columns) - set(df.columns)
+        if missing:
+            raise ValueError(f"ProfileSpec: columns {sorted(missing)} not in the table")
     pos: dict[int, int] = {}
     for cls in {type(r) for r in rules}:
         for i, r in enumerate(of(cls)):
@@ -1094,8 +1106,8 @@ def compile_rules(
         base = windowed(base, ewma_cols, frame_rows, seq_col, key_col)
 
     # ---- the partition-stats pass: ONE grouped action over the pre-payload
-    # frame serves rows_checked and every per-partition aggregate a rule
-    # fences or joins back (see _partition_stats) --------------------------
+    # frame serves rows_checked, every per-partition aggregate a rule
+    # fences or joins back and the profile state (see _partition_stats) ---
     quartiles = {tags[_stat_key(r)]: r for r in of(IqrRule)}
     medians = {tags[_stat_key(r)]: r for r in of(MadRule)}
     stats_aggs = [
@@ -1122,9 +1134,20 @@ def compile_rules(
         _recon_total(r, r.column).alias(f"__rec_{i}")
         for i, r in enumerate(of(ReconciliationRule))
     ]
-    part_stats, drift = _partition_stats(
+    if profiles:
+        from ..functions.stats import profile_aggs
+
+        stats_aggs += profile_aggs(profiles[0])
+    part_stats, drift, counts = _partition_stats(
         df, stats_aggs, of(DriftRule), partition_col=partition_col
     )
+    profile = None
+    if profiles:  # the state rows: every other stats column is "__"-named
+        profile = part_stats.select(
+            F.col(partition_col).alias("partition_key"),
+            F.col("__rows").alias("rows"),
+            *[c for c in part_stats.columns[1:] if not c.startswith("__")],
+        )
 
     # ---- per-partition IQR fences and medians: a broadcast join of the
     # stats rows ----------------------------------------------------------
@@ -1143,14 +1166,19 @@ def compile_rules(
         # MAD is doubly holistic: the medians come from the stats pass,
         # the median deviations need the rows again — ONE aggregate for
         # every MAD key, reading slim columns off the pre-audio frame
-        # (column pruning keeps payloads out), ~1 row per partition.
-        meds = part_stats.select(partition_col, *[f"__med_{t}" for t in medians])
+        # (column pruning keeps payloads out), ~1 row per partition. Grouped
+        # by every fences column, it leaves AQE one fences broadcast to reuse.
         dev = {
             t: F.abs(F.col(r.column).cast("double") - F.col(f"__med_{t}"))
             for t, r in medians.items()
         }
-        mads = df.join(F.broadcast(meds), partition_col).groupBy(partition_col).agg(
-            *[_quantile(r, dev[t], 0.5).alias(f"__mad_{t}") for t, r in medians.items()]
+        mads = (
+            df.join(F.broadcast(fences), partition_col)
+            .groupBy(*fences.columns)
+            .agg(
+                *[_quantile(r, dev[t], 0.5).alias(f"__mad_{t}") for t, r in medians.items()]
+            )
+            .select(partition_col, *[f"__mad_{t}" for t in medians])
         )
         base = base.join(F.broadcast(mads), partition_col, "left")
 
@@ -1498,20 +1526,16 @@ def compile_rules(
         F.col("__rows").alias("rows_checked"),
     )
 
-    # ---- volume fences over the shared per-partition count frame ----------
+    # ---- volume fences over the shared per-partition count frame, around
+    # the median count (taken on the driver from the collected counts) ---
     vol_rules = of(VolumeRule)
     if vol_rules:
-        vol_counts = counts_frame.select(
-            "partition_key", F.col("rows_checked").alias("n")
-        )
-        if any(r.max_factor is not None for r in vol_rules):
-            med = vol_counts.agg(
-                F.expr("percentile(n, 0.5D)").alias("median_n")
-            )
-            vol_counts = vol_counts.crossJoin(F.broadcast(med))
-        n = F.col("n")
+        from ..functions.stats import _median
+
+        med = F.lit(float(_median(counts)) if counts else None).cast("double")
+        n = F.col("rows_checked")
         for r in vol_rules:
-            f_, med = F.lit(float(r.max_factor or 1)), F.col("median_n")
+            f_ = F.lit(float(r.max_factor or 1))
             off = (n < med / f_) | (n > med * f_)
             cond, bits = _fence(
                 [(n, operator.lt, r.min_rows, "min_rows"), (n, operator.gt, r.max_rows, "max_rows")],
@@ -1519,7 +1543,7 @@ def compile_rules(
                 extra=[(off, f"max_factor:{r.max_factor:g}")] if r.max_factor else (),
             )
             emit(
-                vol_counts.filter(cond), r.detector,
+                counts_frame.filter(cond), r.detector,
                 F.concat(F.lit("rows:"), n.cast("string")), " ".join(bits),
             )
 
@@ -1543,6 +1567,7 @@ def compile_rules(
         rows_checked=rows_checked,
         detectors=list(dict.fromkeys(detectors)),
         partition_level=list(dict.fromkeys(partition_level)),
+        profile=profile,
     )
 
 
@@ -1612,21 +1637,23 @@ def _recon_total(r: ReconciliationRule, column: str) -> Column:
 
 def _partition_stats(
     df: DataFrame, aggs: list, drift_rules: list, *, partition_col: str
-) -> tuple[DataFrame, dict]:
+) -> tuple[DataFrame, dict, list]:
     """The per-partition aggregates of the rule set in ONE collected
     ``df.groupBy(partition_col).agg(...)``.
 
-    Returns ``(stats, drift)``. ``stats`` holds one row per partition,
-    planned as a LocalRelation (no rescan when joined or filtered
-    later): ``__rows`` (rows_checked, VolumeRule), then the named
-    ``aggs`` compile_rules asks for — ``__q1_{tag}``/``__q3_{tag}`` (IQR
-    fences), ``__last_seq``/``__last_key`` (staleness), ``__med_{tag}``
-    (MAD stage 1), ``__agg_{i}`` (AggregateRule fences),
-    ``__ben{i}_{d}``/``__ben{i}_n`` (Benford digit counts) and
-    ``__rec_{i}`` (the table side of a reconciliation). ``drift`` maps
-    each of ``drift_rules``' (column, bins) to its (partition_key, psi,
-    ks, w1) frame, scored on the driver (functions/stats.score_drift)
-    from a dense per-bin count array the same pass collects.
+    Returns ``(stats, drift, counts)``. ``stats`` holds one row
+    per partition, planned as a LocalRelation (no rescan when joined or
+    filtered later): ``__rows`` (rows_checked, VolumeRule), then the
+    named ``aggs`` compile_rules asks for — ``__q1_{tag}``/``__q3_{tag}``
+    (IQR fences), ``__last_seq``/``__last_key`` (staleness),
+    ``__med_{tag}`` (MAD stage 1), ``__agg_{i}`` (AggregateRule fences),
+    ``__ben{i}_{d}``/``__ben{i}_n`` (Benford digit counts),
+    ``__rec_{i}`` (the table side of a reconciliation) and the
+    ProfileSpec state (``{c}__{stat}``, functions/stats.profile_aggs).
+    ``drift`` maps each of ``drift_rules``' (column, bins) to its
+    (partition_key, psi, ks, w1) frame, scored on the driver
+    (functions/stats.score_drift) from a dense per-bin count array the
+    same pass collects; ``counts`` is ``__rows`` on the driver.
 
     Reads ``df``, the pre-payload frame: the payload Arrow pass is a
     column-pruning barrier, so an aggregate hanging off the decoded frame
@@ -1677,4 +1704,4 @@ def _partition_stats(
             name, width = grids[grid]
             hists = [(k, h, width) for k, h in zip(keys, table.column(name).to_pylist())]
         scores[grid] = drift_frame(spark, score_drift(hists), key_type)
-    return stats, scores
+    return stats, scores, table.column("__rows").to_pylist()

@@ -22,7 +22,6 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from ..session import local_frame
 from .compiler import compile_rules
-from .rules import ProfileSpec
 
 # Per-partition pass/fail contract (FIXTURES.md §4).
 VERDICT_COLUMNS = [
@@ -40,7 +39,7 @@ VERDICT_COLUMNS = [
 class RunResult:
     violations: DataFrame  # deduped, VIOLATION_COLUMNS
     verdicts: DataFrame  # VERDICT_COLUMNS
-    profile: DataFrame | None  # per (partition, column) stats, if requested
+    profile: DataFrame | None  # the ProfileSpec's state rows, if declared
     run_id: str
     # detectors that emit O(1) rows per partition (compiled plan's
     # partition_level): exact verdicts, and never a quarantined clip
@@ -89,7 +88,8 @@ class ValidationEngine:
         partition-stats action (plus, with a DriftRule, the min/max
         collect that fixes its bin edges from ``df`` itself); the
         returned violations and verdicts stay lazy and trigger the scan
-        on action.
+        on action. A ProfileSpec in ``rules`` rides the stats action,
+        and its state rows come back as ``profile``.
 
         ``skip_partitions`` — one column ``partition_key`` of already-
         completed partitions (the resume path: anti-join, ≙ the
@@ -160,7 +160,7 @@ class ValidationEngine:
 
         plan = compile_rules(
             df,
-            [r for r in rules if not isinstance(r, ProfileSpec)],
+            rules,
             key_col=self.key_col,
             partition_col=self.partition_col,
             seq_col=self.seq_col,
@@ -222,17 +222,8 @@ class ValidationEngine:
                 max_violations_per_group,
             )
 
-        profile = None
-        specs = [r for r in rules if isinstance(r, ProfileSpec)]
-        if specs:
-            from ..functions.stats import profile_table
-
-            profile = profile_table(
-                df, specs[0], partition_col=self.partition_col
-            )
-
         return RunResult(
-            violations=violations, verdicts=verdicts, profile=profile,
+            violations=violations, verdicts=verdicts, profile=plan.profile,
             run_id=run_id, partition_level=tuple(plan.partition_level),
             cached=cached,
         )

@@ -1197,14 +1197,20 @@ class SpeechRateRule(Rule):
 
 @dataclass(frozen=True)
 class ProfileSpec:
-    """Column-stat profiling per partition: count, null rate, min/max,
-    approx-distinct (HyperLogLog++ via approx_count_distinct).
-
-    Generalizes the reference's stats CTEs (avg/stddevPop/quantiles —
-    tinybird/pipes/z_score.pipe:14-19, iqr.pipe:26-35) into a reusable
-    per-partition profile (north rule: column stats).
+    """The mergeable per-partition profile state a ruleset maintains
+    (functions/stats.profile_state): exact decimal moments of
+    ``numeric_columns``, an HLL sketch per ``distinct_columns`` entry and
+    a fixed-grid histogram per ``histogram_columns`` (column, lo, hi,
+    bins) entry; grids must stay fixed across runs for states to merge.
+    At most one per ruleset: compile_rules lowers it into the
+    partition-stats pass and returns the rows as ``RunResult.profile``.
     """
 
-    columns: tuple = ()
-    hll_rsd: float = 0.05
-    extra_numeric_stats: bool = True  # avg, stddev_pop, quartiles
+    numeric_columns: tuple = ()
+    distinct_columns: tuple = ()
+    histogram_columns: tuple = ()
+
+    def __post_init__(self) -> None:
+        if any(len(h) != 4 or not h[1] < h[2] or h[3] < 1 for h in self.histogram_columns):
+            raise ValueError("ProfileSpec: histogram_columns entries are (column, "
+                             f"lo, hi > lo, bins >= 1), got {self.histogram_columns!r}")

@@ -53,7 +53,13 @@ def default_rules(*, with_audio: bool = True, seed: int = 42) -> list:
         TranscriptRule(),
         DriftRule("dur_ms", bins=20, detector="drift-dur_ms"),
         DriftRule("sr_hz", bins=20, detector="drift-sr_hz"),
-        ProfileSpec(columns=("dur_ms", "sr_hz", "codec", "transcript", "bytes")),
+        # a grid fixed across runs (merge contract): 2x the RangeRule
+        # bound, so out-of-range clips land in real bins; ≤ 100 ms error
+        ProfileSpec(
+            numeric_columns=("dur_ms", "sr_hz"),
+            distinct_columns=("codec", "clip_id"),
+            histogram_columns=(("dur_ms", 0.0, 4000.0, 40),),
+        ),
     ]
     if with_audio:
         rules.insert(4, AudioDecodeRule(min_snr_db=30.0, ref_seed=seed))

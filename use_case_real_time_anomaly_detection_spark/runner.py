@@ -25,7 +25,9 @@ The job:
      --no-audio),
   4. writes violations (dynamic-partition-overwrite → idempotent) and
      appends lineage/metrics rows,
-  5. prints one JSON line: rows validated, violations, per-detector
+  5. overwrites the validated partitions' profile-state rows, which
+     the stats pass computed, when the ruleset declares a profile,
+  6. prints one JSON line: rows validated, violations, per-detector
      counts, wall seconds, clips/sec.
 
 ≙ the reference's scheduled copy-pipe run (SURVEY.md §3.2): detector
@@ -586,40 +588,10 @@ def main(argv: list[str] | None = None) -> int:
                 validated_keys,
             )
 
-    # maintain the mergeable profile-state table alongside lineage: only
-    # the partitions this run actually validated get their state row
-    # refreshed (same incremental semantics as resume) — the global
-    # profile then rolls up from the slim state table with no corpus IO.
-    # bytes is deliberately NOT profiled here: the state scan stays
-    # column-pruned to the slim metadata columns.
-    if args.sample is None:
-        from .functions.stats import profile_state
-
-        keyed = with_partition_cols(clips, key_col=args.key_col)
-        validated = (
-            keyed.join(F.broadcast(skip), "partition_key", "left_anti")
-            if skip is not None
-            else keyed
-        )
-        # profile only the columns the table actually has: a ruleset
-        # document's declared schema may legitimately narrow the clip
-        # contract (metadata-only tables), and the state pass must not
-        # crash the run over an absent default column
-        have = set(validated.columns)
-        store.record_profile(
-            profile_state(
-                validated,
-                partition_col="partition_key",
-                numeric_columns=[c for c in ("dur_ms", "sr_hz") if c in have],
-                distinct_columns=[c for c in ("codec", "clip_id") if c in have],
-                # fixed across runs (merge contract): 2x the RangeRule
-                # upper bound so out-of-range clips land in real bins,
-                # 40 bins → quantile error ≤ 100 ms
-                histogram_columns={
-                    c: (0.0, 4000.0, 40) for c in ("dur_ms",) if c in have
-                },
-            )
-        )
+    # the ruleset's profile entry: the stats pass's state rows of the
+    # partitions this run validated replace theirs (resume semantics)
+    if args.sample is None and result.profile is not None:
+        store.record_profile(result.profile)
 
     compaction = None
     if args.compact:

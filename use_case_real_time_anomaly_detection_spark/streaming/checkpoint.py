@@ -150,9 +150,10 @@ class CheckpointStore:
 
     def record_profile(self, states: DataFrame) -> None:
         """Persist per-partition MERGEABLE profile states
-        (functions/stats.profile_state): exact decimal moments + HLL
-        binaries. Partition-overwritten like violations, so re-profiling
-        a partition (or re-running one after a failure) is idempotent —
+        (functions/stats.profile_state layout; the runner passes
+        RunResult.profile): exact decimal moments + HLL binaries.
+        Partition-overwritten like violations, so re-profiling a
+        partition (or re-running one after a failure) is idempotent —
         the global profile then rolls up from this slim table alone
         (`merged_profile`), never rescanning validated partitions."""
         self.catalog.overwrite_partitions(
@@ -279,8 +280,8 @@ class CheckpointStore:
 
     def drift(self, column: str = "dur_ms") -> DataFrame:
         """Per-partition KS/PSI drift computed from the STORED state
-        histograms (functions/stats.drift_from_states): after any runner
-        invocation, checking the whole corpus for drift costs
+        histograms (functions/stats.drift_from_states): after a runner
+        pass whose ruleset declares a profile, checking the corpus for drift costs
         O(partitions x bins) arithmetic — zero corpus IO. Returns
         (partition_key, psi, ks); thresholding is caller policy."""
         from ..functions.stats import drift_from_states
